@@ -214,11 +214,12 @@ def q_bm25_phrase(spark, sf_dir):
 def q_bm25_grouped(spark, sf_dir):
     """Solr result grouping (group=true&group.field=lang): top-scoring doc
     per group, groups ordered by head score."""
-    from solr_sematic_importer_spark.operators.score import bm25_grouped_topk
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
     groups = _docs(spark, sf_dir).select("doc_id", F.col("lang").alias("grp"))
-    top = bm25_grouped_topk(idx, Q_OR, groups, k=10, quantize=False)
+    top = select(idx, Q_OR, fields=groups, collapse_field="grp", rows=10,
+                 quantize=False).docs
     return top.select("grp", "doc_id", F.round("score", 4).alias("score"))
 
 
@@ -226,15 +227,13 @@ def q_cursor_page(spark, sf_dir):
     """Solr cursorMark deep paging: page 2 fetched via the keyset cursor
     (last row of page 1), NOT offset — page N costs page-1 work at scale.
     Must equal the offset-10 slice value-for-value."""
-    from solr_sematic_importer_spark.operators.score import (
-        bm25_topk,
-        bm25_topk_cursor,
-    )
+    from solr_sematic_importer_spark.operators.score import bm25_topk
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
     page1 = bm25_topk(idx, Q_OR, k=10, quantize=False).select("doc_id", "score").collect()
     cur = (float(page1[-1]["score"]), int(page1[-1]["doc_id"]))
-    page2 = bm25_topk_cursor(idx, Q_OR, k=10, cursor=cur, quantize=False)
+    page2 = select(idx, Q_OR, rows=10, cursor_mark=cur, quantize=False).docs
     return page2.select("doc_id", F.round("score", 4).alias("score"))
 
 
@@ -250,13 +249,12 @@ def q_spellcheck(spark, sf_dir):
 def q_sort_by_field(spark, sf_dir):
     """Solr sort=field asc: the match set is the query's, the order is a
     stored field's."""
-    from solr_sematic_importer_spark.operators.score import bm25_sorted_by_field
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
     docs = _docs(spark, sf_dir).select("doc_id", "source")
-    top = bm25_sorted_by_field(
-        idx, Q_OR, docs, "source", ascending=True, k=10, quantize=False
-    )
+    top = select(idx, Q_OR, fields=docs, sort_field="source",
+                 sort_ascending=True, rows=10, quantize=False).docs
     return top.select("doc_id", "source", F.round("score", 4).alias("score"))
 
 
@@ -373,13 +371,13 @@ def q_facet_lang(spark, sf_dir):
 def q_facet_on_query(spark, sf_dir):
     """Solr facet semantics proper (q=...&facet.field=lang): counts over
     the QUERY'S match set, not the corpus."""
-    from solr_sematic_importer_spark.operators.score import facet_on_query
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
-    return facet_on_query(
-        idx, Q_OR, _docs(spark, sf_dir).select("doc_id", "lang"), "lang",
-        quantize=False,
-    )
+    r = select(idx, Q_OR, fields=_docs(spark, sf_dir).select("doc_id", "lang"),
+               facet_fields=("lang",), rows=0, quantize=False)
+    r.release()  # single returned frame: don't leak the per-request cache
+    return r.facets["lang"]
 
 
 def q_facet_pivot(spark, sf_dir):
@@ -1252,43 +1250,40 @@ def q_select_facet_range_pivot(spark, sf_dir):
 def q_bm25_boost_function(spark, sf_dir):
     """edismax boost= multiplicative function query: final =
     bm25 * recip(n_chars, 0.001, 1, 1) — shorter docs float up."""
-    from solr_sematic_importer_spark.operators.function_query import (
-        bm25_boosted_topk,
-        recip,
-    )
+    from solr_sematic_importer_spark.operators.function_query import recip
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
     fields = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    top = bm25_boosted_topk(
-        idx, Q_OR, fields, recip(F.col("n_chars"), 0.001, 1.0, 1.0),
-        k=10, quantize=False,
-    )
+    top = select(
+        idx, Q_OR, fields=fields, boost=recip(F.col("n_chars"), 0.001, 1.0, 1.0),
+        rows=10, quantize=False,
+    ).docs
     return top.select("doc_id", F.round("score", 4).alias("score"))
 
 
 def q_rerank_query(spark, sf_dir):
     """rq={!rerank reRankQuery='dup' reRankDocs=30 reRankWeight=2}: only
     the main query's top-30 get the additive rerank-score adjustment."""
-    from solr_sematic_importer_spark.operators.function_query import rerank_topk
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
-    top = rerank_topk(
-        idx, Q_OR, Q_RARE, rerank_docs=30, rerank_weight=2.0, k=10,
-        quantize=False,
-    )
+    top = select(
+        idx, Q_OR, rerank_query=Q_RARE, rerank_docs=30, rerank_weight=2.0,
+        rows=10, quantize=False,
+    ).docs
     return top.select("doc_id", F.round("score", 4).alias("score"))
 
 
 def q_collapse_field(spark, sf_dir):
     """fq={!collapse field=source}: top-scoring doc per source value,
     survivors ranked — a flat list, unlike result grouping's groups."""
-    from solr_sematic_importer_spark.operators.function_query import (
-        bm25_collapse_topk,
-    )
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
     fields = _docs(spark, sf_dir).select("doc_id", "source")
-    top = bm25_collapse_topk(idx, Q_OR, fields, "source", k=10, quantize=False)
+    top = select(idx, Q_OR, fields=fields, collapse_field="source", rows=10,
+                 quantize=False).docs
     return top.select(
         "doc_id", "source", F.round("score", 4).alias("score")
     )
@@ -1297,24 +1292,20 @@ def q_collapse_field(spark, sf_dir):
 def q_json_facet_stats(spark, sf_dir):
     """JSON Facet API terms facet with nested stats over the query match
     set: per-lang bucket count + avg(n_chars) + sum(dl)."""
-    from solr_sematic_importer_spark.operators.score import json_facet_stats
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
     fields = _docs(spark, sf_dir).select("doc_id", "lang", "n_chars").join(
         idx.doc_stats.select("doc_id", "dl"), "doc_id"
     )
-    return json_facet_stats(
-        idx,
-        Q_OR,
-        fields,
-        "lang",
-        aggs=[
-            ("avg_len", lambda c: F.round(F.avg(c("n_chars")), 4)),
-            ("sum_dl", lambda c: F.sum(c("dl"))),
-        ],
-        limit=10,
-        quantize=False,
-    )
+    aggs = [
+        ("avg_len", lambda c: F.round(F.avg(c("n_chars")), 4)),
+        ("sum_dl", lambda c: F.sum(c("dl"))),
+    ]
+    r = select(idx, Q_OR, fields=fields, json_facet=("lang", aggs), rows=0,
+               quantize=False)
+    r.release()  # single returned frame: don't leak the per-request cache
+    return r.facets["json:lang"].limit(10)
 
 
 TV_DOC_IDS = [3, 7, 11]
@@ -1347,12 +1338,10 @@ def q_debug_explain(spark, sf_dir):
 def q_elevated_query(spark, sf_dir):
     """QueryElevationComponent: editorial docs pinned first in configured
     order (forceElevation), organic ranking follows minus those docs."""
-    from solr_sematic_importer_spark.operators.function_query import (
-        elevated_topk,
-    )
+    from solr_sematic_importer_spark.operators.select import select
 
     idx = _doc_index(spark, sf_dir)
-    top = elevated_topk(idx, Q_OR, ELEVATE_IDS, k=10, quantize=False)
+    top = select(idx, Q_OR, elevate_ids=ELEVATE_IDS, rows=10, quantize=False).docs
     return top.select(
         "doc_id", F.round("score", 4).alias("score"), "elevated", "rank"
     )

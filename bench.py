@@ -244,7 +244,7 @@ def main() -> None:
     pos.unpersist()  # positions only feed the phrase query above
 
     # --- round-3 query surfaces (same documents index, request-shaped) -----
-    from solr_sematic_importer_spark.operators.function_query import rerank_topk
+    from solr_sematic_importer_spark.operators.select import select as select_rq
 
     timed(
         "bm25_min_should_match",
@@ -253,14 +253,14 @@ def main() -> None:
     )
     timed(
         "rerank_query",
-        lambda: rerank_topk(didx, "merge sort window", "dup", rerank_docs=30,
-                            rerank_weight=2.0, k=10, quantize=False).collect(),
+        lambda: select_rq(didx, "merge sort window", rerank_query="dup",
+                          rerank_docs=30, rerank_weight=2.0, rows=10,
+                          quantize=False).docs.collect(),
     )
 
     # --- round-4 surfaces: blended fuzzy + the one-call /select front door --
     from solr_sematic_importer_spark.operators.function_query import recip
     from solr_sematic_importer_spark.operators.score import bm25_fuzzy_topk
-    from solr_sematic_importer_spark.operators.select import select as select_rq
 
     timed(
         "fuzzy_query",

@@ -19,7 +19,8 @@ index:
 Scale shape: every leaf is the corresponding single-clause plan (pushed
 term predicates, broadcast weight tables); the boolean combine is ONE
 union + hash aggregate on doc_id plus one anti-join per prohibited
-clause.
+clause. The multi-field executor (``multifield.fielded_query_topk``)
+runs this same combine over per-field leaves.
 """
 
 from __future__ import annotations
@@ -30,7 +31,15 @@ from ..functions.analyzer import analyze_with_positions
 from ..functions.queryparser import MUST, MUST_NOT, SHOULD, Clause, parse_query
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
 from .build import InvertedIndex, term_dfs
-from .score import analyze_query
+from .phrase import phrase_scores
+from .score import (
+    analyze_query,
+    bm25_partial,
+    constant_scores,
+    fuzzy_scores,
+    sorted_fold,
+    wildcard_to_regex,
+)
 
 # Sentinel: the clause ANALYZED TO NOTHING (e.g. a lone stopword under
 # text_en) and must vanish from the query — Lucene's classic parser drops
@@ -52,27 +61,30 @@ def boolean_query_topk(
     quantize: bool = True,
 ) -> DataFrame:
     """Parse and execute a Lucene-syntax query; top-k (doc_id, score)."""
-    spark = index.postings_flat.sparkSession
-    out_schema = "doc_id long, score double"
-    clauses = parse_query(q)
-    ev = _Evaluator(index, positions, k1, b, quantize)
-    scored = ev.combine(clauses, top_level=True)
-    if scored is None or scored is DROPPED_CLAUSE:
-        return spark.createDataFrame([], out_schema)
-    if index.deletes is not None:
-        scored = scored.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return (
-        scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _Evaluator(index, k1, b, quantize, positions).topk(parse_query(q), k)
+
+
+def _range_pred(c: Clause):
+    """TermRangeQuery: the vocab slice between the bounds (lexicographic,
+    like Lucene's BytesRef order on the term dictionary)."""
+    term = F.col("term")
+    pred = F.lit(True)
+    if c.lo is not None:
+        pred = pred & (term >= c.lo if c.lo_inc else term > c.lo)
+    if c.hi is not None:
+        pred = pred & (term <= c.hi if c.hi_inc else term < c.hi)
+    return pred
 
 
 class _Evaluator:
-    def __init__(self, index, positions, k1, b, quantize):
+    """The ONE BooleanQuery combine. Leaves come from the index type: this
+    class scores single-field leaves; ``multifield._FieldEvaluator``
+    overrides :meth:`leaf_scores` with per-field ones and shares the rest."""
+
+    def __init__(self, index, k1, b, quantize, positions=None):
         self.index = index
         self.positions = positions
-        self.k1, self.b = k1, b
+        self.k1, self.b, self.quantize = k1, b, quantize
         self.dl_col = "dl_quant" if quantize else "dl"
         self._next_cid = 0
 
@@ -80,31 +92,29 @@ class _Evaluator:
         self._next_cid += 1
         return self._next_cid
 
-    def _df_of(self, terms: list[str]) -> dict[str, int]:
-        # index-level memo shared with every other scorer on this handle
-        return term_dfs(self.index, terms)
-
-    def _sat(self, tf_col, w: float):
-        return (
-            F.lit(w)
-            * tf_col
-            / (
-                tf_col
-                + F.lit(self.k1)
-                * (
-                    F.lit(1.0 - self.b)
-                    + F.lit(self.b) * F.col(self.dl_col) / F.lit(self.index.avgdl)
-                )
+    def topk(self, clauses: list[Clause], k: int) -> DataFrame:
+        scored = self.combine(clauses, top_level=True)
+        if scored is None or scored is DROPPED_CLAUSE:
+            return self.index.doc_stats.sparkSession.createDataFrame(
+                [], "doc_id long, score double"
             )
+        deletes = getattr(self.index, "deletes", None)  # multi-field: none
+        if deletes is not None:
+            scored = scored.join(deletes.select("doc_id"), "doc_id", "left_anti")
+        return (
+            scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+            .limit(k)
+            .select("doc_id", "score")
         )
 
     # ---- leaf scorers: DataFrame (doc_id, s) or None when unmatchable ----
 
-    def term_scores(self, text: str, boost: float):
+    def _term(self, text: str, boost: float):
         terms = analyze_query(text, self.index.profile)
         if not terms:
             return DROPPED_CLAUSE  # analyzed away (stopword) — not "df=0"
-        dfs = {t: d for t, d in self._df_of(terms).items() if d > 0}
+        # index-level df memo shared with every other scorer on this handle
+        dfs = {t: d for t, d in term_dfs(self.index, terms).items() if d > 0}
         if not dfs:
             return None
         # a single input word analyzing to several tokens behaves as a
@@ -115,18 +125,14 @@ class _Evaluator:
         wdf = spark.createDataFrame(weights, "term string, w double")
         cand = self.index.flat_terms([t for t, _ in weights])
         scored = cand.join(F.broadcast(wdf), "term").select(
-            "doc_id", "term", self._sat(F.col("tf"), 1.0).alias("part"),
-            F.col("w"),
-        ).select("doc_id", "term", (F.col("w") * F.col("part")).alias("s"))
-        return scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("s")
+            "doc_id", "term",
+            bm25_partial(
+                F.col("w"), F.col("tf"), self.dl_col, self.index.avgdl, self.k1, self.b
+            ).alias("s"),
         )
+        return scored.groupBy("doc_id").agg(sorted_fold("term").alias("s"))
 
-    def phrase_scores(self, text: str, boost: float, slop: int = 0):
+    def _phrase(self, text: str, boost: float, slop: int):
         terms, poss = analyze_with_positions(text, self.index.profile)
         if not terms:
             # whole phrase analyzed away — drops before the positions
@@ -137,111 +143,45 @@ class _Evaluator:
                 "phrase clause requires a positions table "
                 "(operators.phrase.build_positions)"
             )
-        from .phrase import phrase_match_counts
-        dfs = self._df_of(sorted(set(terms)))
-        if any(dfs.get(t, 0) == 0 for t in terms):
-            return None
-        gaps = [p - poss[0] for p in poss]
-        w = boost * sum(idf(dfs[t], self.index.n_docs) for t in terms)
-        hits = phrase_match_counts(self.positions, terms, gaps, slop=slop)
-        return hits.join(
-            self.index.doc_stats.select("doc_id", self.dl_col), "doc_id"
-        ).select("doc_id", self._sat(F.col("tfp"), w).alias("s"))
-
-    def fuzzy_scores(self, word: str, distance: int, boost: float) -> DataFrame | None:
-        """FuzzyQuery under Lucene's blended-freq top-terms rewrite (see
-        ``score.bm25_fuzzy_topk``): capped expansion set, df blended to
-        the max over members (one shared idf), each member a SHOULD
-        TermQuery boosted by its edit-distance similarity."""
-        from .score import fuzzy_expand_terms
-
-        members = fuzzy_expand_terms(self.index, word, distance)
-        if not members:
-            return None
-        w = boost * idf(max(df for _, df, _ in members), self.index.n_docs)
-        spark = self.index.postings_flat.sparkSession
-        bdf = spark.createDataFrame(
-            [(t, bst) for t, _, bst in members], "term string, mboost double"
+        return phrase_scores(
+            self.index, self.positions, terms, poss, boost, slop,
+            self.k1, self.b, self.quantize,
         )
-        scored = (
-            self.index.flat_terms([t for t, _, _ in members])
-            .join(F.broadcast(bdf), "term")
-            .select(
-                "doc_id", "term",
-                (F.col("mboost") * self._sat(F.col("tf"), w)).alias("s"),
+
+    def leaf_scores(self, c: Clause) -> DataFrame | None:
+        if c.kind == "term":
+            return self._term(c.text, c.boost)
+        if c.kind == "phrase":
+            return self._phrase(c.text, c.boost, c.slop)
+        if c.kind == "prefix":
+            return constant_scores(self.index, F.col("term").startswith(c.text), c.boost)
+        if c.kind == "fuzzy":
+            # Lucene's blended-freq top-terms rewrite (score.fuzzy_scores)
+            return fuzzy_scores(
+                self.index, c.text, c.distance, c.boost,
+                self.k1, self.b, self.quantize,
             )
-        )
-        return scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("s")
-        )
-
-    def wildcard_scores(self, pattern: str, boost: float) -> DataFrame | None:
-        from .score import wildcard_to_regex
-
-        matching = self.index.term_stats.filter(
-            F.col("term").rlike(wildcard_to_regex(pattern))
-        ).select("term")
-        return self._constant_docs(matching, boost)
-
-    def prefix_scores(self, prefix: str, boost: float) -> DataFrame | None:
-        matching = self.index.term_stats.filter(
-            F.col("term").startswith(prefix)
-        ).select("term")
-        return self._constant_docs(matching, boost)
-
-    def range_scores(self, c: Clause) -> DataFrame | None:
-        """TermRangeQuery: vocab slice between the bounds (lexicographic,
-        like Lucene's BytesRef order on the term dictionary),
-        constant-score rewrite."""
-        matching = self.index.term_stats
-        if c.lo is not None:
-            matching = matching.filter(
-                F.col("term") >= c.lo if c.lo_inc else F.col("term") > c.lo
+        if c.kind == "wildcard":
+            return constant_scores(
+                self.index, F.col("term").rlike(wildcard_to_regex(c.text)), c.boost
             )
-        if c.hi is not None:
-            matching = matching.filter(
-                F.col("term") <= c.hi if c.hi_inc else F.col("term") < c.hi
-            )
-        return self._constant_docs(matching.select("term"), c.boost)
-
-    def _constant_docs(self, matching_terms: DataFrame, boost: float) -> DataFrame:
-        docs = (
-            self.index.flat_terms_semi(matching_terms)
-            .select("doc_id")
-            .distinct()
-        )
-        return docs.withColumn("s", F.lit(float(boost)))
+        if c.kind == "range":
+            return constant_scores(self.index, _range_pred(c), c.boost)
+        raise ValueError(c.kind)
 
     def clause_scores(self, c: Clause) -> DataFrame | None:
-        if c.kind == "term":
-            return self.term_scores(c.text, c.boost)
-        if c.kind == "phrase":
-            return self.phrase_scores(c.text, c.boost, slop=c.slop)
-        if c.kind == "prefix":
-            return self.prefix_scores(c.text, c.boost)
-        if c.kind == "fuzzy":
-            return self.fuzzy_scores(c.text, c.distance, c.boost)
-        if c.kind == "wildcard":
-            return self.wildcard_scores(c.text, c.boost)
-        if c.kind == "range":
-            return self.range_scores(c)
-        if c.kind == "group":
-            sub = self.combine(c.children, top_level=False)
-            if sub is None or sub is DROPPED_CLAUSE:
-                return sub
-            return sub.select(
-                "doc_id", (F.col("score") * F.lit(float(c.boost))).alias("s")
-            )
-        raise ValueError(c.kind)
+        if c.kind != "group":
+            return self.leaf_scores(c)
+        sub = self.combine(c.children, top_level=False)
+        if sub is None or sub is DROPPED_CLAUSE:
+            return sub
+        return sub.select(
+            "doc_id", (F.col("score") * F.lit(float(c.boost))).alias("s")
+        )
 
     # ---- boolean combine --------------------------------------------------
 
     def combine(self, clauses: list[Clause], top_level: bool):
-        spark = self.index.postings_flat.sparkSession
         parts: list[tuple[int, str, DataFrame]] = []
         prohibited: list[DataFrame] = []
         must_ids: list[int] = []
@@ -289,11 +229,7 @@ class _Evaluator:
             piece = df.select("doc_id", F.lit(cid).alias("cid"), "s")
             unioned = piece if unioned is None else unioned.unionByName(piece)
         agg = unioned.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("cid", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("score"),
+            sorted_fold("cid").alias("score"),
             F.collect_set("cid").alias("cids"),
         )
         if must_ids:

@@ -1,43 +1,20 @@
-"""Solr function queries, boost queries, re-ranking, and field collapse.
+"""Solr function-query primitives (ValueSource parser names).
 
 The reference delegates its whole query surface to the destination
 collection's ``/select`` handler (``semantic_base_config.zip ->
-solrconfig.xml:650-670``); these are the remaining everyday request
-params of that handler:
-
-* ``boost=`` (edismax multiplicative boost) / ``bf=`` (dismax additive
-  boost function) — a function of a stored field reshapes the ranking;
-* function-query primitives ``recip``, ``linear``, ``log``, ``sqrt``,
-  ``pow``, ``abs`` (Solr ValueSource parser names);
-* ``rq={!rerank reRankQuery=... reRankDocs=N reRankWeight=W}`` — the
-  ReRankQParserPlugin: re-score only the top-N of the main query;
-* ``fq={!collapse field=X}`` — CollapsingQParser: keep only the
-  top-scoring document per group value, then rank the survivors.
-
-Spark shape notes (100 TB):
-
-* boost functions are pure JVM column expressions over ``doc_stats``
-  joined AFTER the scoring agg — the join is doc_id-to-doc_id on the
-  already-reduced match set, never on postings;
-* rerank scores only the top-N (a broadcastable set) — the rerank
-  query's postings scan is semi-joined against those N doc ids, so the
-  second query costs top-N work, not corpus work;
-* collapse is one window on the collapse key over the match set —
-  the same shuffle shape as result grouping, no extra pass.
+solrconfig.xml:650-670``). Its ``boost=`` (edismax multiplicative) and
+``bf=`` (dismax additive) params take a function of stored fields; these
+are the functions — ``recip``, ``linear``, ``log``, ``sqrt``, ``pow``,
+``abs`` — as pure JVM column expressions. Pass one as
+``select(boost=..., boost_mode=...)``; ``select`` joins it onto the
+already-reduced match set, never onto postings. Rerank, collapse and
+elevation are ``select`` stages too (``operators/select.py``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
-from ..functions.similarity import B_DEFAULT, K1_DEFAULT
-from .build import InvertedIndex
-from .score import score_or_docs
-
-
-# --------------------------------------------------------------------------
-# function-query primitives (Solr ValueSource names, JVM expressions)
-# --------------------------------------------------------------------------
 
 def recip(x: Column, m: float, a: float, b: float) -> Column:
     """Solr ``recip(x,m,a,b)`` = a / (m*x + b). The standard recency /
@@ -65,235 +42,3 @@ def fq_pow(x: Column, p: float) -> Column:
 
 def fq_abs(x: Column) -> Column:
     return F.abs(x.cast("double"))
-
-
-# --------------------------------------------------------------------------
-# boosted ranking (edismax boost= / dismax bf=)
-# --------------------------------------------------------------------------
-
-def bm25_boosted_topk(
-    index: InvertedIndex,
-    query: str,
-    fields: DataFrame,
-    boost: Column,
-    k: int = 10,
-    mode: str = "multiply",
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Top-k where ``final = bm25 * boost(doc)`` (edismax ``boost=``,
-    mode="multiply") or ``bm25 + boost(doc)`` (dismax ``bf=``,
-    mode="sum"). ``fields`` is the stored-field table (doc_id + the
-    columns the boost reads — same contract as ``bm25_sorted_by_field``);
-    ``boost`` is a Column over its columns.
-
-    Plan: scoring agg -> join the stored fields on doc_id (join AFTER
-    the reduction, so the boost input never touches postings) -> one
-    TakeOrderedAndProject. Returns (doc_id, score)."""
-    if mode not in ("multiply", "sum"):
-        raise ValueError(f"mode must be multiply|sum, got {mode!r}")
-    spark = index.postings_flat.sparkSession
-    per_doc = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    if per_doc is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    stats = fields.withColumn("_boost", boost.cast("double"))
-    # LEFT join + identity default: Solr's boost/bf keeps a matching doc
-    # ranked when the stored field is missing or null (the function falls
-    # back to the field default) — an inner join would silently DROP it
-    # from the results (ADVICE r3). Identity: 1.0 for multiply, 0.0 for sum.
-    ident = 1.0 if mode == "multiply" else 0.0
-    joined = per_doc.join(
-        stats.select("doc_id", "_boost"), "doc_id", "left"
-    ).withColumn("_boost", F.coalesce(F.col("_boost"), F.lit(ident)))
-    op = (F.col("score") * F.col("_boost")) if mode == "multiply" else (
-        F.col("score") + F.col("_boost")
-    )
-    return (
-        joined.select("doc_id", op.alias("score"))
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-# --------------------------------------------------------------------------
-# re-ranking (ReRankQParserPlugin)
-# --------------------------------------------------------------------------
-
-def rerank_topk(
-    index: InvertedIndex,
-    main_query: str,
-    rerank_query: str,
-    rerank_docs: int = 20,
-    rerank_weight: float = 2.0,
-    k: int = 10,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr ``rq={!rerank}``: take the main query's top ``rerank_docs``,
-    add ``rerank_weight * score(rerank_query)`` to each (docs the rerank
-    query doesn't match keep their original score — Lucene's
-    ReRankScaler-less default), re-sort, return top-k.
-
-    Plan: the top-N cut is TakeOrderedAndProject (N is request-sized, so
-    the re-scored set is tiny and broadcast); the rerank query's postings
-    scan still prunes on its own terms. Returns (doc_id, score)."""
-    spark = index.postings_flat.sparkSession
-    main = score_or_docs(index, main_query, k1=k1, b=b, quantize=quantize)
-    if main is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    head = (
-        main.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(rerank_docs)
-    )
-    rr = score_or_docs(index, rerank_query, k1=k1, b=b, quantize=quantize)
-    if rr is None:
-        combined = head
-    else:
-        # broadcast the RIGHT side: BroadcastHashJoin cannot broadcast
-        # the preserved (left) side of a left-outer join, so hinting
-        # `head` fell back to a shuffle of the full rr match set. Semi-
-        # joining rr down to the head's ids first keeps the broadcast
-        # request-sized either way.
-        rr_small = rr.withColumnRenamed("score", "_rr").join(
-            F.broadcast(head.select("doc_id")), "doc_id", "left_semi"
-        )
-        combined = (
-            head
-            .join(F.broadcast(rr_small), "doc_id", "left")
-            .select(
-                "doc_id",
-                (
-                    F.col("score")
-                    + F.lit(float(rerank_weight)) * F.coalesce(F.col("_rr"), F.lit(0.0))
-                ).alias("score"),
-            )
-        )
-    return combined.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-
-
-# --------------------------------------------------------------------------
-# field collapse (CollapsingQParserPlugin)
-# --------------------------------------------------------------------------
-
-def bm25_collapse_topk(
-    index: InvertedIndex,
-    query: str,
-    fields: DataFrame,
-    collapse_field: str,
-    k: int = 10,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr ``fq={!collapse field=X}``: within each value of a stored
-    field, keep only the top-scoring document (doc_id-asc tie-break,
-    matching the engine's rank identity), then rank the survivors.
-    Differs from result grouping in surface: collapse returns a flat
-    doc list the rest of the request (facets, paging) operates on.
-    ``fields`` carries (doc_id, collapse key).
-
-    Plan: scoring agg -> doc_id join to fetch the collapse key -> one
-    window partitioned by the key -> TakeOrderedAndProject. Returns
-    (doc_id, <collapse_field>, score)."""
-    from pyspark.sql.window import Window
-
-    spark = index.postings_flat.sparkSession
-    per_doc = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    if per_doc is None:
-        # collapse-key dtype follows the caller's frame so the zero-hit
-        # schema matches the matching path (an int key stays int)
-        key_type = dict(fields.dtypes)[collapse_field]
-        return spark.createDataFrame(
-            [], f"doc_id long, {collapse_field} {key_type}, score double"
-        )
-    joined = per_doc.join(
-        fields.select("doc_id", collapse_field), "doc_id"
-    )
-    w = Window.partitionBy(collapse_field).orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    heads = (
-        joined.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    return (
-        heads.select("doc_id", collapse_field, "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-# --------------------------------------------------------------------------
-# query elevation (QueryElevationComponent)
-# --------------------------------------------------------------------------
-
-def elevated_topk(
-    index: InvertedIndex,
-    query: str,
-    elevate_ids: "list[int]",
-    k: int = 10,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr QueryElevationComponent (``enableElevation=true`` +
-    elevate.xml): the configured doc ids are pinned to the top of the
-    result in their configured order (even when the query doesn't match
-    them — ``forceElevation`` semantics); the organic ranking follows,
-    minus the elevated docs. Scores are NOT rewritten — Solr reports the
-    editorial docs with their real (possibly null -> 0) scores and an
-    ``[elevated]`` marker, which we surface as a boolean column.
-
-    Plan: the elevated set is request-sized (broadcast); organic ranking
-    is the usual TakeOrdered; the pinned head is a driver-side constant
-    prefix. Returns (doc_id, score, elevated) in final display order via
-    the ``rank`` column contract of orderBy(rank)."""
-    from pyspark.sql.window import Window
-
-    spark = index.postings_flat.sparkSession
-    per_doc = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    elev_rows = [(int(d), i) for i, d in enumerate(elevate_ids)]
-    elev = spark.createDataFrame(elev_rows or [], "doc_id long, pos int")
-    if per_doc is None:
-        per_doc = spark.createDataFrame([], "doc_id long, score double")
-    scored_elev = (
-        F.broadcast(elev)
-        .join(per_doc, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("score"), F.lit(0.0)).alias("score"),
-            F.lit(True).alias("elevated"),
-            F.col("pos").cast("long").alias("rank"),
-        )
-    )
-    organic = (
-        per_doc.join(F.broadcast(elev.select("doc_id")), "doc_id", "left_anti")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select(
-            "doc_id",
-            "score",
-            F.lit(False).alias("elevated"),
-            (
-                F.lit(len(elevate_ids))
-                # row_number over a global window: input is already the
-                # limit(k) head, so the single-partition sort is k rows.
-                # -1 keeps ranks DENSE across the pinned/organic boundary
-                # (pinned 0..n-1, organic continues at exactly n) — the
-                # same contract as select()'s elevation paging.
-                + F.row_number().over(
-                    Window.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                )
-                - F.lit(1)
-            ).cast("long").alias("rank"),
-        )
-    )
-    return (
-        scored_elev.unionByName(organic)
-        .orderBy("rank")
-        .limit(k)
-        .select("doc_id", "score", "elevated", "rank")
-    )

@@ -40,8 +40,11 @@ from typing import Iterator, Mapping, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..functions.queryparser import QueryParseError, parse_query
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
+from .boolean_query import DROPPED_CLAUSE, _Evaluator
 from .build import CACHE_LEVEL, quantize_dl_col
+from .score import analyze_query, bm25_partial, sorted_fold, wildcard_to_regex
 
 
 @dataclass
@@ -257,6 +260,68 @@ def build_multifield_index(
     )
 
 
+def _field_partials(
+    index: MultiFieldIndex,
+    field_weights: Mapping[str, float],
+    terms: Sequence[str],
+    boost: float,
+    k1: float,
+    b: float,
+    quantize: bool,
+) -> "DataFrame | None":
+    """(doc_id, field, term, s) BM25 partials of the analyzed ``terms``
+    over the weighted fields, with ``w = boost * boost_f * mult * idf_f``
+    and the field's avgdl riding the broadcast weight table so the norm
+    stays a JVM expression. None when no (field, term) pair is indexed."""
+    counts = Counter(terms)
+    dfs = field_term_dfs(index, list(field_weights), list(counts))
+    weights = [
+        (
+            f,
+            t,
+            boost
+            * field_weights[f]
+            * float(mult)
+            * idf(dfs[(f, t)], index.field_stats[f]["n_docs"]),
+            index.avgdl(f),
+        )
+        for t, mult in counts.items()
+        for f in field_weights
+        if (f, t) in dfs
+    ]
+    if not weights:
+        return None
+    wdf = index.postings.sparkSession.createDataFrame(
+        weights, "field string, term string, w double, avgdl double"
+    )
+    dl_col = "dl_quant" if quantize else "dl"
+    cand = index.postings.filter(
+        F.col("field").isin(list(field_weights))
+        & F.col("term").isin([t for _, t, _, _ in weights])
+    )
+    return cand.join(F.broadcast(wdf), ["field", "term"]).select(
+        "doc_id",
+        "field",
+        "term",
+        bm25_partial(F.col("w"), F.col("tf"), dl_col, F.col("avgdl"), k1, b).alias("s"),
+    )
+
+
+def _field_term_leaf(index, field_weights, text, boost, k1, b, quantize):
+    """The per-field BM25 leaf: (doc_id, s) summed over the analyzed
+    tokens of ``text`` x the weighted fields, folded in (field, term)
+    order. DROPPED_CLAUSE when ``text`` analyzes to nothing (the classic
+    parser drops the clause); None when nothing is indexed (df=0 keeps
+    the clause, matching nothing)."""
+    terms = analyze_query(text, index.profile)
+    if not terms:
+        return DROPPED_CLAUSE
+    scored = _field_partials(index, field_weights, terms, boost, k1, b, quantize)
+    if scored is None:
+        return None
+    return scored.groupBy("doc_id").agg(sorted_fold("field", "term").alias("s"))
+
+
 def bm25_multifield_topk(
     index: MultiFieldIndex,
     query: str,
@@ -271,98 +336,93 @@ def bm25_multifield_topk(
     """Top-k docs for an OR query over weighted fields.
 
     ``combine="sum"``: score(d) = sum_t sum_f boost_f * BM25_f(t, d)
-    (Boolean OR across the per-field term queries).
+    (Boolean OR across the per-field term queries — the per-field leaf
+    of the boolean combine).
     ``combine="dismax"``: per term, max_f + tie * (sum_f - max_f) — Solr
     edismax's DisjunctionMaxQuery with tiebreaker (``tie=`` request
     param); tie=0 is pure max, tie=1 degenerates to the sum.
     idf_f uses the FIELD's docCount/df (per-field index statistics, as
     Lucene computes them).
     """
-    from .score import analyze_query
-
     if combine not in ("sum", "dismax"):
         raise ValueError(f"combine must be 'sum' or 'dismax', got {combine!r}")
     spark = index.postings.sparkSession
     empty = spark.createDataFrame([], "doc_id long, score double")
-    terms = analyze_query(query, index.profile)
     boosts = {f: float(w) for f, w in qf.items() if f in index.fields}
-    if not terms or not boosts or index.n_docs == 0:
+    if not boosts or index.n_docs == 0:
         return empty
-
-    counts = Counter(terms)
-    dfs = field_term_dfs(index, list(boosts), list(counts))
-    # (field, term) -> boost_f * mult * idf_f, plus the field's avgdl as a
-    # broadcast constant so the norm is a pure JVM expression
-    weights = [
-        (f, t, boosts[f] * float(mult) * idf(dfs[(f, t)], index.field_stats[f]["n_docs"]),
-         index.avgdl(f))
-        for t, mult in counts.items()
-        for f in boosts
-        if (f, t) in dfs
-    ]
-    if not weights:
-        return empty
-
-    wdf = spark.createDataFrame(
-        weights, "field string, term string, w double, avgdl double"
-    )
-    dl_col = "dl_quant" if quantize else "dl"
-    cand = index.postings.filter(
-        F.col("field").isin(list(boosts))
-        & F.col("term").isin([t for _, t, _, _ in weights])
-    )
-    scored = cand.join(F.broadcast(wdf), ["field", "term"]).select(
-        "doc_id",
-        "field",
-        "term",
-        (
-            F.col("w")
-            * F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.col("avgdl"))
-            )
-        ).alias("s"),
-    )
-
-    if combine == "dismax":
+    if combine == "sum":
+        per_doc = _field_term_leaf(index, boosts, query, 1.0, k1, b, quantize)
+        if per_doc is None or per_doc is DROPPED_CLAUSE:
+            return empty
+        per_doc = per_doc.withColumnRenamed("s", "score")
+    else:
+        scored = _field_partials(
+            index, boosts, analyze_query(query, index.profile), 1.0, k1, b, quantize
+        )
+        if scored is None:
+            return empty
         # per (doc, term): max over fields + tie * rest; fold order fixed
         # by the field-sorted array
         per_term = scored.groupBy("doc_id", "term").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("field", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("sum_s"),
-            F.max("s").alias("max_s"),
+            sorted_fold("field").alias("sum_s"), F.max("s").alias("max_s")
         ).select(
             "doc_id",
             "term",
             (F.col("max_s") + F.lit(float(tie)) * (F.col("sum_s") - F.col("max_s"))).alias("s"),
         )
-        per_doc = per_term.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("term", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("score")
-        )
-    else:
-        # deterministic per-doc fold over the (field, term)-sorted partials
-        per_doc = scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("field", "term", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("score")
-        )
+        per_doc = per_term.groupBy("doc_id").agg(sorted_fold("term").alias("score"))
 
     return (
         per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
         .select("doc_id", "score")
     )
+
+
+class _FieldEvaluator(_Evaluator):
+    """The boolean combine's leaves on a multi-field index: a term becomes
+    a per-field BM25 leaf (its own field, or ``qf`` when unqualified); a
+    prefix or wildcard becomes a constant-score leaf over the field's
+    term dictionary."""
+
+    def __init__(self, index, boosts, k1, b, quantize):
+        super().__init__(index, k1, b, quantize)
+        self.boosts = boosts
+
+    def _field_vocab_scores(self, field: str, term_pred, boost: float) -> DataFrame:
+        vocab = self.index.term_stats.filter(
+            (F.col("field") == field) & term_pred
+        ).select("field", "term")
+        docs = (
+            self.index.postings.join(F.broadcast(vocab), ["field", "term"], "left_semi")
+            .select("doc_id")
+            .distinct()
+        )
+        return docs.withColumn("s", F.lit(float(boost)))
+
+    def leaf_scores(self, c):
+        if c.kind == "term":
+            fw = {c.field: 1.0} if c.field else self.boosts
+            return _field_term_leaf(
+                self.index, fw, c.text, c.boost, self.k1, self.b, self.quantize
+            )
+        if c.field is None:
+            raise QueryParseError(
+                f"clause kind {c.kind!r} requires a field qualifier context "
+                "the multi-field executor does not cover; use the "
+                "single-field boolean engine for default-field queries"
+            )
+        if c.kind == "prefix":
+            return self._field_vocab_scores(c.field, F.col("term").startswith(c.text), c.boost)
+        if c.kind == "wildcard":
+            return self._field_vocab_scores(
+                c.field, F.col("term").rlike(wildcard_to_regex(c.text)), c.boost
+            )
+        raise QueryParseError(
+            f"fielded {c.kind!r} clauses are not supported on the "
+            "multi-field index (supported: term, prefix, wildcard)"
+        )
 
 
 def fielded_query_topk(
@@ -377,182 +437,31 @@ def fielded_query_topk(
     """Lucene classic-parser queries with concrete field qualifiers over
     the multi-field index: ``title:merge body:sort window -title:draft``.
 
-    Semantics (BooleanQuery over per-field TermQueries):
+    Semantics (BooleanQuery over per-field TermQueries, executed by the
+    single-field engine's combine, ``boolean_query._Evaluator``):
 
     * ``field:term`` scores BM25 against THAT field's postings/stats only;
     * an unqualified term is an edismax-style disjunction over ``qf``
       (weighted SUM across fields — pass ``qf={field: boost}``; defaults
       to every field at boost 1);
-    * ``+``/``AND`` -> MUST (semi-join), ``-``/``NOT`` -> MUST_NOT
-      (anti-join), bare/OR -> SHOULD;
+    * ``+``/``AND`` -> MUST, ``-``/``NOT`` -> MUST_NOT (anti-join),
+      bare/OR -> SHOULD; ``( ... )`` groups nest, their boost multiplying
+      the group's score;
     * ``field:prefix*`` / ``field:te?t`` rewrite constant-score over the
       field's term dictionary (MultiTermQuery constant-score rewrite);
     * score = deterministic clause-ordered fold of matching MUST+SHOULD
       clause scores (bit-stable across parallelism);
-    * fielded phrase / fuzzy / range clauses are rejected with a clear
-      error (the single-field engine covers them on the default field).
+    * phrase / fuzzy / range clauses are rejected with a clear error (the
+      single-field engine covers them on the default field).
 
-    Scale shape: every leaf pushes ``field = X AND term IN (...)`` into
-    the postings scan; the combine is one union + hash agg on doc_id plus
-    one anti-join per prohibited clause.
+    Scale shape: every leaf pushes ``field IN (...) AND term IN (...)``
+    into the postings scan; the combine is one union + hash agg on doc_id
+    plus one anti-join per prohibited clause.
     """
-    from ..functions.queryparser import (
-        MUST, MUST_NOT, QueryParseError, parse_query,
-    )
-    from .boolean_query import DROPPED_CLAUSE
-    from .score import analyze_query
-
-    spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
     boosts = (
         {f: float(w) for f, w in qf.items() if f in index.fields}
         if qf is not None
         else {f: 1.0 for f in index.fields}
     )
     clauses = parse_query(q, fields=index.fields)
-    if not clauses or index.n_docs == 0:
-        return empty
-
-    dl_col = "dl_quant" if quantize else "dl"
-
-    def _bm25_partials(field_weights: Mapping[str, float], text: str, boost: float):
-        """(doc_id, s) summed over the clause's analyzed tokens x fields."""
-        terms = analyze_query(text, index.profile)
-        if not terms:
-            # analyzed away (stopword): the classic parser DROPS the
-            # clause; distinct from df=0 which keeps it (matching nothing)
-            return DROPPED_CLAUSE
-        counts = Counter(terms)
-        dfs = field_term_dfs(index, list(field_weights), list(counts))
-        weights = [
-            (
-                f,
-                t,
-                boost
-                * field_weights[f]
-                * float(mult)
-                * idf(dfs[(f, t)], index.field_stats[f]["n_docs"]),
-                index.avgdl(f),
-            )
-            for t, mult in counts.items()
-            for f in field_weights
-            if (f, t) in dfs
-        ]
-        if not weights:
-            return None
-        wdf = index.postings.sparkSession.createDataFrame(
-            weights, "field string, term string, w double, avgdl double"
-        )
-        cand = index.postings.filter(
-            F.col("field").isin(list(field_weights))
-            & F.col("term").isin([t for _, t, _, _ in weights])
-        )
-        scored = cand.join(F.broadcast(wdf), ["field", "term"]).select(
-            "doc_id",
-            "field",
-            "term",
-            (
-                F.col("w")
-                * F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.col("avgdl"))
-                )
-            ).alias("s"),
-        )
-        return scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("field", "term", "s"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["s"],
-            ).alias("s")
-        )
-
-    def _constant_docs(field: str, term_pred, boost: float):
-        """Constant-score multiterm rewrite against one field's dictionary."""
-        vocab = index.term_stats.filter(
-            (F.col("field") == field) & term_pred
-        ).select("field", "term")
-        docs = (
-            index.postings.join(F.broadcast(vocab), ["field", "term"], "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        return docs.withColumn("s", F.lit(float(boost)))
-
-    def clause_df(c) -> DataFrame | None:
-        fw = {c.field: 1.0} if c.field else dict(boosts)
-        if c.kind == "term":
-            return _bm25_partials(fw, c.text, c.boost)
-        if c.field is None:
-            raise QueryParseError(
-                f"clause kind {c.kind!r} requires a field qualifier context "
-                "the multi-field executor does not cover; use the "
-                "single-field boolean engine for default-field queries"
-            )
-        if c.kind == "prefix":
-            return _constant_docs(c.field, F.col("term").startswith(c.text), c.boost)
-        if c.kind == "wildcard":
-            from .score import wildcard_to_regex
-
-            return _constant_docs(
-                c.field, F.col("term").rlike(wildcard_to_regex(c.text)), c.boost
-            )
-        raise QueryParseError(
-            f"fielded {c.kind!r} clauses are not supported on the "
-            "multi-field index (supported: term, prefix, wildcard)"
-        )
-
-    pos_parts, must_docs, not_docs = [], [], []
-    has_positive = False  # a positive clause survived analysis
-    for cid, c in enumerate(clauses):
-        sdf = clause_df(c)
-        if c.occur == MUST_NOT:
-            if sdf is not None and sdf is not DROPPED_CLAUSE:
-                not_docs.append(sdf.select("doc_id"))
-            continue
-        if sdf is DROPPED_CLAUSE:
-            continue  # the classic parser drops analyzed-empty clauses
-        has_positive = True
-        if sdf is None:
-            if c.occur == MUST:
-                return empty  # unmatched MUST term -> no results
-            continue
-        pos_parts.append(sdf.select("doc_id", F.lit(cid).alias("cid"), "s"))
-        if c.occur == MUST:
-            must_docs.append(sdf.select("doc_id"))
-
-    if not pos_parts:
-        if not_docs and not has_positive:
-            # Solr's pure-negative rewrite (same semantics as the
-            # single-field boolean engine): *:* minus the exclusions
-            base = index.doc_stats.select("doc_id", F.lit(1.0).alias("score"))
-            for p in not_docs:
-                base = base.join(p, "doc_id", "left_anti")
-            return (
-                base.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k)
-                .select("doc_id", "score")
-            )
-        return empty
-    unioned = pos_parts[0]
-    for p in pos_parts[1:]:
-        unioned = unioned.unionByName(p)
-    # deterministic fold over clause-id order
-    per_doc = unioned.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("cid", "s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["s"],
-        ).alias("score")
-    )
-    for m in must_docs:
-        per_doc = per_doc.join(m, "doc_id", "left_semi")
-    for n in not_docs:
-        per_doc = per_doc.join(n, "doc_id", "left_anti")
-    return (
-        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return _FieldEvaluator(index, boosts, k1, b, quantize).topk(clauses, k)

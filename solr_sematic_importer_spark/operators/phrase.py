@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.analyzer import analyze_with_positions
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
 from .build import InvertedIndex, term_dfs
+from .score import bm25_partial
 
 
 def build_positions(
@@ -132,6 +133,32 @@ def phrase_match_counts(
     return joined.select("doc_id", tfp.alias("tfp")).filter(F.col("tfp") > 0)
 
 
+def phrase_scores(
+    index: InvertedIndex,
+    positions: DataFrame,
+    terms: "list[str]",
+    poss: "list[int]",
+    boost: float,
+    slop: int,
+    k1: float,
+    b: float,
+    quantize: bool,
+) -> "DataFrame | None":
+    """The PhraseQuery leaf shared by ``bm25_phrase_topk`` and the boolean
+    engine's phrase clause: (doc_id, s) for the analyzed ``terms`` at
+    ``poss``, scored as one pseudo-term with ``w = boost * sum of member
+    idfs`` and ``tf = phrase frequency``. None when a member is unindexed."""
+    dfs = term_dfs(index, sorted(set(terms)))
+    if any(dfs.get(t, 0) == 0 for t in terms):
+        return None
+    w = boost * sum(idf(dfs[t], index.n_docs) for t in terms)  # multiplicity counts
+    dl_col = "dl_quant" if quantize else "dl"
+    hits = phrase_match_counts(positions, terms, [p - poss[0] for p in poss], slop=slop)
+    return hits.join(index.doc_stats.select("doc_id", dl_col), "doc_id").select(
+        "doc_id", bm25_partial(F.lit(w), F.col("tfp"), dl_col, index.avgdl, k1, b).alias("s")
+    )
+
+
 def bm25_phrase_topk(
     index: InvertedIndex,
     positions: DataFrame,
@@ -147,34 +174,15 @@ def bm25_phrase_topk(
     one pseudo-term with idf = sum of constituent idfs and tf = phrase
     frequency. Returns (doc_id, score), (score desc, doc_id asc)."""
     spark = index.postings_flat.sparkSession
-    out_schema = "doc_id long, score double"
     terms, poss = analyze_with_positions(phrase, index.profile)
-    if not terms or index.n_docs == 0:
-        return spark.createDataFrame([], out_schema)
-    gaps = [p - poss[0] for p in poss]
-
-    dfs = term_dfs(index, sorted(set(terms)))
-    if any(dfs[t] == 0 for t in terms):
-        return spark.createDataFrame([], out_schema)
-    w = sum(idf(dfs[t], index.n_docs) for t in terms)  # multiplicity counts
-    avgdl = index.avgdl
-    dl_col = "dl_quant" if quantize else "dl"
-
-    hits = phrase_match_counts(positions, terms, gaps, slop=slop)
-    with_dl = hits.join(
-        index.doc_stats.select("doc_id", dl_col), "doc_id"
-    ).select(
-        "doc_id",
-        (
-            F.lit(w)
-            * F.col("tfp")
-            / (
-                F.col("tfp")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.lit(avgdl))
-            )
-        ).alias("score"),
+    scored = (
+        phrase_scores(index, positions, terms, poss, 1.0, slop, k1, b, quantize)
+        if terms and index.n_docs
+        else None
     )
+    if scored is None:
+        return spark.createDataFrame([], "doc_id long, score double")
+    per_doc = scored.withColumnRenamed("s", "score")
     if index.deletes is not None:
-        with_dl = with_dl.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return with_dl.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+        per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
+    return per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)

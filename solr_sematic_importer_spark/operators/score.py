@@ -28,7 +28,7 @@ from __future__ import annotations
 from collections import Counter
 from typing import Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.analyzer import PROFILES
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
@@ -37,6 +37,31 @@ from .build import InvertedIndex, term_dfs
 
 def analyze_query(query: str, profile: str) -> list[str]:
     return PROFILES[profile](query)
+
+
+def bm25_partial(
+    w: Column, tf: Column, dl_col: str, avgdl: "float | Column", k1: float, b: float
+) -> Column:
+    """The per-posting BM25 partial ``w*tf / (tf + k1*((1-b) + b*dl/avgdl))``
+    as a JVM expression — the one spelling every Spark-column scorer uses.
+    Its association is part of the contract: it keeps exhaustive, WAND
+    and ``/select`` scores bit-identical. ``avgdl`` is a literal
+    (single-field index) or a Column (per-field avgdl, multi-field)."""
+    if not isinstance(avgdl, Column):
+        avgdl = F.lit(avgdl)
+    return w * tf / (tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / avgdl))
+
+
+def sorted_fold(*keys: str, value: str = "s") -> Column:
+    """Deterministic sum aggregate: fold the ``keys``-sorted array of
+    (keys..., value) structs, so the float accumulation order is fixed and
+    scores are bit-identical across parallelism levels (SURVEY §7.3
+    risk 7)."""
+    return F.aggregate(
+        F.array_sort(F.collect_list(F.struct(*keys, value))),
+        F.lit(0.0),
+        lambda acc, x: acc + x[value],
+    )
 
 
 def calculate_min_should_match(spec: "int | str", n_optional: int) -> int:
@@ -154,8 +179,8 @@ def score_or_docs(
 ) -> DataFrame | None:
     """The shared OR-semantics scoring stage: every matching doc with its
     full BM25 score (no top-k cut). None when the query matches nothing.
-    ``bm25_topk`` adds TakeOrdered on top; ``bm25_grouped_topk`` adds the
-    per-group window instead. ``raw_terms`` bypasses query analysis for
+    ``bm25_topk`` adds TakeOrdered on top; ``select`` composes every other
+    request stage over it. ``raw_terms`` bypasses query analysis for
     callers whose terms are ALREADY analyzed (more-like-this feeds index
     terms back in; re-analysis would double-stem them).
 
@@ -187,31 +212,16 @@ def score_or_docs(
 
     wdf = spark.createDataFrame(weights, "term string, w double, mult int")
     dl_col = "dl_quant" if quantize else "dl"
-    avgdl = index.avgdl
 
     cand = index.flat_terms([w[0] for w in weights])
     scored = cand.join(F.broadcast(wdf), "term").select(
         "doc_id",
         "term",
         "mult",
-        (
-            F.col("w")
-            * F.col("tf")
-            / (
-                F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.lit(avgdl))
-            )
-        ).alias("s"),
+        bm25_partial(F.col("w"), F.col("tf"), dl_col, index.avgdl, k1, b).alias("s"),
     )
-
-    # Deterministic per-doc sum: fold the term-sorted array of partials.
     per_doc = scored.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["s"],
-        ).alias("score"),
+        sorted_fold("term").alias("score"),
         F.sum("mult").alias("_nclauses"),
     )
     if required > 0:
@@ -302,7 +312,6 @@ def bm25_topk_synonyms(
     gdf = spark.createDataFrame(group_rows, "term string, gid int")
     wdf = spark.createDataFrame(weights, "gid int, w double")
     dl_col = "dl_quant" if quantize else "dl"
-    avgdl = index.avgdl
 
     cand = index.flat_terms(sorted({m for m, _ in group_rows}))
     # per (doc, group): tf summed across members, THEN the BM25 saturation
@@ -314,58 +323,14 @@ def bm25_topk_synonyms(
         .select(
             "doc_id",
             "gid",
-            (
-                F.col("w")
-                * F.col("tf_sum")
-                / (
-                    F.col("tf_sum")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.lit(avgdl))
-                )
+            bm25_partial(
+                F.col("w"), F.col("tf_sum"), dl_col, index.avgdl, k1, b
             ).alias("s"),
         )
     )
-    per_doc = per_group.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("gid", "s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["s"],
-        ).alias("score")
-    )
+    per_doc = per_group.groupBy("doc_id").agg(sorted_fold("gid").alias("score"))
     if index.deletes is not None:  # same deletion-vector mask as bm25_topk
         per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return (
-        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
-    )
-
-
-def bm25_topk_cursor(
-    index: InvertedIndex,
-    query: str,
-    k: int = 10,
-    cursor: tuple[float, int] | None = None,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr cursorMark deep paging: keyset pagination on the total order
-    (score desc, doc_id asc). ``cursor`` is the LAST row of the previous
-    page; the next page filters strictly past it BEFORE the top-k, so
-    page N costs the same as page 1 — unlike offset paging, which
-    recomputes and discards N*k rows (Solr added cursorMark for exactly
-    this reason). Returns (doc_id, score)."""
-    spark = index.postings_flat.sparkSession
-    per_doc = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    if per_doc is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    if cursor is not None:
-        last_score, last_doc = float(cursor[0]), int(cursor[1])
-        per_doc = per_doc.filter(
-            (F.col("score") < last_score)
-            | ((F.col("score") == last_score) & (F.col("doc_id") > last_doc))
-        )
     return (
         per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
@@ -448,6 +413,42 @@ def fuzzy_expand_terms(
     return members[:max_expansions]
 
 
+def fuzzy_scores(
+    index: InvertedIndex,
+    word: str,
+    distance: int,
+    boost: float,
+    k1: float,
+    b: float,
+    quantize: bool,
+    max_expansions: int = 50,
+) -> "DataFrame | None":
+    """The FuzzyQuery leaf shared by ``bm25_fuzzy_topk`` and the boolean
+    engine's ``term~N`` clause: (doc_id, s) with
+    ``s = Σ_members boost_m * (boost * idf(df_max)) * sat(tf_m)``, folded
+    in term order. None when the expansion set is empty."""
+    members = fuzzy_expand_terms(index, word, distance, max_expansions)
+    if not members or index.n_docs == 0:
+        return None
+    w = boost * idf(max(df for _, df, _ in members), index.n_docs)
+    bdf = index.postings_flat.sparkSession.createDataFrame(
+        [(t, bst) for t, _, bst in members], "term string, mboost double"
+    )
+    dl_col = "dl_quant" if quantize else "dl"
+    scored = (
+        index.flat_terms([t for t, _, _ in members])
+        .join(F.broadcast(bdf), "term")
+        .select(
+            "doc_id",
+            "term",
+            bm25_partial(
+                F.col("mboost") * F.lit(w), F.col("tf"), dl_col, index.avgdl, k1, b
+            ).alias("s"),
+        )
+    )
+    return scored.groupBy("doc_id").agg(sorted_fold("term").alias("s"))
+
+
 def bm25_fuzzy_topk(
     index: InvertedIndex,
     word: str,
@@ -465,42 +466,10 @@ def bm25_fuzzy_topk(
     ``score(doc) = Σ_members boost_m * idf(df_max) * sat(tf_m)``.
     Returns (doc_id, score)."""
     spark = index.postings_flat.sparkSession
-    out_schema = "doc_id long, score double"
-    members = fuzzy_expand_terms(index, word, distance, max_expansions)
-    if not members or index.n_docs == 0:
-        return spark.createDataFrame([], out_schema)
-    w = idf(max(df for _, df, _ in members), index.n_docs)
-    bdf = spark.createDataFrame(
-        [(t, bst) for t, _, bst in members], "term string, boost double"
-    )
-    dl_col = "dl_quant" if quantize else "dl"
-    avgdl = index.avgdl
-    scored = (
-        index.flat_terms([t for t, _, _ in members])
-        .join(F.broadcast(bdf), "term")
-        .select(
-            "doc_id",
-            "term",
-            (
-                F.col("boost")
-                * F.lit(w)
-                * F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.lit(avgdl))
-                )
-            ).alias("s"),
-        )
-    )
-    # deterministic per-doc sum: term-sorted fold (same as score_or_docs)
-    per_doc = scored.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["s"],
-        ).alias("score")
-    )
+    scored = fuzzy_scores(index, word, distance, 1.0, k1, b, quantize, max_expansions)
+    if scored is None:
+        return spark.createDataFrame([], "doc_id long, score double")
+    per_doc = scored.withColumnRenamed("s", "score")
     if index.deletes is not None:
         per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
     return (
@@ -526,6 +495,26 @@ def wildcard_to_regex(pattern: str) -> str:
     return "^" + "".join(out) + "$"
 
 
+def constant_scores(index: InvertedIndex, term_pred, boost: float = 1.0) -> DataFrame:
+    """The MultiTermQuery CONSTANT_SCORE rewrite shared by prefix, wildcard
+    and range clauses: every doc holding any vocab term that matches
+    ``term_pred`` scores ``boost``. The expansion is a semi-join of
+    postings against the matching slice of the vocab-sized term_stats
+    table. Returns (doc_id, s)."""
+    matching = index.term_stats.filter(term_pred).select("term")
+    docs = index.flat_terms_semi(matching).select("doc_id").distinct()
+    return docs.withColumn("s", F.lit(float(boost)))
+
+
+def _constant_topk(index: InvertedIndex, term_pred, k: int) -> DataFrame:
+    """Top-k of a constant-score clause: docID-asc tie-break, deletes
+    masked. Returns (doc_id, score)."""
+    docs = constant_scores(index, term_pred).withColumnRenamed("s", "score")
+    if index.deletes is not None:
+        docs = docs.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
+    return docs.orderBy(F.col("doc_id").asc()).limit(k)
+
+
 def wildcard_query_topk(
     index: InvertedIndex,
     pattern: str,
@@ -533,82 +522,14 @@ def wildcard_query_topk(
 ) -> DataFrame:
     """Lucene WildcardQuery (``te?t``, ``t*st``) under Solr's default
     MultiTermQuery CONSTANT_SCORE rewrite: regex-on-vocab expansion
-    (``rlike`` over the vocab-sized term_stats table), then the same
-    semi-join/dedup shape as ``prefix_query_topk``. Every matching doc
+    (``rlike`` over the vocab-sized term_stats table). Every matching doc
     scores 1.0; docID-asc tie-break. Returns (doc_id, score)."""
-    spark = index.postings_flat.sparkSession
     if not pattern:
-        return spark.createDataFrame([], "doc_id long, score double")
-    rx = wildcard_to_regex(pattern.lower())
-    matching = index.term_stats.filter(F.col("term").rlike(rx)).select("term")
-    docs = (
-        index.flat_terms_semi(matching)
-        .select("doc_id")
-        .distinct()
-    )
-    if index.deletes is not None:
-        docs = docs.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return (
-        docs.withColumn("score", F.lit(1.0))
-        .orderBy(F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-def bm25_sorted_by_field(
-    index: InvertedIndex,
-    query: str,
-    sort_df: DataFrame,
-    sort_col: str,
-    ascending: bool = True,
-    k: int = 10,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr ``sort=field asc|desc``: the matching set is the query's, the
-    ORDER is a stored field's (doc_id tie-break) — a join to the field
-    table plus TakeOrderedAndProject; scores still returned."""
-    spark = index.postings_flat.sparkSession
-    per_doc = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    if per_doc is None:
-        return spark.createDataFrame(
-            [], f"doc_id long, {sort_col} {dict(sort_df.dtypes)[sort_col]}, score double"
+        return index.postings_flat.sparkSession.createDataFrame(
+            [], "doc_id long, score double"
         )
-    joined = per_doc.join(sort_df.select("doc_id", sort_col), "doc_id")
-    key = F.col(sort_col).asc() if ascending else F.col(sort_col).desc()
-    return (
-        joined.orderBy(key, F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", sort_col, "score")
-    )
-
-
-def facet_on_query(
-    index: InvertedIndex,
-    query: str,
-    facet_df: DataFrame,
-    facet_col: str,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr facet semantics proper: facet counts are computed over the
-    QUERY'S matching document set (``q=...&facet.field=X``), not the
-    whole corpus — the match set semi-joins the facet table, then one
-    partial+final hash agg. Returns (facet value, cnt)."""
-    spark = index.postings_flat.sparkSession
-    per_doc = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    if per_doc is None:
-        return spark.createDataFrame(
-            [], f"{facet_col} {dict(facet_df.dtypes)[facet_col]}, cnt long"
-        )
-    matched = per_doc.select("doc_id")
-    return (
-        facet_df.select("doc_id", facet_col)
-        .join(matched, "doc_id", "left_semi")
-        .groupBy(facet_col)
-        .agg(F.count("*").alias("cnt"))
+    return _constant_topk(
+        index, F.col("term").rlike(wildcard_to_regex(pattern.lower())), k
     )
 
 
@@ -640,71 +561,12 @@ def prefix_query_topk(
     """Lucene PrefixQuery (``q=merg*``) under Solr's default
     MultiTermQuery CONSTANT_SCORE rewrite: every doc containing any term
     with the prefix scores 1.0; ordering is the docID-asc tie-break.
-    Returns (doc_id, score). The expansion is a semi-join of postings
-    against the prefix-matching vocab slice — StartsWith pushes to both
-    scans."""
-    spark = index.postings_flat.sparkSession
+    Returns (doc_id, score). StartsWith pushes to both scans."""
     if not prefix:
-        return spark.createDataFrame([], "doc_id long, score double")
-    matching = index.term_stats.filter(F.col("term").startswith(prefix)).select("term")
-    docs = (
-        index.flat_terms_semi(matching)
-        .select("doc_id")
-        .distinct()
-    )
-    if index.deletes is not None:
-        docs = docs.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return (
-        docs.withColumn("score", F.lit(1.0))
-        .orderBy(F.col("doc_id").asc())
-        .limit(k)
-    )
-
-
-def bm25_grouped_topk(
-    index: InvertedIndex,
-    query: str,
-    groups: DataFrame,
-    k: int = 10,
-    group_col: str = "grp",
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr result grouping (``group=true&group.field=X``, served by the
-    destination collection's ``/select``): the top-scoring document of
-    each group, groups ordered by their head score. ``groups`` maps
-    ``doc_id -> group_col``. Returns (grp, doc_id, score).
-
-    Spark shape: score as usual, join the group map, one window
-    ``row_number() over (partition by grp order by score desc, doc_id)``
-    — the per-group shuffle is on the group key, and the final top-k of
-    group heads is TakeOrderedAndProject."""
-    from pyspark.sql.window import Window
-
-    spark = index.postings_flat.sparkSession
-    scored = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    if scored is None:
-        # dtype of the group column follows the caller's frame, so the
-        # zero-hit schema matches the matching path exactly
-        grp_type = dict(groups.dtypes)[group_col]
-        return spark.createDataFrame(
-            [], f"{group_col} {grp_type}, doc_id long, score double"
+        return index.postings_flat.sparkSession.createDataFrame(
+            [], "doc_id long, score double"
         )
-    joined = scored.join(groups.select("doc_id", group_col), "doc_id")
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    heads = (
-        joined.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    return (
-        heads.select(group_col, "doc_id", "score")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    return _constant_topk(index, F.col("term").startswith(prefix), k)
 
 
 def score_partials(
@@ -746,13 +608,8 @@ def score_partials(
             F.col("tf").cast("long").alias("tf"),
             F.col("df").cast("long").alias("df"),
             "idf",
-            (
-                F.col("w") * F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(k1)
-                    * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.lit(index.avgdl))
-                )
+            bm25_partial(
+                F.col("w"), F.col("tf"), dl_col, index.avgdl, k1, b
             ).alias("partial"),
         )
     )
@@ -787,11 +644,7 @@ def explain_topk(
     # s (w already carries the duplicate-token multiplicity) — so the
     # scores and tie-breaks are bit-identical to bm25_topk's.
     per_doc = partials.groupBy("doc_id").agg(
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "partial"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["partial"],
-        ).alias("score")
+        sorted_fold("term", value="partial").alias("score")
     )
     if index.deletes is not None:  # the same mask bm25_topk applies
         per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
@@ -801,44 +654,6 @@ def explain_topk(
         .select("doc_id")
     )
     return partials.join(F.broadcast(top), "doc_id", "left_semi")
-
-
-def json_facet_stats(
-    index: InvertedIndex,
-    query: str,
-    fields: DataFrame,
-    field: str,
-    aggs: "Sequence[tuple[str, object]]",
-    limit: int = 10,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-    quantize: bool = True,
-) -> DataFrame:
-    """Solr JSON Facet API terms facet with nested stats
-    (``json.facet={langs:{type:terms, field:lang, facet:{avg_len:
-    "avg(n_chars)"}}}``) over the QUERY's match set — buckets ordered by
-    count desc (Solr's default sort), each carrying its nested aggregate
-    values. ``fields`` is the stored-field table (doc_id + facet key +
-    stat inputs); ``aggs`` is a list of (output_name, fn) where fn maps
-    a column-name string to an aggregate Column (e.g.
-    ``("avg_len", lambda c: F.round(F.avg(c("n_chars")), 4))``).
-
-    Plan: match set (already reduced per-doc) -> doc_id join to stored
-    fields -> ONE partial+final hash aggregation on the facet key; the
-    nested stats ride the same agg, so nesting is free. Returns
-    (field, count, *agg names)."""
-    matched = score_or_docs(index, query, k1=k1, b=b, quantize=quantize)
-    agg_cols = [fn(F.col).alias(name) for name, fn in aggs]
-    if matched is None:
-        joined = fields.limit(0)  # schema-stable empty result
-    else:
-        joined = matched.select("doc_id").join(fields, "doc_id")
-    return (
-        joined.groupBy(field)
-        .agg(F.count("*").alias("count"), *agg_cols)
-        .orderBy(F.col("count").desc(), F.col(field).asc())
-        .limit(limit)
-    )
 
 
 def bm25_conjunction_topk(
@@ -868,22 +683,11 @@ def bm25_conjunction_topk(
         .select(
             "doc_id",
             "term",
-            (
-                F.col("w") * F.col("tf")
-                / (
-                    F.col("tf")
-                    + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col(dl_col) / F.lit(index.avgdl))
-                )
-            ).alias("s"),
+            bm25_partial(F.col("w"), F.col("tf"), dl_col, index.avgdl, k1, b).alias("s"),
         )
     )
     per_doc = scored.groupBy("doc_id").agg(
-        F.count("*").alias("nt"),
-        F.aggregate(
-            F.array_sort(F.collect_list(F.struct("term", "s"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["s"],
-        ).alias("score"),
+        F.count("*").alias("nt"), sorted_fold("term").alias("score")
     )
     hits = per_doc.filter(F.col("nt") == len(terms)).select("doc_id", "score")
     if index.deletes is not None:

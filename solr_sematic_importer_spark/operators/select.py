@@ -1,19 +1,21 @@
-"""One-call ``/select`` request executor — the Solr front door.
+"""The ``/select`` request executor — the engine's only composer.
 
 The reference delegates every query to the destination collection's
 ``/select`` handler (``semantic_base_config.zip -> solrconfig.xml:650-680``:
 ``q`` with ``df=_text_`` OR semantics, ``fq``, ``sort``, ``start``/``rows``/
 ``cursorMark``, ``mm``, ``boost``, ``rq={!rerank}``, ``fq={!collapse}``,
 ``elevateIds``, ``facet.field``/``facet.range``/``facet.pivot``/
-``json.facet``, ``debugQuery``). The round-3 engine implemented each of
-those as a standalone operator; this module composes them into ONE
-request-shaped call so a user of the reference can issue the same combined
-requests they issue today.
+``json.facet``, ``debugQuery``). Solr runs them as one QParser, one query
+tree and one collector chain; :func:`select` is that chain. Every request
+stage after main-query scoring — boost, collapse (and result grouping,
+which is collapse plus a column order), rerank, facets, elevation, field
+sort, offset and cursor paging — is implemented HERE and nowhere else;
+standalone callers issue a ``select`` call and reshape its page.
 
-Composition order follows Solr's own execution:
+Stage order follows Solr's own execution:
 
-1. main-query scoring (OR semantics + ``mm``), ``fq`` predicate and
-   prohibited terms applied pre-ranking;
+1. main-query scoring (``score.score_or_docs``: OR semantics + ``mm``),
+   ``fq`` predicate and prohibited terms applied pre-ranking;
 2. ``boost=`` (edismax multiplicative) / ``bf=`` (additive) over stored
    fields — LEFT join, identity default for missing/null fields;
 3. ``fq={!collapse field=X}``: one window per collapse key, survivors only.
@@ -35,11 +37,14 @@ Composition order follows Solr's own execution:
    (``start``/``rows`` offset or ``cursorMark`` keyset following the
    ACTIVE sort).
 
-Spark shape (100 TB): every stage reuses the operator it composes — the
-scoring agg's pushed ``In(term)`` scan filter and broadcast weight join,
-boost/collapse joins on the already-reduced match set, a broadcastable
-rerank head, and TakeOrderedAndProject for every top-k cut. Composing adds
-no extra pass over postings.
+A query that matches nothing runs the same stages over an empty match
+set, so every section keeps the matching path's schema and elevation
+still pins its documents.
+
+Spark shape (100 TB): the scoring agg's pushed ``In(term)`` scan filter and
+broadcast weight join, boost/collapse joins on the already-reduced match
+set, a broadcastable rerank head, and TakeOrderedAndProject for every
+top-k cut. Composing adds no extra pass over postings.
 """
 
 from __future__ import annotations
@@ -125,7 +130,8 @@ def select(
 
     ``fields`` is the stored-field table (doc_id + whatever boost/
     collapse/facet/sort read). Returns :class:`SelectResponse` whose
-    ``docs`` page is (doc_id[, collapse_field][, elevated, rank], score).
+    ``docs`` page is (doc_id[, sort_field][, collapse_field], score) or,
+    with elevation, (doc_id[, collapse_field], score, elevated, rank).
 
     Facets (all counted over the final post-fq, post-collapse match set):
     ``facet_fields`` — per-value counts, one response key per field;
@@ -134,8 +140,11 @@ def select(
     e.g. ``F.date_trunc("day", col)``), response key = name, columns
     (name, cnt); ``facet_pivots`` — each a tuple of field names (Solr
     facet.pivot=a,b), response key = "a,b", nested counts; ``json_facet``
-    — ``(field, aggs)`` with the :func:`json_facet_stats` agg shape,
-    response key = "json:<field>", buckets ordered count desc.
+    — ``(field, aggs)``, each agg an (output_name, fn) pair where fn maps
+    a column accessor to an aggregate Column (e.g. ``("avg_len", lambda c:
+    F.avg(c("n_chars")))``), response key = "json:<field>", columns
+    (field, count, *agg names), buckets ordered count desc (Solr's
+    default), nested stats riding the same hash agg.
 
     ``cursor_mark`` follows the ACTIVE sort (Solr cursorMark is a keyset
     over the current sort spec): ``(last_score, last_doc_id)`` under the
@@ -152,6 +161,8 @@ def select(
     re-derived plain-``q`` top-k.
     """
     spark = index.postings_flat.sparkSession
+    if boost_mode not in ("multiply", "sum"):
+        raise ValueError(f"boost_mode must be multiply|sum, got {boost_mode!r}")
     if cursor_mark is not None and (start or elevate_ids):
         raise ValueError("cursorMark cannot combine with start or elevation (Solr 400)")
     any_facet = bool(facet_fields or facet_ranges or facet_pivots or json_facet)
@@ -186,52 +197,12 @@ def select(
                               highlighting=hl_df, explain=explain_df,
                               _cached=cached[0])
 
-    def _facets_over(matched_fields: DataFrame) -> dict:
-        """Every facet flavor over ONE (semi-joined) stored-field frame.
-        The zero-match path reuses this with ``fields.limit(0)`` so empty
-        facet frames carry EXACTLY the schema (names AND dtypes) of the
-        matching path — a long-typed json.facet agg stays long, a date
-        range bucket stays date — and unions across requests never
-        schema-mismatch."""
-        out: dict = {}
-        for f in facet_fields:
-            out[f] = matched_fields.groupBy(f).agg(F.count("*").alias("cnt"))
-        for name, bucket in (facet_ranges or {}).items():
-            out[name] = (
-                matched_fields.select(bucket.alias(name))
-                .groupBy(name)
-                .agg(F.count("*").alias("cnt"))
-            )
-        for pivot in facet_pivots:
-            out[",".join(pivot)] = (
-                matched_fields.groupBy(*pivot).agg(F.count("*").alias("cnt"))
-            )
-        if json_facet is not None:
-            jf_field, jf_aggs = json_facet
-            agg_cols = [fn(F.col).alias(name) for name, fn in jf_aggs]
-            out[f"json:{jf_field}"] = (
-                matched_fields.groupBy(jf_field)
-                .agg(F.count("*").alias("count"), *agg_cols)
-                .orderBy(F.col("count").desc(), F.col(jf_field).asc())
-            )
-        return out
-
     per_doc = score_or_docs(
         index, q, k1=k1, b=b, quantize=quantize,
         extra_filter=fq, exclude=exclude, min_match=mm,
     )
-    out_cols = ["doc_id"] + ([collapse_field] if collapse_field else []) + ["score"]
-    if per_doc is None:
-        empty_docs = spark.createDataFrame(
-            [], "doc_id long, " + (
-                f"{collapse_field} string, " if collapse_field else ""
-            ) + "score double"
-        )
-        return _finish(
-            empty_docs,
-            _facets_over(fields.limit(0)) if any_facet else {},
-            0 if with_num_found else None,
-        )
+    if per_doc is None:  # zero hits: the same stages over an empty match set
+        per_doc = spark.createDataFrame([], "doc_id long, score double")
 
     # 2+3. boost, then collapse FIRST relative to rerank ({!collapse} is
     # an fq PostFilter applied at collection time, so rq reranks the
@@ -340,9 +311,27 @@ def select(
     #    flavor shares ONE semi-joined stored-field frame
     facets: dict = {}
     if any_facet:
-        facets = _facets_over(
-            fields.join(per_doc.select("doc_id"), "doc_id", "left_semi")
-        )
+        matched = fields.join(per_doc.select("doc_id"), "doc_id", "left_semi")
+        for f in facet_fields:
+            facets[f] = matched.groupBy(f).agg(F.count("*").alias("cnt"))
+        for name, bucket in (facet_ranges or {}).items():
+            facets[name] = (
+                matched.select(bucket.alias(name))
+                .groupBy(name)
+                .agg(F.count("*").alias("cnt"))
+            )
+        for pivot in facet_pivots:
+            facets[",".join(pivot)] = (
+                matched.groupBy(*pivot).agg(F.count("*").alias("cnt"))
+            )
+        if json_facet is not None:
+            jf_field, jf_aggs = json_facet
+            agg_cols = [fn(F.col).alias(name) for name, fn in jf_aggs]
+            facets[f"json:{jf_field}"] = (
+                matched.groupBy(jf_field)
+                .agg(F.count("*").alias("count"), *agg_cols)
+                .orderBy(F.col("count").desc(), F.col(jf_field).asc())
+            )
 
     num_found = int(per_doc.count()) if with_num_found else None
 
@@ -424,6 +413,7 @@ def select(
         ) + ["score"]
     else:
         order = [F.col("score").desc(), F.col("doc_id").asc()]
+        out_cols = ["doc_id"] + ([collapse_field] if collapse_field else []) + ["score"]
 
     if cursor_mark is not None:
         # keyset over the ACTIVE sort spec (Solr cursorMark semantics)

@@ -1,6 +1,7 @@
-"""Function queries, mm, re-ranking, collapse, JSON facet stats
+"""Function queries, mm, re-ranking, collapse, JSON facet stats, elevation
 (the remaining /select request params of the delegated handler,
-semantic_base_config.zip -> solrconfig.xml:650-670)."""
+semantic_base_config.zip -> solrconfig.xml:650-670), each checked through
+select() against expectations computed independently from score_or_docs."""
 
 import math
 
@@ -8,18 +9,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from solr_sematic_importer_spark.operators.build import build_index
-from solr_sematic_importer_spark.operators.function_query import (
-    bm25_boosted_topk,
-    bm25_collapse_topk,
-    recip,
-    rerank_topk,
-)
+from solr_sematic_importer_spark.operators.function_query import recip
 from solr_sematic_importer_spark.operators.score import (
     bm25_topk,
     calculate_min_should_match,
-    json_facet_stats,
     score_or_docs,
 )
+from solr_sematic_importer_spark.operators.select import select
 from solr_sematic_importer_spark.sources.transcripts import synthetic_transcripts
 
 
@@ -110,9 +106,9 @@ def test_mm_scores_unchanged(idx):
 def test_boost_multiplicative(idx, fields):
     base = {r["doc_id"]: r["score"] for r in score_or_docs(idx, Q).collect()}
     lens = {r["doc_id"]: r["n_chars"] for r in fields.collect()}
-    got = bm25_boosted_topk(
-        idx, Q, fields, recip(F.col("n_chars"), 0.01, 1.0, 1.0), k=5
-    ).collect()
+    got = select(
+        idx, Q, fields=fields, boost=recip(F.col("n_chars"), 0.01, 1.0, 1.0), rows=5
+    ).docs.collect()
     for r in got:
         expect = base[r["doc_id"]] * (1.0 / (0.01 * lens[r["doc_id"]] + 1.0))
         assert math.isclose(r["score"], expect, rel_tol=1e-12)
@@ -127,9 +123,9 @@ def test_boost_multiplicative(idx, fields):
 def test_boost_additive_bf(idx, fields):
     base = {r["doc_id"]: r["score"] for r in score_or_docs(idx, Q).collect()}
     lens = {r["doc_id"]: r["n_chars"] for r in fields.collect()}
-    got = bm25_boosted_topk(
-        idx, Q, fields, F.col("n_chars") * 0.001, k=5, mode="sum"
-    ).collect()
+    got = select(
+        idx, Q, fields=fields, boost=F.col("n_chars") * 0.001, boost_mode="sum", rows=5
+    ).docs.collect()
     for r in got:
         assert math.isclose(
             r["score"], base[r["doc_id"]] + 0.001 * lens[r["doc_id"]],
@@ -144,16 +140,18 @@ def test_boost_keeps_docs_missing_from_fields(idx, fields):
     base = {r["doc_id"]: r["score"] for r in score_or_docs(idx, Q).collect()}
     some_doc = sorted(base)[0]
     holey = fields.filter(F.col("doc_id") != some_doc)
-    got_mul = bm25_boosted_topk(
-        idx, Q, holey, recip(F.col("n_chars"), 0.01, 1.0, 1.0), k=len(base)
-    ).collect()
+    got_mul = select(
+        idx, Q, fields=holey, boost=recip(F.col("n_chars"), 0.01, 1.0, 1.0),
+        rows=len(base),
+    ).docs.collect()
     assert some_doc in {r["doc_id"] for r in got_mul}
     mul_scores = {r["doc_id"]: r["score"] for r in got_mul}
     # identity boost 1.0 -> unchanged bm25 score
     assert math.isclose(mul_scores[some_doc], base[some_doc], rel_tol=1e-12)
-    got_sum = bm25_boosted_topk(
-        idx, Q, holey, F.col("n_chars") * 0.001, k=len(base), mode="sum"
-    ).collect()
+    got_sum = select(
+        idx, Q, fields=holey, boost=F.col("n_chars") * 0.001, boost_mode="sum",
+        rows=len(base),
+    ).docs.collect()
     sum_scores = {r["doc_id"]: r["score"] for r in got_sum}
     assert math.isclose(sum_scores[some_doc], base[some_doc], rel_tol=1e-12)
     # null boost VALUES (not just missing rows) also fall back to identity
@@ -161,9 +159,10 @@ def test_boost_keeps_docs_missing_from_fields(idx, fields):
         "n_chars",
         F.when(F.col("doc_id") == some_doc, F.lit(None)).otherwise(F.col("n_chars")),
     )
-    got_null = bm25_boosted_topk(
-        idx, Q, nully, recip(F.col("n_chars"), 0.01, 1.0, 1.0), k=len(base)
-    ).collect()
+    got_null = select(
+        idx, Q, fields=nully, boost=recip(F.col("n_chars"), 0.01, 1.0, 1.0),
+        rows=len(base),
+    ).docs.collect()
     null_scores = {r["doc_id"]: r["score"] for r in got_null}
     assert math.isclose(null_scores[some_doc], base[some_doc], rel_tol=1e-12)
 
@@ -182,16 +181,16 @@ def test_rerank_adjusts_only_top_n(idx):
         ((s + 2.0 * rr.get(d, 0.0), d) for s, d in head),
         key=lambda x: (-x[0], x[1]),
     )
-    got = rerank_topk(
-        idx, Q, "word", rerank_docs=5, rerank_weight=2.0, k=5
-    ).collect()
+    got = select(
+        idx, Q, rerank_query="word", rerank_docs=5, rerank_weight=2.0, rows=5
+    ).docs.collect()
     assert [r["doc_id"] for r in got] == [d for _, d in expect]
     for r, (s, _) in zip(got, expect):
         assert math.isclose(r["score"], s, rel_tol=1e-12)
 
 
 def test_rerank_query_matching_nothing_is_identity(idx):
-    got = rerank_topk(idx, Q, "zzzunseen", rerank_docs=10, k=10).collect()
+    got = select(idx, Q, rerank_query="zzzunseen", rerank_docs=10, rows=10).docs.collect()
     plain = bm25_topk(idx, Q, k=10).select("doc_id", "score").collect()
     assert [(r["doc_id"], r["score"]) for r in got] == [
         (r["doc_id"], r["score"]) for r in plain
@@ -201,7 +200,7 @@ def test_rerank_query_matching_nothing_is_identity(idx):
 # ---------------------------------------------------------------- collapse
 
 def test_collapse_keeps_top_per_group(idx, fields):
-    got = bm25_collapse_topk(idx, Q, fields, "grp", k=50).collect()
+    got = select(idx, Q, fields=fields, collapse_field="grp", rows=50).docs.collect()
     # one survivor per group value, and it's that group's best
     base = {r["doc_id"]: r["score"] for r in score_or_docs(idx, Q).collect()}
     grp = {r["doc_id"]: r["grp"] for r in fields.collect()}
@@ -218,14 +217,12 @@ def test_collapse_keeps_top_per_group(idx, fields):
 # ---------------------------------------------------------------- json facet
 
 def test_json_facet_nested_stats(idx, fields):
-    got = json_facet_stats(
-        idx,
-        Q,
-        fields,
-        "grp",
-        aggs=[("avg_len", lambda c: F.round(F.avg(c("n_chars")), 4))],
-        limit=10,
-    ).collect()
+    r = select(
+        idx, Q, fields=fields,
+        json_facet=("grp", [("avg_len", lambda c: F.round(F.avg(c("n_chars")), 4))]),
+    )
+    got = r.facets["json:grp"].collect()
+    r.release()
     matched = {r["doc_id"] for r in score_or_docs(idx, Q).collect()}
     rows = [r for r in fields.collect() if r["doc_id"] in matched]
     from collections import defaultdict
@@ -248,15 +245,13 @@ def test_json_facet_nested_stats(idx, fields):
 # ---------------------------------------------------------------- elevation
 
 def test_elevation_pins_configured_order(idx):
-    from solr_sematic_importer_spark.operators.function_query import elevated_topk
-
     base = {r["doc_id"]: r["score"] for r in score_or_docs(idx, Q).collect()}
     ranked = sorted(base.items(), key=lambda x: (-x[1], x[0]))
     organic_ids = [d for d, _ in ranked]
     # elevate: one organic non-head doc + one doc the query doesn't match
     nonmatch = max(base) + 1  # doc ids are dense; this may match nothing
     pick = organic_ids[min(5, len(organic_ids) - 1)]
-    got = elevated_topk(idx, Q, [pick, nonmatch], k=8).collect()
+    got = select(idx, Q, elevate_ids=[pick, nonmatch], rows=8).docs.collect()
     assert [r["doc_id"] for r in got[:2]] == [pick, nonmatch]
     assert got[0]["elevated"] and got[1]["elevated"]
     assert got[0]["score"] == base[pick]

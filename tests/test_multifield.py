@@ -231,3 +231,26 @@ def test_fielded_pure_negative_rewrite(mf):
     assert all(r["score"] == 1.0 for r in rows)
     # but a df=0 positive clause still blocks the rewrite
     assert fielded_query_topk(mf, "title:zzzznope -title:draft", k=10).count() == 0
+
+
+def test_fielded_nested_group(mf):
+    """A parenthesized group runs through the shared BooleanQuery combine
+    (it used to be rejected): the group's clauses add up inside it, its
+    boost multiplies its score, and a MUST group filters like any MUST
+    clause."""
+    def scores(q):
+        return {
+            r["doc_id"]: r["score"]
+            for r in fielded_query_topk(mf, q, k=4, quantize=False).collect()
+        }
+
+    flat = scores("title:spark body:spark body:cooking")
+    nested = scores("title:spark (body:spark body:cooking)")
+    assert set(nested) == set(flat) == {0, 1, 2}
+    for d, s in nested.items():
+        assert s == pytest.approx(flat[d], rel=1e-12)
+    boosted = scores("title:spark (body:spark body:cooking)^2")
+    flat_boosted = scores("title:spark body:spark^2 body:cooking^2")
+    for d, s in boosted.items():
+        assert s == pytest.approx(flat_boosted[d], rel=1e-12)
+    assert set(scores("+body:spark +(title:cooking title:pasta)")) == {1}

@@ -53,14 +53,16 @@ def test_projection_prunes_scan_columns(disk_idx):
 
 
 def test_grouped_topk_single_window_no_extra_sort(spark, disk_idx):
-    """Result grouping = one window exchange on the group key + TakeOrdered
-    for the head merge; no global sort of the full scored set."""
-    from solr_sematic_importer_spark.operators.score import bm25_grouped_topk
+    """Result grouping (select's collapse stage) = one window exchange on
+    the group key + TakeOrdered for the head merge; no global sort of the
+    full scored set."""
+    from solr_sematic_importer_spark.operators.select import select
 
     groups = disk_idx.doc_stats.select(
         "doc_id", (F.col("doc_id") % 2).cast("string").alias("grp")
     )
-    q = bm25_grouped_topk(disk_idx, "zeppelin quartz", groups, k=5)
+    q = select(disk_idx, "zeppelin quartz", fields=groups, collapse_field="grp",
+               rows=5).docs
     assert has_node(q, "Window")
     assert has_node(q, "TakeOrderedAndProject")
     plan = q._jdf.queryExecution().executedPlan().toString()
@@ -124,25 +126,25 @@ def test_boost_joins_after_reduction(spark, disk_idx):
     """The boost-field join input is the reduced match set (one row per
     doc), not postings: the plan joins doc_stats AFTER the score agg and
     still plans top-k as TakeOrdered."""
-    from solr_sematic_importer_spark.operators.function_query import (
-        bm25_boosted_topk,
-        recip,
-    )
+    from solr_sematic_importer_spark.operators.function_query import recip
+    from solr_sematic_importer_spark.operators.select import select
 
     fields = disk_idx.doc_stats.select("doc_id", "dl")
-    q = bm25_boosted_topk(
-        disk_idx, "you one word", fields, recip(F.col("dl"), 0.05, 1, 1), k=5
-    )
+    q = select(
+        disk_idx, "you one word", fields=fields,
+        boost=recip(F.col("dl"), 0.05, 1, 1), rows=5,
+    ).docs
     assert has_node(q, "TakeOrderedAndProject")
 
 
 def test_rerank_head_is_broadcast(disk_idx):
     """The rerank combine joins the request-sized top-N head broadcast —
     the rerank scan never shuffles against the full match set."""
-    from solr_sematic_importer_spark.operators.function_query import rerank_topk
+    from solr_sematic_importer_spark.operators.select import select
     from solr_sematic_importer_spark.plans.explain import plan_string
 
-    q = rerank_topk(disk_idx, "you one word", "word", rerank_docs=10, k=5)
+    q = select(disk_idx, "you one word", rerank_query="word", rerank_docs=10,
+               rows=5).docs
     plan = plan_string(q)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert has_node(q, "TakeOrderedAndProject")
@@ -150,15 +152,14 @@ def test_rerank_head_is_broadcast(disk_idx):
 
 def test_collapse_single_window(disk_idx):
     """Collapse = exactly one window function over the match set."""
-    from solr_sematic_importer_spark.operators.function_query import (
-        bm25_collapse_topk,
-    )
+    from solr_sematic_importer_spark.operators.select import select
     from solr_sematic_importer_spark.plans.explain import plan_string
 
     fields = disk_idx.doc_stats.select(
         "doc_id", (F.col("doc_id") % 5).alias("grp")
     )
-    q = bm25_collapse_topk(disk_idx, "you one word", fields, "grp", k=5)
+    q = select(disk_idx, "you one word", fields=fields, collapse_field="grp",
+               rows=5).docs
     import re
 
     plan = plan_string(q)

@@ -49,12 +49,13 @@ def test_exclude_terms(idx):
 def test_cursor_paging_reconstructs_full_ranking(idx):
     """Walking cursorMark pages concatenates to exactly the one-shot
     top-N ranking — no gaps, no repeats, across tied scores."""
-    from solr_sematic_importer_spark.operators.score import bm25_topk_cursor
+    from solr_sematic_importer_spark.operators.select import select
 
     full = bm25_topk(idx, "you one word", k=30).select("doc_id", "score").collect()
     pages, cur = [], None
     for _ in range(3):
-        page = bm25_topk_cursor(idx, "you one word", k=10, cursor=cur).collect()
+        kw = {"cursor_mark": cur} if cur is not None else {}
+        page = select(idx, "you one word", rows=10, **kw).docs.collect()
         if not page:
             break
         pages.extend(page)
@@ -67,16 +68,15 @@ def test_cursor_paging_reconstructs_full_ranking(idx):
 def test_grouped_topk_heads(spark, idx):
     """Solr result grouping: one head per group, ordered by head score,
     identical to a manual window over the full scored set."""
-    from solr_sematic_importer_spark.operators.score import (
-        bm25_grouped_topk,
-        score_or_docs,
-    )
+    from solr_sematic_importer_spark.operators.score import score_or_docs
+    from solr_sematic_importer_spark.operators.select import select
 
     # group = conv bucket parity derived from doc_id
     groups = idx.doc_stats.select(
         "doc_id", (F.col("doc_id") % 3).cast("string").alias("grp")
     )
-    got = bm25_grouped_topk(idx, "you one word", groups, k=10).collect()
+    got = select(idx, "you one word", fields=groups, collapse_field="grp",
+                 rows=10).docs.collect()
     assert 1 <= len(got) <= 3  # at most one row per group
 
     scored = {
@@ -180,16 +180,21 @@ def test_mm_conditional_specs_solr_grammar():
 
 
 def test_grouped_zero_match_schema_follows_group_dtype(spark, idx):
-    """The zero-hit empty frame derives the group column dtype from the
-    caller's groups frame (an int grp stays int), so unions across
-    queries never schema-mismatch (round-5 review)."""
-    from solr_sematic_importer_spark.operators.score import bm25_grouped_topk
+    """Result grouping through select(): the zero-hit page keeps the group
+    column dtype of the caller's groups frame (an int grp stays int), so
+    unions across queries never schema-mismatch (round-5 review)."""
+    from solr_sematic_importer_spark.operators.select import select
 
     groups_int = idx.doc_stats.select(
         "doc_id", (F.col("doc_id") % 3).alias("grp")
     )
-    hit = bm25_grouped_topk(idx, "you one word", groups_int, k=5)
-    miss = bm25_grouped_topk(idx, "zzznosuchterm", groups_int, k=5)
+
+    def grouped(q):
+        page = select(idx, q, fields=groups_int, collapse_field="grp", rows=5).docs
+        return page.select("grp", "doc_id", "score")
+
+    hit = grouped("you one word")
+    miss = grouped("zzznosuchterm")
     assert miss.count() == 0
     assert miss.schema == hit.schema
     assert hit.unionByName(miss).count() == hit.count()

@@ -1,6 +1,6 @@
 """One-call /select front door: combined requests must equal the
-composition of the standalone operators (solrconfig.xml:650-680 — the
-delegated handler's parameter surface as one executor)."""
+hand-composed stages (solrconfig.xml:650-680 — the delegated handler's
+parameter surface as one executor)."""
 
 import math
 
@@ -8,17 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from solr_sematic_importer_spark.operators.build import build_index
-from solr_sematic_importer_spark.operators.function_query import (
-    bm25_boosted_topk,
-    bm25_collapse_topk,
-    recip,
-    rerank_topk,
-)
-from solr_sematic_importer_spark.operators.score import (
-    bm25_topk,
-    facet_on_query,
-    score_or_docs,
-)
+from solr_sematic_importer_spark.operators.function_query import recip
+from solr_sematic_importer_spark.operators.score import bm25_topk, score_or_docs
 from solr_sematic_importer_spark.operators.select import select
 from solr_sematic_importer_spark.sources.transcripts import synthetic_transcripts
 
@@ -53,33 +44,6 @@ def _rows(df):
 def test_select_plain_equals_bm25_topk(idx):
     got = _rows(select(idx, Q, rows=10).docs)
     want = _rows(bm25_topk(idx, Q, k=10).select("doc_id", "score"))
-    assert got == want
-
-
-def test_select_boost_equals_boosted_topk(idx, fields):
-    r = select(idx, Q, fields=fields,
-               boost=recip(F.col("n_chars"), 0.01, 1.0, 1.0), rows=8)
-    want = _rows(bm25_boosted_topk(
-        idx, Q, fields, recip(F.col("n_chars"), 0.01, 1.0, 1.0), k=8
-    ))
-    assert _rows(r.docs) == want
-
-
-def test_select_rerank_equals_rerank_topk(idx):
-    r = select(idx, Q, rerank_query="word", rerank_docs=15,
-               rerank_weight=2.0, rows=10)
-    want = _rows(rerank_topk(idx, Q, "word", rerank_docs=15,
-                             rerank_weight=2.0, k=10))
-    assert _rows(r.docs) == want
-
-
-def test_select_collapse_equals_collapse_topk(idx, fields):
-    r = select(idx, Q, fields=fields, collapse_field="grp", rows=5)
-    got = [(x["doc_id"], x["grp"], x["score"]) for x in r.docs.collect()]
-    want = [
-        (x["doc_id"], x["grp"], x["score"])
-        for x in bm25_collapse_topk(idx, Q, fields, "grp", k=5).collect()
-    ]
     assert got == want
 
 
@@ -140,16 +104,6 @@ def test_select_elevation_composes_with_rerank(idx):
     want_tail = [d for d, _ in organic if d not in set(pin)][:8]
     assert [x["doc_id"] for x in rows[2:]] == want_tail
     assert not any(x["elevated"] for x in rows[2:])
-
-
-def test_select_facet_equals_facet_on_query(idx, fields):
-    r = select(idx, Q, fields=fields, facet_fields=("grp",), rows=5)
-    got = {x["grp"]: x["cnt"] for x in r.facets["grp"].collect()}
-    want = {
-        x["grp"]: x["cnt"]
-        for x in facet_on_query(idx, Q, fields, "grp").collect()
-    }
-    assert got == want
 
 
 def test_select_cursor_paging(idx):
@@ -298,10 +252,14 @@ def test_select_rerank_sees_post_collapse_survivors(idx, fields):
     r = select(idx, Q, fields=fields, collapse_field="grp",
                rerank_query="word", rerank_docs=2, rerank_weight=3.0, rows=10)
     # hand-compose: collapse survivors, then rerank the top-2 of THEM
-    survivors = [
-        (x["doc_id"], x["grp"], x["score"])
-        for x in bm25_collapse_topk(idx, Q, fields, "grp", k=100).collect()
-    ]
+    base = {x["doc_id"]: x["score"] for x in score_or_docs(idx, Q).collect()}
+    grp = {x["doc_id"]: x["grp"] for x in fields.collect()}
+    best = {}
+    for d, s in base.items():
+        g = grp[d]
+        if g not in best or (s, -d) > (best[g][2], -best[g][0]):
+            best[g] = (d, g, s)
+    survivors = sorted(best.values(), key=lambda x: (-x[2], x[0]))
     rr = {x["doc_id"]: x["score"] for x in score_or_docs(idx, "word").collect()}
     head = survivors[:2]
     adjusted = [
@@ -504,3 +462,58 @@ def test_select_empty_facets_match_nonempty_schema(idx, fields):
             hit.facets[k].count()
     hit.release()
     miss.release()
+
+
+NO_MATCH = "zzznosuchterm"
+
+
+@pytest.mark.parametrize(
+    "kind", ["plain", "boost", "collapse_int", "sort", "collapse_sort", "elevate", "rerank"]
+)
+def test_select_zero_hit_page_schema_matches_hit(idx, fields, kind):
+    """A zero-hit request runs the same stages over an empty match set, so
+    its page has EXACTLY the matching path's schema: the collapse key keeps
+    its dtype from ``fields`` (a bigint key stays bigint), ``sort_field``
+    stays in the page, and elevation keeps its elevated/rank columns."""
+    flds = fields.withColumn("grp_id", F.col("doc_id") % 3)
+    kw = {
+        "plain": {},
+        "boost": {"fields": flds, "boost": recip(F.col("n_chars"), 0.01, 1.0, 1.0)},
+        "collapse_int": {"fields": flds, "collapse_field": "grp_id"},
+        "sort": {"fields": flds, "sort_field": "n_chars"},
+        "collapse_sort": {"fields": flds, "collapse_field": "grp_id", "sort_field": "n_chars"},
+        "elevate": {"elevate_ids": [1, 2]},
+        "rerank": {"rerank_query": "word"},
+    }[kind]
+    hit = select(idx, Q, rows=5, **kw).docs
+    miss = select(idx, NO_MATCH, rows=5, **kw).docs
+    assert miss.schema == hit.schema
+    assert miss.count() == (2 if kind == "elevate" else 0)
+    assert hit.unionByName(miss).count() == hit.count() + miss.count()
+
+
+def test_select_elevation_pins_on_zero_hits(spark, idx):
+    """forceElevation on a query that matches nothing: the elevated docs
+    that survive fq, exclude and deletes are still pinned, in configured
+    order, with score 0.0, elevated=True and dense ranks."""
+    import dataclasses
+
+    word_docs = {x["doc_id"] for x in score_or_docs(idx, "word").collect()}
+    excluded = min(d for d in word_docs if d % 2 == 0)
+    deleted, kept_a, kept_b = [
+        d for d in range(idx.n_docs) if d % 2 == 0 and d not in word_docs
+    ][:3]
+    odd = next(d for d in range(idx.n_docs) if d % 2 == 1 and d not in word_docs)
+    live = dataclasses.replace(
+        idx, deletes=spark.createDataFrame([(deleted,)], "doc_id long")
+    )
+    r = select(live, NO_MATCH, fq=F.col("doc_id") % 2 == 0, exclude="word",
+               elevate_ids=[kept_b, odd, excluded, deleted, kept_a], rows=10)
+    got = [(x["doc_id"], x["score"], x["elevated"], x["rank"]) for x in r.docs.collect()]
+    assert got == [(kept_b, 0.0, True, 0), (kept_a, 0.0, True, 1)]
+
+
+def test_select_rejects_unknown_boost_mode(idx, fields):
+    """An unknown boost_mode is a 400, never a silent fallback to sum."""
+    with pytest.raises(ValueError, match="boost_mode"):
+        select(idx, Q, fields=fields, boost=F.col("n_chars"), boost_mode="multiplyy")
