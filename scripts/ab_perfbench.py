@@ -1,0 +1,122 @@
+#!/usr/bin/env python3
+"""Interleaved A/B of ``perfbench/run.py`` between a git ref and this tree.
+
+The host drifts 2-3x between identical runs, so a gain under 2x is only
+visible when both trees run side by side in time. This script exports a
+git ref into a temporary directory, then for each seed runs
+
+    python3 perfbench/run.py --workload W --seed s --seconds 15 --trace 0
+
+once in that copy and once in this tree, one after the other, flipping
+which tree goes first from seed to seed. It prints each pair, then the
+median over pairs of the ratio (this tree / ref) of every end-to-end
+metric and of each request kind's p50. A ratio below 1 means this tree
+is lower (faster, for a time).
+
+Usage:
+    python3 scripts/ab_perfbench.py --ref HEAD~1 --workload query_mix --seeds 1-5
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def export_ref(ref: str, dest: str) -> None:
+    """Write the tree of ``ref`` into ``dest`` (no .git, no worktree)."""
+    archive = subprocess.run(
+        ["git", "-C", REPO, "archive", "--format=tar", ref],
+        capture_output=True, check=True,
+    ).stdout
+    subprocess.run(["tar", "-x", "-C", dest], input=archive, check=True)
+
+
+def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
+    """One untraced perfbench run in ``tree`` -> its metrics, per-kind p50s
+    and correctness."""
+    proc = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+        cwd=tree, capture_output=True, text=True,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
+    if len(lines) < 2:
+        sys.stderr.write(proc.stdout[-3000:] + proc.stderr[-3000:])
+        raise SystemExit(f"perfbench run in {tree} (seed {seed}) printed no result")
+    report = json.loads(lines[-2])["report"]
+    last = json.loads(lines[-1])
+    values = {name: m["value"] for name, m in last["metrics"].items()}
+    for key, fig in report.items():
+        if key.endswith("_p50_s") and isinstance(fig, dict):
+            values[key] = fig["value"]
+    return {"values": values, "correct": last["correct"], "failed": last["failed"]}
+
+
+def parse_seeds(spec: str) -> list[int]:
+    if "-" in spec:
+        lo, hi = spec.split("-")
+        return list(range(int(lo), int(hi) + 1))
+    return [int(s) for s in spec.split(",")]
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--ref", required=True, help="git ref to compare against")
+    ap.add_argument("--workload", default="query_mix")
+    ap.add_argument("--seeds", default="1-5", help="'1-5' or '1,3,7'")
+    ap.add_argument("--seconds", type=float, default=15)
+    ap.add_argument("--out", default=None, help="also write the pairs as JSON here")
+    args = ap.parse_args()
+
+    ref_tree = tempfile.mkdtemp(prefix="ab_perfbench_")
+    pairs = []
+    try:
+        export_ref(args.ref, ref_tree)
+        for i, seed in enumerate(parse_seeds(args.seeds)):
+            order = (("ref", ref_tree), ("head", REPO))
+            got = {label: run_once(tree, args.workload, seed, args.seconds)
+                   for label, tree in (order if i % 2 == 0 else order[::-1])}
+            pairs.append({"seed": seed, "first": "ref" if i % 2 == 0 else "head", **got})
+            ref, head = got["ref"]["values"], got["head"]["values"]
+            print(f"seed {seed} ({pairs[-1]['first']} first) "
+                  f"failed ref/head {got['ref']['failed']}/{got['head']['failed']}: "
+                  + ", ".join(f"{k} {ref[k]:.4g} -> {head[k]:.4g}"
+                              for k in ref if k in head), flush=True)
+    finally:
+        shutil.rmtree(ref_tree, ignore_errors=True)
+
+    names = [k for k in pairs[0]["ref"]["values"] if k in pairs[0]["head"]["values"]]
+    ratios = {
+        k: statistics.median(
+            p["head"]["values"][k] / p["ref"]["values"][k] for p in pairs
+        )
+        for k in names
+    }
+    for k, r in ratios.items():
+        print(f"median ratio head/ref {k}: {r:.3f}")
+    summary = {
+        "ref": args.ref,
+        "workload": args.workload,
+        "seconds": args.seconds,
+        "median_ratio_head_over_ref": ratios,
+        "all_correct": all(p[s]["correct"] for p in pairs for s in ("ref", "head")),
+        "pairs": pairs,
+    }
+    print(json.dumps(summary))
+    if args.out:
+        with open(args.out, "w", encoding="utf-8") as fh:
+            json.dump(summary, fh, indent=2)
+    return 0 if summary["all_correct"] else 1
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -51,6 +51,8 @@ from .score import analyze_query
 
 DEFAULT_BUCKET_BITS = 14  # 16384-doc buckets: skew bound + pruning unit
 
+PAGE_SCHEMA = "doc_id long, score double"
+
 BLOCKS_SCHEMA = (
     "term string, bucket_id long, block_id int, first_doc long, last_doc long, "
     "cnt int, max_tf int, sum_tf long, max_impact double, "
@@ -226,6 +228,30 @@ def write_blocks(blocks: DataFrame, path: str) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _driver_page(spark, rows) -> DataFrame:
+    """(doc_id, score) pairs -> the page DataFrame. Built from an Arrow
+    table it is a LocalRelation, which collects without a Spark job; a
+    frame built from a Python list is an RDD scan, one job per collect."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({
+            "doc_id": pa.array([int(d) for d, _ in rows], pa.int64()),
+            "score": pa.array([float(s) for _, s in rows], pa.float64()),
+        }),
+        PAGE_SCHEMA,
+    )
+
+
+def _bucket_span(index: InvertedIndex) -> "int | None":
+    """Buckets the index's doc-id range covers; None when the bucket width
+    or the range is not recorded (indexes written before either existed)."""
+    if None in (index.bucket_bits, index.min_doc_id, index.max_doc_id):
+        return None
+    bb = index.bucket_bits
+    return (index.max_doc_id >> bb) - (index.min_doc_id >> bb) + 1
+
+
 def bm25_topk_wand(
     index: InvertedIndex,
     query: str,
@@ -237,11 +263,14 @@ def bm25_topk_wand(
 ) -> DataFrame:
     """Exact BM25 top-k over the compressed block index with bucket-level
     block-max pruning. Returns (doc_id, score) like ``bm25_topk``
-    (quantized mode) — bit-identical scores, same tie-break."""
+    (quantized mode) — bit-identical scores, same tie-break. ``k=0``
+    returns an empty page; a negative ``k`` raises ``ValueError``."""
     spark = index.postings_flat.sparkSession
     blocks = index.postings_blocks
     if blocks is None:
         raise ValueError("call build_block_postings(index) first")
+    if k < 0:
+        raise ValueError(f"k must be >= 0, got {k}")
     if index.impact_k1 is not None and (
         float(k1) != index.impact_k1 or float(b) != index.impact_b
     ):
@@ -253,10 +282,9 @@ def bm25_topk_wand(
             f"b={index.impact_b}; query with those values or re-encode "
             f"via build_block_postings(index, k1={k1}, b={b})"
         )
-    out_schema = "doc_id long, score double"
     terms = analyze_query(query, index.profile)
-    if not terms or index.n_docs == 0:
-        return spark.createDataFrame([], out_schema)
+    if k == 0 or not terms or index.n_docs == 0:
+        return _driver_page(spark, [])
 
     counts = Counter(terms)
     # index-level df memo (the analog of Lucene's cached term dictionary):
@@ -269,7 +297,7 @@ def bm25_topk_wand(
         if t in dfs
     }
     if not weights:
-        return spark.createDataFrame([], out_schema)
+        return _driver_page(spark, [])
     avgdl = index.avgdl
 
     cand = blocks.filter(F.col("term").isin(list(weights)))
@@ -361,20 +389,29 @@ def bm25_topk_wand(
             nz = nz[np.argsort(-scores[nz], kind="stable")[:k]]
         return pd.DataFrame({"doc_id": nz + lo, "score": scores[nz]})
 
-    # Fast path: when the candidate posting count (known exactly from df)
-    # is small, the UB-ordering pass costs more than it saves — score every
-    # candidate bucket in ONE job. Rare-term queries are 1 Spark job warm.
-    if fast_path and sum(dfs[t] for t in weights) <= 64 * k * max(1, len(weights)) * 32:
+    # One scoring job for every candidate bucket whenever the UB loop
+    # below could not skip one, or would not pay for itself:
+    # - the index's doc-id range spans at most bucket_batch buckets: the
+    #   loop's first round (theta = -inf) would take every candidate bucket
+    #   and its second would find none, so both paths score the same
+    #   buckets with the same kernel and return the same page;
+    # - the candidate posting count (known exactly from df) is small, so
+    #   ordering buckets by bound costs more than scoring them all.
+    # A warm, df-memoized request here runs 2 Spark jobs (the bucket
+    # shuffle's map stage and the scoring stage); the page is driver-local.
+    span = _bucket_span(index)
+    if fast_path and (
+        (span is not None and span <= bucket_batch)
+        or sum(dfs[t] for t in weights) <= 64 * k * max(1, len(weights)) * 32
+    ):
         scored_df = cand.groupBy("bucket_id").applyInPandas(
-            lambda _key, g: score_bucket(g), "doc_id long, score double"
+            lambda _key, g: score_bucket(g), PAGE_SCHEMA
         )
         rows = sorted(
             ((float(r["score"]), int(r["doc_id"])) for r in scored_df.collect()),
             key=lambda x: (-x[0], x[1]),
         )[:k]
-        return spark.createDataFrame(
-            [(d, s) for s, d in rows], out_schema
-        )
+        return _driver_page(spark, [(d, s) for s, d in rows])
 
     cand = cand.persist()
     wdf = spark.createDataFrame(list(weights.items()), "term string, w double")
@@ -439,9 +476,7 @@ def bm25_topk_wand(
         scored_df = (
             cand.filter(F.col("bucket_id").isin(batch))
             .groupBy("bucket_id")
-            .applyInPandas(
-                lambda _key, g: score_bucket(g), "doc_id long, score double"
-            )
+            .applyInPandas(lambda _key, g: score_bucket(g), PAGE_SCHEMA)
         )
         for r in scored_df.collect():
             item = (r["score"], -int(r["doc_id"]))
@@ -453,6 +488,4 @@ def bm25_topk_wand(
     cand.unpersist()
 
     result = sorted(((s, -nd) for s, nd in heap), key=lambda x: (-x[0], x[1]))
-    return spark.createDataFrame(
-        [(int(d), float(s)) for s, d in result], out_schema
-    )
+    return _driver_page(spark, [(d, s) for s, d in result])

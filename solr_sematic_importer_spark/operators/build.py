@@ -32,6 +32,19 @@ from typing import Iterator, Sequence
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
+from ..functions.similarity import B_DEFAULT, K1_DEFAULT
+
+
+def doc_stats_aggs() -> "list[Column]":
+    """Corpus stats every build takes in ONE aggregate: n (doc count),
+    s (sum of dl) and the doc-id range lo/hi (null on an empty index)."""
+    return [
+        F.count("*").alias("n"),
+        F.coalesce(F.sum("dl"), F.lit(0)).alias("s"),
+        F.min("doc_id").alias("lo"),
+        F.max("doc_id").alias("hi"),
+    ]
+
 
 # Serialized cache: the tokenized corpus as deserialized Java objects (one
 # String per token) causes GC thrash that *inverts* scaling — local[32]
@@ -194,6 +207,10 @@ class InvertedIndex:
     # bm25_topk_wand raises on a mismatch.
     impact_k1: float | None = None
     impact_b: float | None = None
+    # inclusive doc-id range the index may hold (None: not recorded). WAND
+    # reads it to tell when its upper-bound loop could not skip a bucket.
+    min_doc_id: int | None = None
+    max_doc_id: int | None = None
     # True when postings_flat is a lazy DECODE of postings_blocks (blocks-
     # only persistence): a filter on the decoded view cannot be pushed
     # through the Python decode stage, so term-restricted access must go
@@ -341,9 +358,7 @@ def build_index(
     )
     term_stats.persist()
 
-    stats = analyzed.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-    ).first()
+    stats = analyzed.agg(*doc_stats_aggs()).first()
     # `analyzed` is now materialized in the cache; its ordering-pass parent
     # is no longer needed
     if ordered_src is not None:
@@ -357,6 +372,8 @@ def build_index(
         sum_dl=int(stats["s"]),
         profile=profile,
         key_cols=tuple(key_cols),
+        min_doc_id=stats["lo"],
+        max_doc_id=stats["hi"],
         # doc-major term vectors come free from the cached analyze output:
         # MoreLikeThis fetches ONE doc's vector — a point lookup here, vs a
         # full scan of term-ordered postings (VERDICT r2 "what's wrong" #2)
@@ -437,9 +454,7 @@ def build_and_write_index(
     if ordered_src is not None:  # analyzed is materialized by the write
         ordered_src.unpersist()
     doc_stats = spark.read.parquet(f"{path}/doc_stats")
-    stats = doc_stats.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-    ).first()
+    stats = doc_stats.agg(*doc_stats_aggs()).first()
     n_docs, sum_dl = int(stats["n"]), int(stats["s"])
     avgdl = sum_dl / n_docs if n_docs else 0.0
 
@@ -455,7 +470,9 @@ def build_and_write_index(
     # encoder output is already hash-grouped by (term, bucket) and sorted
     # within partitions — write directly, no second shuffle (parquet
     # row-group min/max on term still prunes query-term scans)
-    blocks = encode_flat_to_blocks(flat, avgdl, bucket_bits=bucket_bits)
+    blocks = encode_flat_to_blocks(
+        flat, avgdl, bucket_bits=bucket_bits, k1=K1_DEFAULT, b=B_DEFAULT
+    )
     blocks.write.mode("overwrite").parquet(f"{path}/postings_blocks")
     blocks_r = spark.read.parquet(f"{path}/postings_blocks")
 
@@ -490,11 +507,21 @@ def build_and_write_index(
             "profile": profile,
             "key_cols": ",".join(key_cols),
             "impacts_avgdl": repr(avgdl),
+            "impact_k1": repr(float(K1_DEFAULT)),
+            "impact_b": repr(float(B_DEFAULT)),
             "bucket_bits": str(bucket_bits),
+            **doc_id_range_meta(stats["lo"], stats["hi"]),
         },
     )
     analyzed.unpersist()
     return read_index(spark, path)
+
+
+def doc_id_range_meta(lo: "int | None", hi: "int | None") -> dict:
+    """``index_meta`` keys for the doc-id range (none for an empty index)."""
+    if lo is None or hi is None:
+        return {}
+    return {"min_doc_id": str(int(lo)), "max_doc_id": str(int(hi))}
 
 
 def write_meta_file(spark: SparkSession, path: str, meta: dict) -> None:
@@ -621,6 +648,7 @@ def write_index(
         meta["impact_b"] = repr(float(index.impact_b))
     if index.bucket_bits is not None:
         meta["bucket_bits"] = str(int(index.bucket_bits))
+    meta.update(doc_id_range_meta(index.min_doc_id, index.max_doc_id))
     write_meta_file(index.doc_stats.sparkSession, path, meta)
 
 
@@ -684,5 +712,7 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
         impact_k1=float(meta["impact_k1"]) if "impact_k1" in meta else None,
         impact_b=float(meta["impact_b"]) if "impact_b" in meta else None,
         bucket_bits=int(meta["bucket_bits"]) if "bucket_bits" in meta else None,
+        min_doc_id=int(meta["min_doc_id"]) if "min_doc_id" in meta else None,
+        max_doc_id=int(meta["max_doc_id"]) if "max_doc_id" in meta else None,
         flat_from_blocks=flat_from_blocks,
     )

@@ -51,6 +51,8 @@ from .block_postings import (
 from .build import (
     InvertedIndex,
     build_index,
+    doc_id_range_meta,
+    doc_stats_aggs,
     hadoop_delete,
     hadoop_list_dirs,
     write_meta_file,
@@ -377,6 +379,10 @@ def read_segmented_index(
         impacts_avgdl=float(_enc_avgdls(man).min()),
         impact_k1=enc_params[0] if enc_params else None,
         impact_b=enc_params[1] if enc_params else None,
+        # segments own disjoint id ranges from their offset up to the
+        # watermark; the union's range bounds every live doc id
+        min_doc_id=int(man["doc_id_offset"].min()),
+        max_doc_id=_doc_id_watermark(man) - 1,
         flat_from_blocks=flat_from_blocks,
         # register the persisted frame so release() can free it (one
         # leaked cache per read otherwise in micro-batch loops)
@@ -661,9 +667,7 @@ def compact(
         .write.mode("overwrite")
         .parquet(f"{out_dir}/term_stats")
     )
-    stats = doc_stats_r.agg(
-        F.count("*").alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-    ).first()
+    stats = doc_stats_r.agg(*doc_stats_aggs()).first()
     n_docs, sum_dl = int(stats["n"]), int(stats["s"])
     write_meta_file(
         spark,
@@ -677,6 +681,7 @@ def compact(
             "impact_k1": repr(float(k1)),
             "impact_b": repr(float(b)),
             "bucket_bits": str(bucket_bits),
+            **doc_id_range_meta(stats["lo"], stats["hi"]),
         },
     )
 

@@ -15,7 +15,14 @@ standalone callers issue a ``select`` call and reshape its page.
 Stage order follows Solr's own execution:
 
 1. main-query scoring (``score.score_or_docs``: OR semantics + ``mm``),
-   ``fq`` predicate and prohibited terms applied pre-ranking;
+   ``fq`` predicate and prohibited terms applied pre-ranking. A page-only
+   request — nothing but ``q``/``rows`` (plus ``hl``/``debug``, which
+   attach to the page) over a block index whose impacts were encoded with
+   the request's ``k1``/``b`` — is served by block-max WAND
+   (``block_postings.bm25_topk_wand``) instead: the same page bit for
+   bit, from one scoring job instead of an aggregate over every match.
+   This is Lucene's rule: blocks are skipped only when the request needs
+   no exact hit count;
 2. ``boost=`` (edismax multiplicative) / ``bf=`` (additive) over stored
    fields — LEFT join, identity default for missing/null fields;
 3. ``fq={!collapse field=X}``: one window per collapse key, survivors only.
@@ -55,6 +62,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT
+from .block_postings import bm25_topk_wand
 from .build import InvertedIndex
 from .highlight import highlight as _highlight
 from .score import analyze_query, score_or_docs, score_partials
@@ -196,6 +204,22 @@ def select(
         return SelectResponse(docs=page, facets=facets, num_found=num_found,
                               highlighting=hl_df, explain=explain_df,
                               _cached=cached[0])
+
+    # 1. a page-only request is served by WAND (module docstring, stage 1)
+    page_only = (
+        quantize
+        and index.postings_blocks is not None
+        and (index.impact_k1, index.impact_b) == (float(k1), float(b))
+        # WAND refuses to bucket deletes without the build's bucket width
+        and (index.deletes is None or index.bucket_bits is not None)
+        and rows >= 0
+        and fq is None and not exclude and mm is None
+        and boost is None and rerank_query is None and not collapse_field
+        and not elevate_ids and not any_facet and not sort_field
+        and not start and cursor_mark is None and not with_num_found
+    )
+    if page_only:
+        return _finish(bm25_topk_wand(index, q, k=rows, k1=k1, b=b), {}, None)
 
     per_doc = score_or_docs(
         index, q, k1=k1, b=b, quantize=quantize,
