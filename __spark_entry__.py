@@ -699,14 +699,9 @@ def q_bm25_wand(spark, sf_dir):
     dl to the largest representable value <= dl, reproducing the WAND
     scores exactly (WAND == exhaustive-quantized bit-identity is also
     test-asserted in tests/test_block_postings.py)."""
-    from solr_sematic_importer_spark.operators.block_postings import (
-        bm25_topk_wand,
-        build_block_postings,
-    )
+    from solr_sematic_importer_spark.operators.block_postings import bm25_topk_wand
 
     idx = _doc_index(spark, sf_dir)
-    if getattr(idx, "postings_blocks", None) is None:
-        build_block_postings(idx, bucket_bits=10)
     top = bm25_topk_wand(idx, Q_OR, k=10)
     return top.select("doc_id", F.round("score", 4).alias("score"))
 

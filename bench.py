@@ -194,15 +194,12 @@ def main() -> None:
         "bm25w", lambda: bm25_topk_wand(idx, queries[1], k=10).collect()
     )
 
-    idx.postings_flat.persist().count()  # flat view for the conjunction path
     timed(
         "bm25_conjunction",
         lambda: bm25_conjunction_topk(idx, "you one he", k=10).collect(),
     )
     # transcripts-index section done: release its cached frames so later
-    # sections (and the gated compact cycle) run against a clean heap —
-    # at sf1 the flat postings alone are tens of GB deserialized.
-    idx.postings_flat.unpersist()
+    # sections (and the gated compact cycle) run against a clean heap
     idx.postings_blocks.unpersist()
     idx.term_stats.unpersist()
 
@@ -213,7 +210,7 @@ def main() -> None:
     def _build_docs():
         di = build_index(docs, text_col="text", key_cols=("doc_id",),
                          profile="simple", doc_id_col="doc_id")
-        di.postings_flat.count()
+        di.postings_blocks.count()
         return di
 
     didx = timed("index_build_documents", _build_docs)

@@ -13,8 +13,21 @@ median over pairs of the ratio (this tree / ref) of every end-to-end
 metric and of each request kind's p50. A ratio below 1 means this tree
 is lower (faster, for a time).
 
+Last it prints one verdict per end-to-end metric, judged against the
+``better`` direction and relative ``bound`` that ``BENCHMARK.json`` declares
+for it:
+
+* ``no regression`` -- every run of this tree reads better than every run
+  of the ref, or the medians differ in the worse direction by at most the
+  bound;
+* ``unresolved`` -- the ref's own interquartile spread (quartiles by
+  ``statistics.quantiles``' default, exclusive method) is wider than the
+  bound and the two sets of runs overlap, so the pairs cannot tell;
+* ``regressed`` -- otherwise.
+
 Usage:
     python3 scripts/ab_perfbench.py --ref HEAD~1 --workload query_mix --seeds 1-5
+    make ab REF=HEAD~1 WORKLOAD=query_mix SEEDS=1-6
 """
 
 from __future__ import annotations
@@ -61,6 +74,23 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     return {"values": values, "correct": last["correct"], "failed": last["failed"]}
 
 
+def verdict(ref: list[float], head: list[float], better: str, bound: float) -> str:
+    """Judge one end-to-end metric from its paired runs (module docstring)."""
+    sign = 1.0 if better == "lower" else -1.0  # sign * value: lower is better
+    r, h = [sign * v for v in ref], [sign * v for v in head]
+    if max(h) < min(r):
+        return "no regression"
+    ref_med = statistics.median(ref)
+    q1, _, q3 = statistics.quantiles(ref, n=4) if len(ref) > 1 else (ref[0],) * 3
+    spread = (q3 - q1) / abs(ref_med) if ref_med else 0.0
+    overlap = max(min(r), min(h)) <= min(max(r), max(h))
+    if spread > bound and overlap:
+        return "unresolved"
+    worse = ((statistics.median(h) - statistics.median(r)) / abs(ref_med)
+             if ref_med else 0.0)
+    return "no regression" if worse <= bound else "regressed"
+
+
 def parse_seeds(spec: str) -> list[int]:
     if "-" in spec:
         lo, hi = spec.split("-")
@@ -103,11 +133,23 @@ def main() -> int:
     }
     for k, r in ratios.items():
         print(f"median ratio head/ref {k}: {r:.3f}")
+    with open(os.path.join(REPO, "BENCHMARK.json"), encoding="utf-8") as fh:
+        end_to_end = json.load(fh)["end_to_end"]
+    verdicts = {}
+    for m in end_to_end:
+        if m["name"] not in names:
+            continue
+        ref_v = [p["ref"]["values"][m["name"]] for p in pairs]
+        head_v = [p["head"]["values"][m["name"]] for p in pairs]
+        verdicts[m["name"]] = verdict(ref_v, head_v, m["better"], m["bound"])
+        print(f"verdict {args.workload} {m['name']} ({m['better']} is better, "
+              f"bound {m['bound']}, {len(pairs)} pairs): {verdicts[m['name']]}")
     summary = {
         "ref": args.ref,
         "workload": args.workload,
         "seconds": args.seconds,
         "median_ratio_head_over_ref": ratios,
+        "verdicts": verdicts,
         "all_correct": all(p[s]["correct"] for p in pairs for s in ("ref", "head")),
         "pairs": pairs,
     }

@@ -30,6 +30,13 @@ import numpy as np
 
 BLOCK_SIZE = 128
 
+# block-row columns, in the order of block_postings.BLOCKS_SCHEMA
+BLOCK_COLUMNS = (
+    "term", "bucket_id", "block_id", "first_doc", "last_doc",
+    "cnt", "max_tf", "sum_tf", "max_impact",
+    "doc_bytes", "tf_bytes", "norm_bytes",
+)
+
 # ---------------------------------------------------------------------------
 # LEB128 varint, vectorized
 # ---------------------------------------------------------------------------
@@ -140,19 +147,11 @@ def encode_partition_blocks(
     per-group pandas/applyInPandas dispatch overhead that dominates when a
     partition holds ~10^6 small term groups (the long tail of the vocab).
 
-    Returns a dict of columns ready for pd.DataFrame, matching
-    BLOCKS_SCHEMA order (term..norm_bytes).
+    Returns a dict of columns keyed by ``BLOCK_COLUMNS``.
     """
     n = doc_ids.size
     if n == 0:
-        return {
-            k: []
-            for k in (
-                "term", "bucket_id", "block_id", "first_doc", "last_doc",
-                "cnt", "max_tf", "sum_tf", "max_impact",
-                "doc_bytes", "tf_bytes", "norm_bytes",
-            )
-        }
+        return {k: [] for k in BLOCK_COLUMNS}
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
     norm_bytes = np.asarray(norm_bytes, dtype=np.uint8)
@@ -214,6 +213,53 @@ def encode_partition_blocks(
     }
 
 
+def encode_block_batch(
+    term_ids: np.ndarray,
+    vocab,
+    buckets: np.ndarray,
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    norm_bytes: np.ndarray,
+    avgdl: float,
+    k1: float,
+    b: float,
+):
+    """Postings sorted by (term, bucket, doc_id) -> one Arrow batch of
+    block rows (``BLOCK_COLUMNS``). ``term_ids`` index into ``vocab``, an
+    Arrow string array. Each posting's impact is the idf-independent BM25
+    factor ``tf / (tf + k1*(1-b+b*dl/avgdl))`` on the Lucene-quantized dl
+    its norm byte decodes to — what Solr scores with, so the block maxima
+    bound the exhaustive scorer's terms. The build encode and the compact
+    re-encode both pack through here, so a block row is the same bytes
+    whichever wrote it."""
+    import pyarrow as pa
+
+    from .similarity import LENGTH_TABLE
+
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dlq = LENGTH_TABLE[norm_bytes].astype(np.float64)
+    impacts = tfs / (tfs + k1 * (1.0 - b + b * dlq / avgdl))
+    cols = encode_partition_blocks(term_ids, buckets, doc_ids, tfs, norm_bytes, impacts)
+    return pa.RecordBatch.from_arrays(
+        [
+            # per-block term rows are small: plain 32-bit-offset strings
+            vocab.take(pa.array(cols["term"], type=pa.int32())).cast(pa.string()),
+            pa.array(np.asarray(cols["bucket_id"], dtype=np.int64)),
+            pa.array(np.asarray(cols["block_id"], dtype=np.int32)),
+            pa.array(np.asarray(cols["first_doc"], dtype=np.int64)),
+            pa.array(np.asarray(cols["last_doc"], dtype=np.int64)),
+            pa.array(np.asarray(cols["cnt"], dtype=np.int32)),
+            pa.array(np.asarray(cols["max_tf"], dtype=np.int32)),
+            pa.array(np.asarray(cols["sum_tf"], dtype=np.int64)),
+            pa.array(np.asarray(cols["max_impact"], dtype=np.float64)),
+            pa.array(cols["doc_bytes"], type=pa.binary()),
+            pa.array(cols["tf_bytes"], type=pa.binary()),
+            pa.array(cols["norm_bytes"], type=pa.binary()),
+        ],
+        names=list(BLOCK_COLUMNS),
+    )
+
+
 def decode_block(
     first_doc: int, doc_bytes: bytes, tf_bytes: bytes, norm_b: bytes
 ) -> Tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -223,3 +269,41 @@ def decode_block(
     tfs = varint_decode(tf_bytes).astype(np.int64)
     norms = np.frombuffer(norm_b, dtype=np.uint8)
     return docs, tfs, norms
+
+
+def decode_block_batch(batch):
+    """An Arrow batch of block rows (``term, first_doc, cnt, doc_bytes,
+    tf_bytes, norm_bytes``) -> one Arrow batch of postings
+    ``(term, doc_id, tf, dl_quant)``, in block order. One pass over the
+    whole batch, no loop over blocks: LEB128 is self-delimiting, so each
+    varint column decodes as ONE concatenated buffer, and the per-block
+    ``cnt`` splits the doc gaps back into blocks for a segmented prefix
+    sum (``decode_block`` per row, vectorized)."""
+    import pyarrow as pa
+
+    from .similarity import LENGTH_TABLE
+
+    def joined(name: str) -> bytes:
+        return b"".join(batch.column(name).to_pylist())
+
+    cnt = batch.column("cnt").to_numpy().astype(np.int64)
+    gaps = varint_decode(joined("doc_bytes")).astype(np.int64)
+    tfs = varint_decode(joined("tf_bytes")).astype(np.int64)
+    norms = np.frombuffer(joined("norm_bytes"), dtype=np.uint8)
+    if not gaps.size == tfs.size == norms.size == int(cnt.sum()):
+        raise ValueError("block rows decode to a different posting count than cnt")
+    csum = np.cumsum(gaps)
+    # doc = first_doc + (running gap sum since the block's first posting)
+    before = np.concatenate(([0], csum))[np.cumsum(cnt) - cnt]
+    first = batch.column("first_doc").to_numpy().astype(np.int64)
+    docs = np.repeat(first - before, cnt) + csum
+    rows = pa.array(np.repeat(np.arange(len(cnt), dtype=np.int64), cnt))
+    return pa.RecordBatch.from_arrays(
+        [
+            batch.column("term").take(rows),
+            pa.array(docs),
+            pa.array(tfs),
+            pa.array(LENGTH_TABLE[norms].astype(np.int64)),
+        ],
+        names=["term", "doc_id", "tf", "dl_quant"],
+    )

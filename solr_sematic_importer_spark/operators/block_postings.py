@@ -1,8 +1,14 @@
-"""Compressed block postings + block-max WAND top-k (the scale path).
+"""Compressed block postings + block-max WAND top-k.
 
-The reference gets posting storage and WAND pruning for free from Lucene
-(delegated; ``semantic_base_config.zip -> solrconfig.xml:650-655`` serves
-BM25 top-k). We re-build both Spark-first:
+Blocks are the engine's only postings format: ``build_index`` and
+``build_and_write_index`` both encode them through ``encode_flat_to_blocks``
+(in memory or on disk), segments and compaction store nothing else, and
+every scorer reads them — the exhaustive ones through
+``InvertedIndex.flat_terms`` (a decode of the query's terms only), top-k
+through ``bm25_topk_wand``. The reference gets posting storage and WAND
+pruning for free from Lucene (delegated; ``semantic_base_config.zip ->
+solrconfig.xml:38,650-655``: one postings format per segment, BM25 top-k).
+We re-build both Spark-first:
 
 Construction — "salting by doc bucket" (SURVEY §4.1 skew handling):
     The doc-id space is cut into aligned buckets of ``2**bucket_bits`` docs
@@ -66,7 +72,6 @@ def encode_flat_to_blocks(
     bucket_bits: int = DEFAULT_BUCKET_BITS,
     k1: float = K1_DEFAULT,
     b: float = B_DEFAULT,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """(term, doc_id, tf, dl) rows -> compressed block rows.
 
@@ -82,16 +87,15 @@ def encode_flat_to_blocks(
     code; impacts (and therefore WAND bounds) use the decoded quantized
     dl, matching what Solr's BM25 actually scores with.
     """
-    spark = flat.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-
     with_bucket = flat.withColumn(
         "bucket_id", F.shiftright(F.col("doc_id"), bucket_bits)
     ).select("term", "bucket_id", "doc_id", "tf", "dl")
-    part = with_bucket.repartition(
-        num_partitions, "term", "bucket_id"
-    ).sortWithinPartitions("term", "bucket_id", "doc_id")
+    # no explicit partition count: AQE coalesces the exchange, so a small
+    # build (one segment append) writes one or two block files, not one
+    # per spark.sql.shuffle.partitions
+    part = with_bucket.repartition("term", "bucket_id").sortWithinPartitions(
+        "term", "bucket_id", "doc_id"
+    )
     # (a pure hash shuffle + NumPy lexsort in the kernel was tried and
     # measured 2.7x SLOWER end-to-end: without the sort requirement AQE
     # reshapes the exchange into fewer, larger partitions and the Python
@@ -108,99 +112,61 @@ def encode_flat_to_blocks(
         # workers that happened to import it transitively masked this until a
         # fresh worker pool at sf1 hit the bare AttributeError
 
-        from ..functions.codec import encode_partition_blocks
+        from ..functions.codec import encode_block_batch
 
         # Arrow batches can split a (term, bucket) group: assemble the
-        # whole partition (bounded by num_partitions sizing) first.
+        # whole partition (at most a shuffle partition, or AQE's advisory
+        # size when it merges small ones) first.
         batches = [bt for bt in batches if bt.num_rows]
         if not batches:
             return
         tbl = pa.Table.from_batches(batches).combine_chunks()
         dict_arr = pa.compute.dictionary_encode(tbl.column("term").chunk(0))
-        idx = dict_arr.indices.to_numpy()
-        vocab = dict_arr.dictionary
-        buckets = tbl.column("bucket_id").chunk(0).to_numpy()
-        docs = tbl.column("doc_id").chunk(0).to_numpy()
-        tfs = tbl.column("tf").chunk(0).to_numpy().astype(np.int64)
-        dls = tbl.column("dl").chunk(0).to_numpy().astype(np.int64)
-        norms = encode_norms(dls)
-        dlq = LENGTH_TABLE[norms].astype(np.float64)
-        impacts = tfs / (tfs + k1 * (1.0 - b + b * dlq / avgdl))
-        cols = encode_partition_blocks(idx, buckets, docs, tfs, norms, impacts)
-        yield pa.RecordBatch.from_arrays(
-            [
-                vocab.take(pa.array(cols["term"], type=pa.int32())),
-                pa.array(np.asarray(cols["bucket_id"], dtype=np.int64)),
-                pa.array(np.asarray(cols["block_id"], dtype=np.int32)),
-                pa.array(np.asarray(cols["first_doc"], dtype=np.int64)),
-                pa.array(np.asarray(cols["last_doc"], dtype=np.int64)),
-                pa.array(np.asarray(cols["cnt"], dtype=np.int32)),
-                pa.array(np.asarray(cols["max_tf"], dtype=np.int32)),
-                pa.array(np.asarray(cols["sum_tf"], dtype=np.int64)),
-                pa.array(np.asarray(cols["max_impact"], dtype=np.float64)),
-                pa.array(cols["doc_bytes"], type=pa.binary()),
-                pa.array(cols["tf_bytes"], type=pa.binary()),
-                pa.array(cols["norm_bytes"], type=pa.binary()),
-            ],
-            names=[
-                "term", "bucket_id", "block_id", "first_doc", "last_doc",
-                "cnt", "max_tf", "sum_tf", "max_impact",
-                "doc_bytes", "tf_bytes", "norm_bytes",
-            ],
+        yield encode_block_batch(
+            dict_arr.indices.to_numpy(),
+            dict_arr.dictionary,
+            tbl.column("bucket_id").chunk(0).to_numpy(),
+            tbl.column("doc_id").chunk(0).to_numpy(),
+            tbl.column("tf").chunk(0).to_numpy().astype(np.int64),
+            encode_norms(tbl.column("dl").chunk(0).to_numpy().astype(np.int64)),
+            avgdl, k1, b,
         )
 
     return part.mapInArrow(enc, BLOCKS_SCHEMA)
 
 
-def build_block_postings(
-    index: InvertedIndex,
-    bucket_bits: int = DEFAULT_BUCKET_BITS,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
-) -> DataFrame:
-    """Attach compressed block postings to a built index."""
-    blocks = encode_flat_to_blocks(
-        index.postings_flat, index.avgdl, bucket_bits, k1, b
+def term_stats_from_blocks(blocks: DataFrame) -> DataFrame:
+    """(term, df, ttf) from block METADATA: df is the sum of per-block
+    ``cnt``, ttf the sum of ``sum_tf`` — no decode, no pass over postings.
+    After deletes are applied physically (compact) the counts shrink with
+    the surviving postings."""
+    return blocks.groupBy("term").agg(
+        F.sum("cnt").cast("long").alias("df"), F.sum("sum_tf").alias("ttf")
     )
-    index.postings_blocks = blocks
-    index.bucket_bits = bucket_bits
-    index.impacts_avgdl = index.avgdl
-    index.impact_k1 = float(k1)
-    index.impact_b = float(b)
-    return blocks
 
 
 def decode_blocks_to_flat(blocks: DataFrame) -> DataFrame:
-    """Inverse view for blocks-only indexes: decode block rows back to
-    (term, doc_id, tf, dl_quant) flat postings. The EXACT dl is not stored
-    in blocks (only the SmallFloat norm byte) — callers needing exact dl
-    join doc_stats on doc_id."""
+    """Decode block rows back to (term, doc_id, tf, dl_quant) postings,
+    one vectorized pass per Arrow batch (``codec.decode_block_batch``).
+    The EXACT dl is not stored in blocks (only the SmallFloat norm byte) —
+    callers needing exact dl join doc_stats on doc_id."""
 
     def dec(batches):
-        from ..functions.codec import decode_block
-        from ..functions.similarity import LENGTH_TABLE as LT
+        from ..functions.codec import decode_block_batch
 
         for b in batches:
-            if not len(b):
-                continue
-            terms, docs, tfs, dlq = [], [], [], []
-            for r in b.itertuples():  # loop over blocks, not postings
-                d, t, nb = decode_block(r.first_doc, r.doc_bytes, r.tf_bytes, r.norm_bytes)
-                terms.append(np.repeat(r.term, d.size))
-                docs.append(d)
-                tfs.append(t)
-                dlq.append(LT[nb])
-            yield pd.DataFrame(
-                {
-                    "term": np.concatenate(terms),
-                    "doc_id": np.concatenate(docs),
-                    "tf": np.concatenate(tfs),
-                    "dl_quant": np.concatenate(dlq),
-                }
-            )
+            if b.num_rows:
+                yield decode_block_batch(b)
 
-    return blocks.mapInPandas(
-        dec, "term string, doc_id long, tf long, dl_quant long"
+    # rebalance: AQE sizes the decode's Python tasks to the (term-filtered)
+    # block bytes — a query's few blocks decode in one task instead of one
+    # Python round trip per stored partition (measured ~0.7 s of a ~2 s
+    # in-memory query at 8 partitions), while a large decode still spreads
+    # over the cores
+    return (
+        blocks.select("term", "first_doc", "cnt", "doc_bytes", "tf_bytes", "norm_bytes")
+        .hint("rebalance")
+        .mapInArrow(dec, "term string, doc_id long, tf long, dl_quant long")
     )
 
 
@@ -265,10 +231,8 @@ def bm25_topk_wand(
     block-max pruning. Returns (doc_id, score) like ``bm25_topk``
     (quantized mode) — bit-identical scores, same tie-break. ``k=0``
     returns an empty page; a negative ``k`` raises ``ValueError``."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     blocks = index.postings_blocks
-    if blocks is None:
-        raise ValueError("call build_block_postings(index) first")
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
     if index.impact_k1 is not None and (
@@ -279,8 +243,8 @@ def bm25_topk_wand(
         # would make the bounds invalid and silently drop true top-k docs
         raise ValueError(
             f"block impacts were encoded with k1={index.impact_k1}, "
-            f"b={index.impact_b}; query with those values or re-encode "
-            f"via build_block_postings(index, k1={k1}, b={b})"
+            f"b={index.impact_b}; query with those values or rebuild the "
+            f"index with build_and_write_index(..., k1={k1}, b={b})"
         )
     terms = analyze_query(query, index.profile)
     if k == 0 or not terms or index.n_docs == 0:

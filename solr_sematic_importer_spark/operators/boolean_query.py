@@ -38,6 +38,7 @@ from .score import (
     constant_scores,
     fuzzy_scores,
     sorted_fold,
+    term_postings,
     wildcard_to_regex,
 )
 
@@ -121,9 +122,9 @@ class _Evaluator:
         # SHOULD group of them (documented divergence from the classic
         # parser's generated phrase)
         weights = [(t, boost * idf(d, self.index.n_docs)) for t, d in sorted(dfs.items())]
-        spark = self.index.postings_flat.sparkSession
+        spark = self.index.doc_stats.sparkSession
         wdf = spark.createDataFrame(weights, "term string, w double")
-        cand = self.index.flat_terms([t for t, _ in weights])
+        cand = term_postings(self.index, [t for t, _ in weights], self.dl_col)
         scored = cand.join(F.broadcast(wdf), "term").select(
             "doc_id", "term",
             bm25_partial(

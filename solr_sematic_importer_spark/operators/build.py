@@ -3,25 +3,25 @@
 Replaces the reference's scan -> enrich -> publish -> Solr-add pipeline
 (``SolrSemanticIndexer.java:97-99,217-224`` page loop; destination Lucene
 index implied by ``SolrSemanticIndexer.java:103``) with declarative
-DataFrame stages Catalyst can optimize end-to-end:
+DataFrame stages Catalyst can optimize end-to-end. ``build_index`` and
+``build_and_write_index`` run the same stages (``_build``); the first keeps
+each stage's output persisted in memory, the second writes it under a path:
 
     input table
-      -> assign_doc_ids            (two-pass zip-with-index, docid.py)
-      -> analyze (Arrow pandas_udf, one batch per call)
-      -> explode tokens            (JVM-side posexplode)
-      -> tf  = groupBy(doc, term)  (partial+final hash agg, map-side combine)
-      -> df  = groupBy(term)       (exact docfreq — rank-identity needs exact)
-      -> doc_stats / index_meta    (N, avgdl from exact long sums)
+      -> stamp doc ids + analyze + per-doc tf  (ONE mapInPandas; docid.py ids)
+      -> doc_stats                  (doc_id, key cols, dl, dl_quant; N, sum dl)
+      -> explode (term, doc_id, tf, dl)        (narrow, JVM-side)
+      -> (term, bucket) shuffle + block encode (block_postings.py, codec.py)
+      -> term_stats from block metadata        (df = sum cnt, ttf = sum sum_tf)
+      -> index_meta                            (written indexes only)
 
-The "flat postings" table produced here — one row per (term, doc_id, tf,
-dl, dl_quant) — is the logical index; ``codec.py`` packs it into sorted
-delta+varint block postings for the scale path, and ``score.py`` runs BM25
-over either representation with identical results.
-
-dl is denormalized into the postings rows at build time (SURVEY §2.3 J4)
-so query-time scoring needs no doc_stats join. Both the exact dl and the
-Lucene-quantized dl (SmallFloat byte norm, similarity.py) are carried;
-quantized is what Solr's BM25 actually scores with.
+Blocks are the only postings, as a Lucene segment keeps one postings
+format. Scorers read them through ``InvertedIndex.flat_terms``, which
+decodes only the query's terms to (term, doc_id, tf, dl_quant) rows,
+or through block-max WAND. Each posting stores the Lucene-quantized dl as
+its SmallFloat norm byte (similarity.py) — what Solr's BM25 scores with;
+the exact dl comes from ``doc_stats`` (``InvertedIndex.with_exact_dl``),
+joined only for ``quantize=False`` scoring.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from dataclasses import dataclass, field
 from typing import Iterator, Sequence
 
 from pyspark import StorageLevel
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT
@@ -50,6 +51,8 @@ def doc_stats_aggs() -> "list[Column]":
 # String per token) causes GC thrash that *inverts* scaling — local[32]
 # measured slower than local[8]. MEMORY_AND_DISK stores serialized blocks.
 CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK
+
+DEFAULT_PROFILE = "text_en"
 
 
 def quantize_dl_col(dl: Column) -> Column:
@@ -184,14 +187,13 @@ def _analyze_with_ids(
 class InvertedIndex:
     """Logical inverted index: a handle of DataFrames plus scalar stats."""
 
-    doc_stats: DataFrame       # doc_id, <key cols...>, dl, dl_quant
-    postings_flat: DataFrame   # term, doc_id, tf, dl, dl_quant
-    term_stats: DataFrame      # term, df, ttf
+    doc_stats: DataFrame        # doc_id, <key cols...>, dl, dl_quant
+    postings_blocks: DataFrame  # block_postings.BLOCKS_SCHEMA rows
+    term_stats: DataFrame       # term, df, ttf
     n_docs: int
     sum_dl: int
     profile: str
     key_cols: Sequence[str] = field(default_factory=tuple)
-    postings_blocks: DataFrame | None = None   # codec.py output (scale path)
     deletes: DataFrame | None = None           # deletion vector (doc_id rows)
     doc_vectors: DataFrame | None = None       # doc-major (doc_id, terms, tfs)
     bucket_bits: int | None = None             # block-postings bucket width
@@ -211,12 +213,6 @@ class InvertedIndex:
     # reads it to tell when its upper-bound loop could not skip a bucket.
     min_doc_id: int | None = None
     max_doc_id: int | None = None
-    # True when postings_flat is a lazy DECODE of postings_blocks (blocks-
-    # only persistence): a filter on the decoded view cannot be pushed
-    # through the Python decode stage, so term-restricted access must go
-    # through flat_terms()/flat_terms_semi(), which filter the BLOCKS scan
-    # (parquet min/max pruning on term) before decoding.
-    flat_from_blocks: bool = False
     _caches: list = field(default_factory=list, repr=False, compare=False)
 
     @property
@@ -224,36 +220,43 @@ class InvertedIndex:
         # Lucene: sumTotalTermFreq / docCount as double division of exact longs
         return self.sum_dl / self.n_docs if self.n_docs else 0.0
 
-    def _decoded_flat(self, blocks: DataFrame) -> DataFrame:
+    def with_exact_dl(self, postings: DataFrame) -> DataFrame:
+        """Attach each posting's EXACT dl from ``doc_stats`` (a block
+        stores only the SmallFloat norm byte, i.e. ``dl_quant``). Only
+        ``quantize=False`` scoring needs it."""
+        return postings.join(self.doc_stats.select("doc_id", "dl"), "doc_id")
+
+    @property
+    def postings_flat(self) -> DataFrame:
+        """Every posting as (term, doc_id, tf, dl, dl_quant): a decode of
+        the WHOLE block table, exact dl joined from doc_stats. For
+        whole-index consumers (term-frequency dumps, simhash) and
+        inspection; scorers go through ``flat_terms``."""
         from .block_postings import decode_blocks_to_flat
 
-        return decode_blocks_to_flat(blocks).join(
-            self.doc_stats.select("doc_id", "dl"), "doc_id"
+        return self.with_exact_dl(
+            decode_blocks_to_flat(self.postings_blocks)
         ).select("term", "doc_id", "tf", "dl", "dl_quant")
 
     def flat_terms(self, terms: "Sequence[str]") -> DataFrame:
-        """``postings_flat`` restricted to ``terms`` — the J2 query-term
-        semi-join every scorer starts from. On a flat-backed index this is
-        the usual pushed ``In(term)`` scan filter; on a blocks-only index
-        the filter is applied to the BLOCKS scan before the Python decode
-        (which Catalyst cannot push a predicate through), so a query
-        decodes only its own terms' postings, never the index."""
-        terms = list(terms)
-        if not self.flat_from_blocks:
-            return self.postings_flat.filter(F.col("term").isin(terms))
-        return self._decoded_flat(
-            self.postings_blocks.filter(F.col("term").isin(terms))
+        """(term, doc_id, tf, dl_quant) postings of ``terms`` — the J2
+        query-term semi-join every scorer starts from. The filter is
+        applied to the BLOCKS scan before the Python decode (which Catalyst
+        cannot push a predicate through), so a query decodes only its own
+        terms' postings, never the index."""
+        from .block_postings import decode_blocks_to_flat
+
+        return decode_blocks_to_flat(
+            self.postings_blocks.filter(F.col("term").isin(list(terms)))
         )
 
     def flat_terms_semi(self, matching: DataFrame) -> DataFrame:
         """Like ``flat_terms`` but the term set is a (vocab-sliver)
         DataFrame — multi-term expansions (prefix/wildcard) whose member
         list lives in a broadcastable frame rather than a literal."""
-        if not self.flat_from_blocks:
-            return self.postings_flat.join(
-                F.broadcast(matching.select("term")), "term", "left_semi"
-            )
-        return self._decoded_flat(
+        from .block_postings import decode_blocks_to_flat
+
+        return decode_blocks_to_flat(
             self.postings_blocks.join(
                 F.broadcast(matching.select("term")), "term", "left_semi"
             )
@@ -304,24 +307,60 @@ def term_dfs(index: InvertedIndex, terms: Sequence[str]) -> dict[str, int]:
     return {t: cache[t] for t in terms}
 
 
-def build_index(
-    df: DataFrame,
-    text_col: str = "text",
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    profile: str = "text_en",
-    doc_id_col: str | None = None,
-    doc_id_offset: int = 0,
-) -> InvertedIndex:
-    """Build the logical index. If ``doc_id_col`` is given it is used as the
-    (already dense/stable) document id; otherwise ids are assigned by global
-    ``(key_cols)`` rank via the two-pass zip-with-index."""
-    key_cols = list(key_cols)
+def _explode(analyzed: DataFrame) -> DataFrame:
+    """(doc_id, terms, tfs, dl) docs -> (term, doc_id, tf, dl) postings. tf
+    was folded per doc inside the Python stage, so this emits one row per
+    DISTINCT (doc, term) with no shuffle and no aggregate."""
+    return analyzed.select(
+        "doc_id", "dl", F.explode(F.arrays_zip("terms", "tfs")).alias("p")
+    ).select(
+        F.col("p.terms").alias("term"),
+        "doc_id",
+        F.col("p.tfs").cast("long").alias("tf"),
+        "dl",
+    )
 
-    # The analyzer is the expensive Python stage: run it exactly ONCE,
-    # persist its output (serialized), and derive doc_stats / postings /
-    # corpus stats from the cache. When ids must be assigned, the docid
-    # stamp (two-pass zip-with-index, docid.py) is FUSED into the same
-    # mapInPandas as the analyzer — one Python round-trip instead of two.
+
+def _build(
+    df: DataFrame,
+    path: "str | None",
+    text_col: str,
+    key_cols: Sequence[str],
+    profile: str,
+    doc_id_col: "str | None",
+    doc_id_offset: int,
+    bucket_bits: "int | None",
+    k1: float,
+    b: float,
+    write_doc_vectors: bool = False,
+) -> InvertedIndex:
+    """The one build pipeline. With ``path=None`` every stage's output is
+    persisted in memory; with a path it is written there as parquet and
+    read back, and ``index_meta`` is written last as the commit record."""
+    from .block_postings import (
+        DEFAULT_BUCKET_BITS,
+        encode_flat_to_blocks,
+        term_stats_from_blocks,
+    )
+
+    if bucket_bits is None:
+        bucket_bits = DEFAULT_BUCKET_BITS
+    spark = df.sparkSession
+    key_cols = list(key_cols)
+    caches: list = []
+
+    def keep(name: str, frame: DataFrame) -> DataFrame:
+        if path is None:
+            frame.persist(CACHE_LEVEL)
+            caches.append(frame)
+            return frame
+        frame.write.mode("overwrite").parquet(f"{path}/{name}")
+        return spark.read.parquet(f"{path}/{name}")
+
+    # The analyzer is the expensive Python stage: run it exactly ONCE and
+    # persist its output (serialized) for the fan-out below. When ids must
+    # be assigned, the docid stamp (two-pass zip-with-index, docid.py) is
+    # FUSED into the same mapInPandas — one Python round-trip, not two.
     if doc_id_col is None:
         analyzed = _stamp_and_analyze(df, text_col, key_cols, profile, doc_id_offset)
     else:
@@ -330,55 +369,77 @@ def build_index(
     analyzed = analyzed.withColumn("dl_quant", quantize_dl_col(F.col("dl")))
     analyzed.persist(CACHE_LEVEL)
 
-    doc_stats = analyzed.drop("terms", "tfs")
-
-    # tf was folded per doc inside the Python stage, so this explode emits
-    # one row per DISTINCT (doc, term) and needs NO shuffle and no agg —
-    # a narrow stage. dl/dl_quant are denormalized into the postings rows
-    # so query-time scoring needs no doc_stats join (SURVEY §2.3 J4).
-    postings_flat = (
-        analyzed.select(
-            "doc_id", "dl", "dl_quant",
-            F.explode(F.arrays_zip("terms", "tfs")).alias("p"),
-        )
-        .select(
-            F.col("p.terms").alias("term"),
-            "doc_id",
-            F.col("p.tfs").cast("long").alias("tf"),
-            "dl",
-            "dl_quant",
-        )
-    )
-    postings_flat.persist(CACHE_LEVEL)
-
-    # term_stats is the query-time idf dictionary: vocab-sized (small), hit
-    # by every query — keep it hot so a query never re-aggregates postings.
-    term_stats = postings_flat.groupBy("term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("ttf")
-    )
-    term_stats.persist()
-
-    stats = analyzed.agg(*doc_stats_aggs()).first()
-    # `analyzed` is now materialized in the cache; its ordering-pass parent
-    # is no longer needed
-    if ordered_src is not None:
+    doc_stats = keep("doc_stats", analyzed.drop("terms", "tfs"))
+    stats = doc_stats.agg(*doc_stats_aggs()).first()
+    if ordered_src is not None:  # analyzed is materialized by the stats job
         ordered_src.unpersist()
+    n_docs, sum_dl = int(stats["n"]), int(stats["s"])
+    avgdl = sum_dl / n_docs if n_docs else 0.0
 
-    return InvertedIndex(
+    # ONE shuffle: explode -> (term, bucket) encode. The encoder's output
+    # is already grouped by (term, bucket) and sorted within partitions,
+    # so it is kept as is (parquet row-group min/max on term still prunes
+    # query-term scans).
+    blocks = keep(
+        "postings_blocks",
+        encode_flat_to_blocks(
+            _explode(analyzed), avgdl, bucket_bits=bucket_bits, k1=k1, b=b
+        ),
+    )
+    term_stats = keep("term_stats", term_stats_from_blocks(blocks))
+
+    # doc-major term vectors come free from the cached analyze output:
+    # MoreLikeThis fetches ONE doc's vector — a point lookup here, vs a
+    # full scan of term-ordered postings (VERDICT r2 "what's wrong" #2)
+    doc_vectors = analyzed.select("doc_id", "terms", "tfs")
+    if path is not None and write_doc_vectors:
+        # range-partitioned + sorted by doc_id so a doc_id predicate prunes
+        # to one file / row group
+        doc_vectors.repartitionByRange("doc_id").sortWithinPartitions(
+            "doc_id"
+        ).write.mode("overwrite").parquet(f"{path}/doc_vectors")
+
+    index = InvertedIndex(
         doc_stats=doc_stats,
-        postings_flat=postings_flat,
+        postings_blocks=blocks,
         term_stats=term_stats,
-        n_docs=int(stats["n"]),
-        sum_dl=int(stats["s"]),
+        n_docs=n_docs,
+        sum_dl=sum_dl,
         profile=profile,
         key_cols=tuple(key_cols),
+        doc_vectors=doc_vectors,
+        bucket_bits=bucket_bits,
+        impacts_avgdl=avgdl,
+        impact_k1=float(k1),
+        impact_b=float(b),
         min_doc_id=stats["lo"],
         max_doc_id=stats["hi"],
-        # doc-major term vectors come free from the cached analyze output:
-        # MoreLikeThis fetches ONE doc's vector — a point lookup here, vs a
-        # full scan of term-ordered postings (VERDICT r2 "what's wrong" #2)
-        doc_vectors=analyzed.select("doc_id", "terms", "tfs"),
-        _caches=[analyzed, postings_flat, term_stats],
+        _caches=[analyzed, *caches],
+    )
+    if path is None:
+        return index
+    write_meta_file(spark, path, index_meta(index))
+    analyzed.unpersist()
+    return read_index(spark, path)
+
+
+def build_index(
+    df: DataFrame,
+    text_col: str = "text",
+    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
+    profile: str = DEFAULT_PROFILE,
+    doc_id_col: str | None = None,
+    doc_id_offset: int = 0,
+) -> InvertedIndex:
+    """Build an index held in memory (every table persisted). If
+    ``doc_id_col`` is given it is used as the (already dense/stable)
+    document id; otherwise ids are assigned by global ``(key_cols)`` rank
+    via the two-pass zip-with-index. Blocks use the default encoding
+    (``DEFAULT_BUCKET_BITS``, library BM25 ``k1``/``b``); other encodings
+    are built with ``build_and_write_index``."""
+    return _build(
+        df, None, text_col, key_cols, profile, doc_id_col, doc_id_offset,
+        None, K1_DEFAULT, B_DEFAULT,
     )
 
 
@@ -411,117 +472,56 @@ def build_and_write_index(
     path: str,
     text_col: str = "text",
     key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    profile: str = "text_en",
+    profile: str = DEFAULT_PROFILE,
     doc_id_col: str | None = None,
     doc_id_offset: int = 0,
     bucket_bits: int | None = None,
-    write_flat: bool = False,
+    k1: float = K1_DEFAULT,
+    b: float = B_DEFAULT,
     write_doc_vectors: bool = False,
 ) -> "InvertedIndex":
-    """The scale-path build: input table -> persistent index at ``path``
-    with MINIMAL materialization (this is what bench/scaling measure):
-
-    1. one fused Python stage (docid stamp + analyze + per-doc tf),
-       persisted serialized for the fan-out below;
-    2. ``doc_stats`` written (narrow);
-    3. ONE shuffle: explode -> repartition(term, bucket) -> vectorized
-       block encode -> ``postings_blocks`` written;
-    4. ``term_stats`` derived from block METADATA (sum of per-block cnt /
-       sum_tf — no second pass over postings);
-    5. ``index_meta`` from a doc_stats aggregate.
-
-    The flat postings table is NOT written by default — blocks are the
-    canonical index; ``read_index`` reconstructs a flat view by decoding
-    blocks when needed. Pass ``write_flat=True`` to also persist it (for
-    the SQL-oracle/debug path at small scale).
-    """
-    from .block_postings import DEFAULT_BUCKET_BITS, encode_flat_to_blocks
-
-    if bucket_bits is None:
-        bucket_bits = DEFAULT_BUCKET_BITS
-    spark = df.sparkSession
-    key_cols = list(key_cols)
-
-    if doc_id_col is None:
-        analyzed = _stamp_and_analyze(df, text_col, key_cols, profile, doc_id_offset)
-    else:
-        analyzed = _analyze_with_ids(df, text_col, key_cols, doc_id_col, profile)
-    ordered_src = getattr(analyzed, "_ordered_src", None)
-    analyzed = analyzed.withColumn("dl_quant", quantize_dl_col(F.col("dl")))
-    analyzed.persist(CACHE_LEVEL)
-
-    analyzed.drop("terms", "tfs").write.mode("overwrite").parquet(f"{path}/doc_stats")
-    if ordered_src is not None:  # analyzed is materialized by the write
-        ordered_src.unpersist()
-    doc_stats = spark.read.parquet(f"{path}/doc_stats")
-    stats = doc_stats.agg(*doc_stats_aggs()).first()
-    n_docs, sum_dl = int(stats["n"]), int(stats["s"])
-    avgdl = sum_dl / n_docs if n_docs else 0.0
-
-    flat = analyzed.select(
-        "doc_id", "dl",
-        F.explode(F.arrays_zip("terms", "tfs")).alias("p"),
-    ).select(
-        F.col("p.terms").alias("term"),
-        "doc_id",
-        F.col("p.tfs").cast("long").alias("tf"),
-        "dl",
+    """Input table -> persistent index at ``path``, through the same stages
+    as ``build_index`` with MINIMAL materialization (this is what the
+    benchmark and every segment append run): one fused Python stage, the
+    ``doc_stats`` write, ONE (term, bucket) shuffle into the block write,
+    ``term_stats`` from block METADATA, then ``index_meta``. ``k1``/``b``
+    are folded into the stored block impacts, so WAND must later be
+    queried with the same values. ``write_doc_vectors`` also writes the
+    doc-major forward index MoreLikeThis point-reads. Returns the index
+    read back from ``path``."""
+    return _build(
+        df, path, text_col, key_cols, profile, doc_id_col, doc_id_offset,
+        bucket_bits, k1, b, write_doc_vectors,
     )
-    # encoder output is already hash-grouped by (term, bucket) and sorted
-    # within partitions — write directly, no second shuffle (parquet
-    # row-group min/max on term still prunes query-term scans)
-    blocks = encode_flat_to_blocks(
-        flat, avgdl, bucket_bits=bucket_bits, k1=K1_DEFAULT, b=B_DEFAULT
-    )
-    blocks.write.mode("overwrite").parquet(f"{path}/postings_blocks")
-    blocks_r = spark.read.parquet(f"{path}/postings_blocks")
-
-    term_stats = blocks_r.groupBy("term").agg(
-        F.sum("cnt").cast("long").alias("df"), F.sum("sum_tf").alias("ttf")
-    )
-    term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
-
-    if write_flat:
-        flat.withColumn("dl_quant", quantize_dl_col(F.col("dl"))).select(
-            "term", "doc_id", "tf", "dl", "dl_quant"
-        ).write.mode("overwrite").parquet(f"{path}/postings_flat")
-
-    if write_doc_vectors:
-        # doc-major forward index (MoreLikeThis term-vector point lookups):
-        # range-partitioned + sorted by doc_id so a doc_id predicate prunes
-        # to one file / row group instead of scanning term-ordered postings
-        (
-            analyzed.select("doc_id", "terms", "tfs")
-            .repartitionByRange("doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(f"{path}/doc_vectors")
-        )
-
-    write_meta_file(
-        spark,
-        path,
-        {
-            "n_docs": str(n_docs),
-            "sum_dl": str(sum_dl),
-            "profile": profile,
-            "key_cols": ",".join(key_cols),
-            "impacts_avgdl": repr(avgdl),
-            "impact_k1": repr(float(K1_DEFAULT)),
-            "impact_b": repr(float(B_DEFAULT)),
-            "bucket_bits": str(bucket_bits),
-            **doc_id_range_meta(stats["lo"], stats["hi"]),
-        },
-    )
-    analyzed.unpersist()
-    return read_index(spark, path)
 
 
-def doc_id_range_meta(lo: "int | None", hi: "int | None") -> dict:
-    """``index_meta`` keys for the doc-id range (none for an empty index)."""
-    if lo is None or hi is None:
-        return {}
-    return {"min_doc_id": str(int(lo)), "max_doc_id": str(int(hi))}
+# index_meta keys -> (encode, decode). Every value is a string in the
+# JSON control file; keys whose value is unknown (None) are left out.
+_INT_META = (lambda v: str(int(v)), int)
+_FLOAT_META = (lambda v: repr(float(v)), float)
+_META_CODECS = {
+    "n_docs": _INT_META,
+    "sum_dl": _INT_META,
+    "profile": (str, str),
+    "key_cols": (",".join, lambda v: tuple(v.split(",")) if v else ()),
+    "bucket_bits": _INT_META,
+    "impacts_avgdl": _FLOAT_META,
+    "impact_k1": _FLOAT_META,
+    "impact_b": _FLOAT_META,
+    "min_doc_id": _INT_META,
+    "max_doc_id": _INT_META,
+}
+
+
+def index_meta(index: InvertedIndex) -> dict:
+    """The ``index_meta`` record of an index: its corpus stats and the
+    encoding its blocks were written with. ``read_index`` decodes it back
+    into the same ``InvertedIndex`` fields."""
+    return {
+        key: enc(getattr(index, key))
+        for key, (enc, _) in _META_CODECS.items()
+        if getattr(index, key) is not None
+    }
 
 
 def write_meta_file(spark: SparkSession, path: str, meta: dict) -> None:
@@ -602,28 +602,28 @@ def read_meta_file(spark: SparkSession, path: str) -> "dict | None":
     return json.loads(bytes(data).decode("utf-8"))
 
 
-def write_index(
-    index: InvertedIndex, path: str, write_flat: "bool | None" = None
-) -> None:
-    """Persist the index tables as parquet dirs (Iceberg tables when a
-    catalog is configured — same writer API via ``writeTo``).
+def read_parquet_or_none(reader, *paths: str) -> "DataFrame | None":
+    """``reader.parquet(*paths)``, or None when a path does not exist. ONLY
+    path-missing means "absent": a corrupt or unreadable file propagates,
+    since treating it as absent would silently drop data (resurrect
+    deleted docs, restart doc ids at 0)."""
+    try:
+        return reader.parquet(*paths)
+    except AnalysisException as e:
+        msg = str(e)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return None
+        raise
 
-    ``write_flat``: whether to also persist the flat postings table.
-    Default (None) writes it ONLY when the index has no block postings —
-    blocks are the canonical representation (Lucene segments store one
-    postings format, not two); persisting both costs 3-5x write/storage
-    amplification per segment at scale. ``read_index`` reconstructs a
-    flat view from blocks on read."""
-    if write_flat is None:
-        write_flat = index.postings_blocks is None
-    if not write_flat and index.postings_blocks is None:
-        raise ValueError(
-            "write_flat=False requires block postings (the index would "
-            "persist no postings at all); run build_block_postings first"
-        )
+
+def write_index(index: InvertedIndex, path: str) -> None:
+    """Persist the index tables as parquet dirs (Iceberg tables when a
+    catalog is configured — same writer API via ``writeTo``): doc_stats,
+    term_stats, the block postings, the deletion vector if any, and
+    ``index_meta`` last as the commit record."""
+    from .block_postings import write_blocks
+
     index.doc_stats.write.mode("overwrite").parquet(f"{path}/doc_stats")
-    if write_flat:
-        index.postings_flat.write.mode("overwrite").parquet(f"{path}/postings_flat")
     index.term_stats.write.mode("overwrite").parquet(f"{path}/term_stats")
     if index.deletes is not None:
         # durable deletion vector (Lucene .liv analog): reload must not
@@ -631,25 +631,8 @@ def write_index(
         index.deletes.select("doc_id").coalesce(1).write.mode("overwrite").parquet(
             f"{path}/deletes"
         )
-    if index.postings_blocks is not None:
-        from .block_postings import write_blocks
-
-        write_blocks(index.postings_blocks, f"{path}/postings_blocks")
-    meta = {
-        "n_docs": str(index.n_docs),
-        "sum_dl": str(index.sum_dl),
-        "profile": index.profile,
-        "key_cols": ",".join(index.key_cols),
-    }
-    if index.impacts_avgdl is not None:
-        meta["impacts_avgdl"] = repr(float(index.impacts_avgdl))
-    if index.impact_k1 is not None:
-        meta["impact_k1"] = repr(float(index.impact_k1))
-        meta["impact_b"] = repr(float(index.impact_b))
-    if index.bucket_bits is not None:
-        meta["bucket_bits"] = str(int(index.bucket_bits))
-    meta.update(doc_id_range_meta(index.min_doc_id, index.max_doc_id))
-    write_meta_file(index.doc_stats.sparkSession, path, meta)
+    write_blocks(index.postings_blocks, f"{path}/postings_blocks")
+    write_meta_file(index.doc_stats.sparkSession, path, index_meta(index))
 
 
 def read_index(spark: SparkSession, path: str) -> InvertedIndex:
@@ -659,60 +642,19 @@ def read_index(spark: SparkSession, path: str) -> InvertedIndex:
             r["key"]: r["value"]
             for r in spark.read.parquet(f"{path}/index_meta").collect()
         }
-    try:  # optional component; works on any Hadoop-compatible filesystem
-        blocks = spark.read.parquet(f"{path}/postings_blocks")
-    except Exception:
-        blocks = None
-    try:
-        deletes = spark.read.parquet(f"{path}/deletes").select("doc_id").distinct()
-    except Exception as e:
-        # ONLY path-missing means "no deletes". A transient/corrupt read
-        # must propagate — treating it as empty would silently resurrect
-        # deleted docs (the same trap as a swallowed manifest error).
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            deletes = None
-        else:
-            raise
-    doc_stats = spark.read.parquet(f"{path}/doc_stats")
-    flat_from_blocks = False
-    try:
-        postings_flat = spark.read.parquet(f"{path}/postings_flat")
-    except Exception:
-        # blocks-only index: flat view = lazy decode of the canonical
-        # blocks, with exact dl re-joined from doc_stats. Term-restricted
-        # access goes through flat_terms(), which filters the blocks scan
-        # BEFORE the decode.
-        from .block_postings import decode_blocks_to_flat
-
-        if blocks is None:
-            raise
-        postings_flat = decode_blocks_to_flat(blocks).join(
-            doc_stats.select("doc_id", "dl"), "doc_id"
-        ).select("term", "doc_id", "tf", "dl", "dl_quant")
-        flat_from_blocks = True
-    try:  # optional doc-major forward index (write_doc_vectors=True)
-        doc_vectors = spark.read.parquet(f"{path}/doc_vectors")
-    except Exception:
-        doc_vectors = None
+    blocks = read_parquet_or_none(spark.read, f"{path}/postings_blocks")
+    if blocks is None:
+        raise ValueError(
+            f"{path} has no postings_blocks: block postings are the only "
+            "postings format; rebuild the index with build_and_write_index"
+        )
+    deletes = read_parquet_or_none(spark.read, f"{path}/deletes")
     return InvertedIndex(
+        doc_stats=spark.read.parquet(f"{path}/doc_stats"),
         postings_blocks=blocks,
-        doc_stats=doc_stats,
-        postings_flat=postings_flat,
         term_stats=spark.read.parquet(f"{path}/term_stats"),
-        n_docs=int(meta["n_docs"]),
-        sum_dl=int(meta["sum_dl"]),
-        profile=meta["profile"],
-        key_cols=tuple(meta["key_cols"].split(",")) if meta["key_cols"] else (),
-        deletes=deletes,
-        doc_vectors=doc_vectors,
-        impacts_avgdl=(
-            float(meta["impacts_avgdl"]) if "impacts_avgdl" in meta else None
-        ),
-        impact_k1=float(meta["impact_k1"]) if "impact_k1" in meta else None,
-        impact_b=float(meta["impact_b"]) if "impact_b" in meta else None,
-        bucket_bits=int(meta["bucket_bits"]) if "bucket_bits" in meta else None,
-        min_doc_id=int(meta["min_doc_id"]) if "min_doc_id" in meta else None,
-        max_doc_id=int(meta["max_doc_id"]) if "max_doc_id" in meta else None,
-        flat_from_blocks=flat_from_blocks,
+        deletes=None if deletes is None else deletes.select("doc_id").distinct(),
+        # optional doc-major forward index (write_doc_vectors=True)
+        doc_vectors=read_parquet_or_none(spark.read, f"{path}/doc_vectors"),
+        **{key: dec(meta[key]) for key, (_, dec) in _META_CODECS.items() if key in meta},
     )

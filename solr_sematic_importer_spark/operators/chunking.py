@@ -109,7 +109,7 @@ def block_join_parent_topk(
 
     from .score import score_or_docs
 
-    spark = chunk_index.postings_flat.sparkSession
+    spark = chunk_index.doc_stats.sparkSession
     agg_fn = {"max": F.max, "total": F.sum}[score_mode]
     scored = score_or_docs(chunk_index, query, k1=k1, b=b, quantize=quantize)
     if scored is None:

@@ -92,7 +92,7 @@ def more_like_this(
     quantize: bool = True,
 ) -> DataFrame:
     """Top-k similar docs (doc_id, score), the source doc excluded."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     out_schema = "doc_id long, score double"
     terms = [t for t, _ in interesting_terms(
         index, doc_id, max_query_terms, min_term_freq, min_doc_freq

@@ -173,7 +173,7 @@ def bm25_phrase_topk(
     ``phrase_match_counts``), Lucene PhraseQuery scoring: the phrase is
     one pseudo-term with idf = sum of constituent idfs and tf = phrase
     frequency. Returns (doc_id, score), (score desc, doc_id asc)."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     terms, poss = analyze_with_positions(phrase, index.profile)
     scored = (
         phrase_scores(index, positions, terms, poss, 1.0, slop, k1, b, quantize)

@@ -39,6 +39,15 @@ def analyze_query(query: str, profile: str) -> list[str]:
     return PROFILES[profile](query)
 
 
+def term_postings(index: InvertedIndex, terms: "Sequence[str]", dl_col: str) -> DataFrame:
+    """``index.flat_terms(terms)`` carrying ``dl_col``, the dl a BM25
+    clause scores with: ``dl_quant`` comes with the block decode, and the
+    exact ``dl`` is joined from ``doc_stats`` only when asked for
+    (``quantize=False``)."""
+    cand = index.flat_terms(terms)
+    return cand if dl_col == "dl_quant" else index.with_exact_dl(cand)
+
+
 def bm25_partial(
     w: Column, tf: Column, dl_col: str, avgdl: "float | Column", k1: float, b: float
 ) -> Column:
@@ -133,7 +142,7 @@ def bm25_topk(
     containing ANY of them are dropped pre-ranking via an anti-join on
     their postings.
     """
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     key_cols = [c for c in index.key_cols]
     empty = spark.createDataFrame(
         [],
@@ -190,7 +199,7 @@ def score_or_docs(
     over one SHOULD TermQuery per token). The clause count rides the
     same per-doc fold (sum of matched-term multiplicities), so mm adds
     zero extra shuffles."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     terms = list(raw_terms) if raw_terms is not None else analyze_query(query, index.profile)
     if not terms or index.n_docs == 0:
         return None
@@ -213,7 +222,7 @@ def score_or_docs(
     wdf = spark.createDataFrame(weights, "term string, w double, mult int")
     dl_col = "dl_quant" if quantize else "dl"
 
-    cand = index.flat_terms([w[0] for w in weights])
+    cand = term_postings(index, [w[0] for w in weights], dl_col)
     scored = cand.join(F.broadcast(wdf), "term").select(
         "doc_id",
         "term",
@@ -267,7 +276,7 @@ def bm25_topk_synonyms(
 
     if synonyms is None:
         synonyms = default_synonyms()
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     out_schema = "doc_id long, score double"
     # Solr applies synonymGraph BEFORE stemming and the outputs continue
     # through the rest of the chain. Matching rules against STEMMED
@@ -313,7 +322,7 @@ def bm25_topk_synonyms(
     wdf = spark.createDataFrame(weights, "gid int, w double")
     dl_col = "dl_quant" if quantize else "dl"
 
-    cand = index.flat_terms(sorted({m for m, _ in group_rows}))
+    cand = term_postings(index, sorted({m for m, _ in group_rows}), dl_col)
     # per (doc, group): tf summed across members, THEN the BM25 saturation
     per_group = (
         cand.join(F.broadcast(gdf), "term")
@@ -431,12 +440,12 @@ def fuzzy_scores(
     if not members or index.n_docs == 0:
         return None
     w = boost * idf(max(df for _, df, _ in members), index.n_docs)
-    bdf = index.postings_flat.sparkSession.createDataFrame(
+    bdf = index.doc_stats.sparkSession.createDataFrame(
         [(t, bst) for t, _, bst in members], "term string, mboost double"
     )
     dl_col = "dl_quant" if quantize else "dl"
     scored = (
-        index.flat_terms([t for t, _, _ in members])
+        term_postings(index, [t for t, _, _ in members], dl_col)
         .join(F.broadcast(bdf), "term")
         .select(
             "doc_id",
@@ -465,7 +474,7 @@ def bm25_fuzzy_topk(
     boosted by its edit-distance similarity —
     ``score(doc) = Σ_members boost_m * idf(df_max) * sat(tf_m)``.
     Returns (doc_id, score)."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     scored = fuzzy_scores(index, word, distance, 1.0, k1, b, quantize, max_expansions)
     if scored is None:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -525,7 +534,7 @@ def wildcard_query_topk(
     (``rlike`` over the vocab-sized term_stats table). Every matching doc
     scores 1.0; docID-asc tie-break. Returns (doc_id, score)."""
     if not pattern:
-        return index.postings_flat.sparkSession.createDataFrame(
+        return index.doc_stats.sparkSession.createDataFrame(
             [], "doc_id long, score double"
         )
     return _constant_topk(
@@ -563,7 +572,7 @@ def prefix_query_topk(
     with the prefix scores 1.0; ordering is the docID-asc tie-break.
     Returns (doc_id, score). StartsWith pushes to both scans."""
     if not prefix:
-        return index.postings_flat.sparkSession.createDataFrame(
+        return index.doc_stats.sparkSession.createDataFrame(
             [], "doc_id long, score double"
         )
     return _constant_topk(index, F.col("term").startswith(prefix), k)
@@ -581,7 +590,7 @@ def score_partials(
     ``sum(partial) over doc = score``. The shared leaf table behind
     ``explain_topk`` and ``select(debug=True)``: callers semi-join their
     own (request-sized) doc set. None when no query term is indexed."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     terms = analyze_query(query, index.profile)
     if not terms or index.n_docs == 0:
         return None
@@ -600,7 +609,7 @@ def score_partials(
     )
     dl_col = "dl_quant" if quantize else "dl"
     return (
-        index.flat_terms([w[0] for w in weights])
+        term_postings(index, [w[0] for w in weights], dl_col)
         .join(F.broadcast(wdf), "term")
         .select(
             "doc_id",
@@ -632,7 +641,7 @@ def explain_topk(
     alive; the top-k doc set (TakeOrdered, request-sized) semi-joins the
     partials, so explain costs one extra broadcast join over the already-
     scored rows, not a rescore."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     partials = score_partials(index, query, k1=k1, b=b, quantize=quantize)
     if partials is None:
         return spark.createDataFrame(
@@ -666,7 +675,7 @@ def bm25_conjunction_topk(
 ) -> DataFrame:
     """AND semantics (SURVEY §2.7): docs matching ALL distinct query terms,
     scored the same way — union of postings + HAVING count = n_terms."""
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     terms = sorted(set(analyze_query(query, index.profile)))
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
@@ -678,7 +687,7 @@ def bm25_conjunction_topk(
     )
     dl_col = "dl_quant" if quantize else "dl"
     scored = (
-        index.flat_terms(terms)
+        term_postings(index, terms, dl_col)
         .join(F.broadcast(wdf), "term")
         .select(
             "doc_id",

@@ -8,9 +8,13 @@ structure maintenance", north_rule "resumable from checkpoint with
 per-partition lineage + metrics"):
 
 * ``append_segment(key, df)`` builds one index segment for one input slice
-  (a crawl page range / ingest batch). Doc ids continue from the previous
-  segment's end, so the global id order is arrival order of segments, and
-  (conv_id, turn_idx) order within a segment.
+  (a crawl page range / ingest batch) with ``build_and_write_index`` — the
+  same pipeline as every other build, so a segment directory is an
+  ordinary block-only index. Doc ids continue from the previous segment's
+  end, so the global id order is arrival order of segments, and
+  (conv_id, turn_idx) order within a segment. Every segment shares one
+  encoding (analyzer profile, bucket width, BM25 k1/b): an append inherits
+  it from the manifest and rejects a conflicting value before writing.
 * A parquet ``manifest`` table records one row per completed segment:
   rows, doc-id offset, token counts, wall seconds, an order-independent
   xxhash64 content checksum, per-stage throughput — lineage + metrics.
@@ -24,6 +28,7 @@ per-partition lineage + metrics"):
 * ``read_segmented_index`` exposes the union of live segments as one
   logical InvertedIndex (term_stats re-aggregated; block postings
   unioned — valid because segment doc-ranges are disjoint and ascending).
+  Block postings are the only postings a segment stores.
 * ``compact`` is the LSM merge: segments' block postings become one
   segment. Only (term, bucket) groups that span MULTIPLE segments (the
   bucket cut by a segment boundary, or undersized tail blocks) are
@@ -39,22 +44,24 @@ from dataclasses import dataclass
 from typing import Sequence
 
 import pandas as pd
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT
 from .block_postings import (
     BLOCKS_SCHEMA,
     DEFAULT_BUCKET_BITS,
-    build_block_postings,
+    term_stats_from_blocks,
+    write_blocks,
 )
 from .build import (
+    DEFAULT_PROFILE,
     InvertedIndex,
-    build_index,
-    doc_id_range_meta,
+    build_and_write_index,
     doc_stats_aggs,
     hadoop_delete,
     hadoop_list_dirs,
+    index_meta,
+    read_parquet_or_none,
     write_meta_file,
 )
 
@@ -90,25 +97,18 @@ def _manifest_path(path: str) -> str:
 
 
 def read_manifest(spark: SparkSession, path: str) -> pd.DataFrame:
-    try:
-        return (
-            # mergeSchema: manifests written before next_doc_id existed
-            # union cleanly with rows that carry it (nulls backfilled)
-            spark.read.option("mergeSchema", "true")
-            .parquet(_manifest_path(path))
-            .orderBy("doc_id_offset")
-            .toPandas()
+    # mergeSchema: manifests written before next_doc_id existed union
+    # cleanly with rows that carry it (nulls backfilled). Only a missing
+    # path means "fresh index": a corrupt read propagates, since an empty
+    # manifest would restart doc_id_offset at 0 and append overlapping ids.
+    man = read_parquet_or_none(
+        spark.read.option("mergeSchema", "true"), _manifest_path(path)
+    )
+    if man is None:
+        return pd.DataFrame(
+            columns=[f.split()[0] for f in MANIFEST_SCHEMA.split(", ")]
         )
-    except AnalysisException as e:
-        # ONLY path-missing means "fresh index". A corrupt/transient read
-        # must propagate: treating it as empty would restart doc_id_offset
-        # at 0 and append overlapping ids — silent index corruption.
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return pd.DataFrame(
-                columns=[f.split()[0] for f in MANIFEST_SCHEMA.split(", ")]
-            )
-        raise
+    return man.orderBy("doc_id_offset").toPandas()
 
 
 def _require_uniform_bucket_bits(man: pd.DataFrame, op: str) -> int:
@@ -144,6 +144,41 @@ def _require_uniform_impact_params(man: pd.DataFrame, op: str):
             f"{sorted(pairs)}; re-encode to one (k1, b) before merging"
         )
     return next(iter(pairs))
+
+
+def _segment_encoding(man: pd.DataFrame, op: str, **asked) -> dict:
+    """The encoding every segment of one index shares — analyzer
+    ``profile``, ``bucket_bits``, and the ``k1``/``b`` folded into block
+    impacts — resolved for a new segment. On a fresh index a None in
+    ``asked`` takes the library default. Otherwise None inherits the
+    manifest's value, and an explicit value that differs raises here,
+    before anything is written: a mismatched segment would make every
+    later read and compact raise, or analyze queries with the wrong
+    profile."""
+    if not len(man):
+        defaults = {"profile": DEFAULT_PROFILE, "bucket_bits": DEFAULT_BUCKET_BITS,
+                    "k1": K1_DEFAULT, "b": B_DEFAULT}
+        return {k: defaults[k] if v is None else v for k, v in asked.items()}
+    k1, b = _require_uniform_impact_params(man, op) or (K1_DEFAULT, B_DEFAULT)
+    have = {
+        # read_segmented_index analyzes queries with the first row's profile
+        "profile": str(man["profile"].iloc[0]),
+        "bucket_bits": _require_uniform_bucket_bits(man, op),
+        "k1": k1,
+        "b": b,
+    }
+    for name, value in asked.items():
+        if value is not None and value != have[name]:
+            what = (
+                f"encoded impacts with (k1, b)={(k1, b)}"
+                if name in ("k1", "b")
+                else f"use {name}={have[name]!r}"
+            )
+            raise ValueError(
+                f"{op}: existing segments {what}; got {name}={value!r}. "
+                f"Pass {name}=None to inherit it"
+            )
+    return have
 
 
 def _doc_id_watermark(man: pd.DataFrame) -> int:
@@ -196,24 +231,21 @@ def append_segment(
     df: DataFrame,
     text_col: str = "text",
     key_cols=("conv_id", "turn_idx"),
-    profile: str = "text_en",
-    bucket_bits: int = DEFAULT_BUCKET_BITS,
-    k1: float = K1_DEFAULT,
-    b: float = B_DEFAULT,
+    profile: "str | None" = None,
+    bucket_bits: "int | None" = None,
+    k1: "float | None" = None,
+    b: "float | None" = None,
 ) -> AppendResult:
     """Build + commit one segment; no-op if ``segment_key`` is already in
-    the manifest (checkpoint resume)."""
+    the manifest (checkpoint resume). ``profile``, ``bucket_bits``, ``k1``
+    and ``b`` default to the index's encoding (``_segment_encoding``)."""
     man = read_manifest(spark, path)
     if len(man) and (man["segment_key"] == segment_key).any():
         row = man[man["segment_key"] == segment_key].iloc[0]
         return AppendResult(segment_key, True, int(row["n_docs"]), int(row["doc_id_offset"]))
-    enc = _require_uniform_impact_params(man, "append_segment") if len(man) else None
-    if enc is not None and (float(k1), float(b)) != enc:
-        raise ValueError(
-            f"append_segment: existing segments encoded impacts with "
-            f"(k1, b)={enc}; appending with ({k1}, {b}) would mix WAND "
-            "bound parameters — pass the matching values"
-        )
+    enc = _segment_encoding(
+        man, "append_segment", profile=profile, bucket_bits=bucket_bits, k1=k1, b=b
+    )
 
     # watermark, NOT sum(n_docs): after a compact applied deletes the
     # post-delete counts undercount the exhausted id range (see
@@ -221,21 +253,11 @@ def append_segment(
     offset = _doc_id_watermark(man)
     seg_dir = f"{path}/segments/{segment_key}"
     t0 = time.perf_counter()
-
-    idx = build_index(
-        df, text_col=text_col, key_cols=key_cols,
-        profile=profile, doc_id_offset=offset,
+    # segment data first (write-ahead), manifest row second
+    idx = build_and_write_index(
+        df, seg_dir, text_col=text_col, key_cols=key_cols, doc_id_offset=offset,
+        **enc,
     )
-    build_block_postings(idx, bucket_bits=bucket_bits, k1=k1, b=b)
-
-    # segment data first (write-ahead), manifest row second. Blocks are
-    # the canonical postings representation — the per-segment flat table
-    # would duplicate them 3-5x in storage/write volume at scale (Lucene
-    # segments store ONE postings format); read_segmented_index
-    # reconstructs a flat view from blocks on demand.
-    from .build import write_index
-
-    write_index(idx, seg_dir, write_flat=False)
     wall = time.perf_counter() - t0
     checksum = _content_checksum(df, list(key_cols), text_col)
     n_terms = idx.term_stats.count()
@@ -244,17 +266,14 @@ def append_segment(
             segment_key, seg_dir, idx.n_docs, offset, idx.sum_dl,
             int(n_terms), float(wall),
             float(idx.n_docs / wall if wall else 0.0),
-            checksum, profile, int(bucket_bits), time.time(),
+            checksum, enc["profile"], int(enc["bucket_bits"]), time.time(),
             float(idx.avgdl), offset + idx.n_docs,
-            float(k1), float(b),
+            float(enc["k1"]), float(enc["b"]),
         )
     ]
     spark.createDataFrame(row, MANIFEST_SCHEMA).coalesce(1).write.mode(
         "append"
     ).parquet(_manifest_path(path))
-    # segment is durable: release the per-build caches so long-running
-    # sessions (streaming micro-batches) don't accumulate pinned RDDs
-    idx.release()
     return AppendResult(segment_key, False, idx.n_docs, offset)
 
 
@@ -278,12 +297,11 @@ def record_deletes(spark: SparkSession, path: str, doc_ids: DataFrame) -> None:
 def read_deletes(
     spark: SparkSession, path: str, as_of: float | None = None
 ) -> DataFrame | None:
-    try:
-        raw = spark.read.option("mergeSchema", "true").parquet(_deletes_path(path))
-    except AnalysisException as e:
-        if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
-            return None
-        raise
+    raw = read_parquet_or_none(
+        spark.read.option("mergeSchema", "true"), _deletes_path(path)
+    )
+    if raw is None:
+        return None
     if as_of is not None:
         if "deleted_ts" in raw.columns:
             # pre-timestamp layouts have null deleted_ts -> treat as
@@ -331,26 +349,14 @@ def read_segmented_index(
     _require_uniform_bucket_bits(man, "read_segmented_index")
     dirs = list(man["segment_dir"])
     doc_stats = spark.read.parquet(*[f"{d}/doc_stats" for d in dirs])
-    blocks = None
-    try:
-        blocks = spark.read.parquet(*[f"{d}/postings_blocks" for d in dirs])
-    except Exception:
-        pass
-    flat_from_blocks = False
-    try:
-        # legacy segments that persisted a flat table (pre blocks-only)
-        postings_flat = spark.read.parquet(*[f"{d}/postings_flat" for d in dirs])
-    except AnalysisException:
-        # blocks-only segments (the default): flat view = lazy decode of
-        # the canonical blocks, exact dl re-joined from doc_stats
-        from .block_postings import decode_blocks_to_flat
-
-        if blocks is None:
-            raise
-        postings_flat = decode_blocks_to_flat(blocks).join(
-            doc_stats.select("doc_id", "dl"), "doc_id"
-        ).select("term", "doc_id", "tf", "dl", "dl_quant")
-        flat_from_blocks = True
+    blocks = read_parquet_or_none(
+        spark.read, *[f"{d}/postings_blocks" for d in dirs]
+    )
+    if blocks is None:
+        raise ValueError(
+            f"a segment under {path} has no postings_blocks: block postings "
+            "are the only postings format; rebuild the segment"
+        )
     term_stats = (
         spark.read.parquet(*[f"{d}/term_stats" for d in dirs])
         .groupBy("term")
@@ -362,7 +368,7 @@ def read_segmented_index(
     enc_params = _require_uniform_impact_params(man, "read_segmented_index")
     idx = InvertedIndex(
         doc_stats=doc_stats,
-        postings_flat=postings_flat,
+        postings_blocks=blocks,
         term_stats=term_stats,
         n_docs=int(man["n_docs"].sum()),
         sum_dl=int(man["sum_dl"].sum()),
@@ -370,7 +376,6 @@ def read_segmented_index(
         # natural key columns ONLY (doc_id is the engine-internal id, not
         # part of the key) — matching build_index/read_index's contract
         key_cols=tuple(key_cols_df),
-        postings_blocks=blocks,
         deletes=read_deletes(spark, path, as_of=as_of),
         bucket_bits=_require_uniform_bucket_bits(man, "read_segmented_index"),
         # each segment encoded impacts with its OWN avgdl; the MINIMUM over
@@ -383,7 +388,6 @@ def read_segmented_index(
         # watermark; the union's range bounds every live doc id
         min_doc_id=int(man["doc_id_offset"].min()),
         max_doc_id=_doc_id_watermark(man) - 1,
-        flat_from_blocks=flat_from_blocks,
         # register the persisted frame so release() can free it (one
         # leaked cache per read otherwise in micro-batch loops)
         _caches=[term_stats],
@@ -412,7 +416,6 @@ def compact(
     import numpy as np
 
     from ..functions.codec import decode_block
-    from ..functions.similarity import LENGTH_TABLE
 
     man = read_manifest(spark, path)
     if len(man) < 1:
@@ -508,7 +511,7 @@ def compact(
         """Decode a whole shuffle partition of block rows to flat posting
         arrays, drop deleted docs with ONE np.isin (doc ids are globally
         unique, so the partition's pooled delete set is exact), and
-        re-encode through ``encode_partition_blocks`` — the SAME
+        re-encode through ``encode_block_batch`` — the SAME
         whole-array kernel the original build uses. Earlier shapes paid
         per-group overhead that dominated exactly when a spread-out
         delete vector forced a full-index re-encode: one applyInPandas
@@ -520,7 +523,7 @@ def compact(
         import pyarrow as pa
         import pyarrow.compute  # noqa: F401 — pa.compute is NOT auto-imported
 
-        from ..functions.codec import encode_partition_blocks
+        from ..functions.codec import encode_block_batch
 
         batches = [bt for bt in batches if bt.num_rows]
         if not batches:
@@ -604,27 +607,8 @@ def compact(
             term_rep, buck_rep = term_rep[keep], buck_rep[keep]
         if not docs.size:
             return
-        dlq = LENGTH_TABLE[norms].astype(np.float64)
-        impacts = tfs / (tfs + k1 * (1.0 - b + b * dlq / avgdl))
-        cols = encode_partition_blocks(term_rep, buck_rep, docs, tfs, norms, impacts)
-        yield pa.RecordBatch.from_arrays(
-            [
-                # per-block term rows are small — back to 32-bit offsets
-                # to match BLOCKS_SCHEMA's string type
-                vocab.take(pa.array(cols["term"], type=pa.int32())).cast(pa.string()),
-                pa.array(np.asarray(cols["bucket_id"], dtype=np.int64)),
-                pa.array(np.asarray(cols["block_id"], dtype=np.int32)),
-                pa.array(np.asarray(cols["first_doc"], dtype=np.int64)),
-                pa.array(np.asarray(cols["last_doc"], dtype=np.int64)),
-                pa.array(np.asarray(cols["cnt"], dtype=np.int32)),
-                pa.array(np.asarray(cols["max_tf"], dtype=np.int32)),
-                pa.array(np.asarray(cols["sum_tf"], dtype=np.int64)),
-                pa.array(np.asarray(cols["max_impact"], dtype=np.float64)),
-                pa.array(cols["doc_bytes"], type=pa.binary()),
-                pa.array(cols["tf_bytes"], type=pa.binary()),
-                pa.array(cols["norm_bytes"], type=pa.binary()),
-            ],
-            names=[c.split()[0] for c in BLOCKS_SCHEMA.split(", ")],
+        yield encode_block_batch(
+            term_rep, vocab, buck_rep, docs, tfs, norms, avgdl, k1, b
         )
 
     merged = (
@@ -634,13 +618,7 @@ def compact(
     )
 
     out_dir = f"{path}/segments/{out_key}"
-    # (term, bucket_id) shuffle key, like write_blocks: term alone would
-    # funnel a hot term's whole block set into one write task
-    passthrough.unionByName(merged).repartition(
-        "term", "bucket_id"
-    ).sortWithinPartitions(
-        "term", "bucket_id", "block_id"
-    ).write.mode("overwrite").parquet(f"{out_dir}/postings_blocks")
+    write_blocks(passthrough.unionByName(merged), f"{out_dir}/postings_blocks")
     blocks_r = spark.read.parquet(f"{out_dir}/postings_blocks")
 
     def _minus_deleted(df: DataFrame) -> DataFrame:
@@ -650,40 +628,31 @@ def compact(
         # broadcast comfort at scale — let AQE pick the join strategy
         return df.join(deletes, "doc_id", "left_anti")
 
-    # relational tables: unions minus the deletion vector. NO flat-postings
-    # rewrite: blocks are canonical, and rewriting the full flat union made
-    # the merge O(index size) instead of O(overlap) — 3-5x write
-    # amplification per merge at scale (read_segmented_index reconstructs
-    # the flat view from blocks).
+    # relational tables: unions minus the deletion vector; term stats from
+    # the merged block METADATA (post-delete df/ttf, no pass over postings)
     _minus_deleted(
         spark.read.parquet(*[f"{d}/doc_stats" for d in dirs])
     ).write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
-    doc_stats_r = spark.read.parquet(f"{out_dir}/doc_stats")
-    # term stats: from the merged block METADATA — post-delete df/ttf with
-    # no extra pass over postings (same derivation as build_and_write_index)
-    (
-        blocks_r.groupBy("term")
-        .agg(F.sum("cnt").cast("long").alias("df"), F.sum("sum_tf").alias("ttf"))
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/term_stats")
+    term_stats_from_blocks(blocks_r).write.mode("overwrite").parquet(
+        f"{out_dir}/term_stats"
     )
+    doc_stats_r = spark.read.parquet(f"{out_dir}/doc_stats")
     stats = doc_stats_r.agg(*doc_stats_aggs()).first()
     n_docs, sum_dl = int(stats["n"]), int(stats["s"])
-    write_meta_file(
-        spark,
-        out_dir,
-        {
-            "n_docs": str(n_docs),
-            "sum_dl": str(sum_dl),
-            "profile": str(man["profile"].iloc[0]),
-            "key_cols": "",
-            "impacts_avgdl": repr(impacts_avgdl),
-            "impact_k1": repr(float(k1)),
-            "impact_b": repr(float(b)),
-            "bucket_bits": str(bucket_bits),
-            **doc_id_range_meta(stats["lo"], stats["hi"]),
-        },
-    )
+    write_meta_file(spark, out_dir, index_meta(InvertedIndex(
+        doc_stats=doc_stats_r,
+        postings_blocks=blocks_r,
+        term_stats=spark.read.parquet(f"{out_dir}/term_stats"),
+        n_docs=n_docs,
+        sum_dl=sum_dl,
+        profile=str(man["profile"].iloc[0]),
+        bucket_bits=bucket_bits,
+        impacts_avgdl=impacts_avgdl,
+        impact_k1=float(k1),
+        impact_b=float(b),
+        min_doc_id=stats["lo"],
+        max_doc_id=stats["hi"],
+    )))
 
     # new manifest: single compacted row. The checksum stays the XOR of the
     # source-segment input checksums — lineage/provenance of what was
@@ -721,8 +690,8 @@ def update_documents(
     match_on: Sequence[str] = ("conv_id", "turn_idx"),
     text_col: str = "text",
     key_cols=("conv_id", "turn_idx"),
-    profile: str = "text_en",
-    bucket_bits: int = DEFAULT_BUCKET_BITS,
+    profile: "str | None" = None,
+    bucket_bits: "int | None" = None,
 ) -> AppendResult:
     """Solr update-by-uniqueKey semantics (re-adding a doc with an
     existing id replaces it; the reference's whole pipeline relies on
@@ -735,7 +704,9 @@ def update_documents(
     deleting first would durably drop the documents with no replacement.
     The victim scan is bounded to ``doc_id < offset`` of the new segment
     so a resumed run never deletes the replacement docs it just added.
-    ``compact`` later drops the old versions physically."""
+    ``compact`` later drops the old versions physically. The new segment
+    inherits the index's encoding (``append_segment``); an explicit
+    ``profile``/``bucket_bits`` that conflicts raises before any write."""
     res = append_segment(
         spark, path, segment_key, new_docs,
         text_col=text_col, key_cols=key_cols, profile=profile,

@@ -17,7 +17,7 @@ Stage order follows Solr's own execution:
 1. main-query scoring (``score.score_or_docs``: OR semantics + ``mm``),
    ``fq`` predicate and prohibited terms applied pre-ranking. A page-only
    request — nothing but ``q``/``rows`` (plus ``hl``/``debug``, which
-   attach to the page) over a block index whose impacts were encoded with
+   attach to the page) over an index whose block impacts were encoded with
    the request's ``k1``/``b`` — is served by block-max WAND
    (``block_postings.bm25_topk_wand``) instead: the same page bit for
    bit, from one scoring job instead of an aggregate over every match.
@@ -168,7 +168,7 @@ def select(
     for exactly the docs on the page (post-boost/rerank/collapse), not a
     re-derived plain-``q`` top-k.
     """
-    spark = index.postings_flat.sparkSession
+    spark = index.doc_stats.sparkSession
     if boost_mode not in ("multiply", "sum"):
         raise ValueError(f"boost_mode must be multiply|sum, got {boost_mode!r}")
     if cursor_mark is not None and (start or elevate_ids):
@@ -208,7 +208,6 @@ def select(
     # 1. a page-only request is served by WAND (module docstring, stage 1)
     page_only = (
         quantize
-        and index.postings_blocks is not None
         and (index.impact_k1, index.impact_b) == (float(k1), float(b))
         # WAND refuses to bucket deletes without the build's bucket width
         and (index.deletes is None or index.bucket_bits is not None)

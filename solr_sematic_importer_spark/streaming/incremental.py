@@ -23,9 +23,9 @@ def incremental_index_query(
     stream_df: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    profile: str = "text_en",
+    profile: "str | None" = None,
     key_cols=("conv_id", "turn_idx"),
-    bucket_bits: int = 14,
+    bucket_bits: "int | None" = None,
     trigger_available_now: bool = True,
 ):
     """Attach the segment-per-micro-batch sink to a streaming DataFrame of

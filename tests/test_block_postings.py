@@ -5,12 +5,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from solr_sematic_importer_spark.functions.codec import decode_block
-from solr_sematic_importer_spark.operators.block_postings import (
-    bm25_topk_wand,
-    build_block_postings,
+from solr_sematic_importer_spark.functions.codec import BLOCK_COLUMNS, decode_block
+from solr_sematic_importer_spark.operators.block_postings import bm25_topk_wand
+from solr_sematic_importer_spark.operators.build import (
+    build_and_write_index,
+    build_index,
 )
-from solr_sematic_importer_spark.operators.build import build_index
 from solr_sematic_importer_spark.operators.score import bm25_topk
 from solr_sematic_importer_spark.sources.transcripts import synthetic_transcripts
 
@@ -28,25 +28,37 @@ QUERIES = [
 
 
 @pytest.fixture(scope="module")
-def blocked(spark):
+def blocked(spark, tmp_path_factory):
     df = synthetic_transcripts(spark, N_CONVS)
-    idx = build_index(df, profile="text_en")
     # small buckets (256 docs) so the corpus spans many buckets and the
-    # WAND early-stop actually exercises
-    blocks = build_block_postings(idx, bucket_bits=8)
-    blocks.persist().count()
+    # WAND early-stop actually exercises; doc_vectors keep the analyzer's
+    # output as the reference the encode is checked against
+    idx = build_and_write_index(
+        df, str(tmp_path_factory.mktemp("blocked") / "idx"), profile="text_en",
+        bucket_bits=8, write_doc_vectors=True,
+    )
+    blocks = idx.postings_blocks
     return idx, blocks
 
 
 def test_blocks_cover_all_postings(blocked):
+    """The encode drops no posting: the blocks' counts equal the analyzer
+    output (one posting per distinct term of a doc), in total and per
+    term."""
     idx, blocks = blocked
     got = blocks.agg(F.sum("cnt")).first()[0]
-    want = idx.postings_flat.count()
+    want = idx.doc_vectors.select(F.sum(F.size("terms"))).first()[0]
     assert got == want
-    # per-term totals == docfreq
     per_term = blocks.groupBy("term").agg(F.sum("cnt").alias("c"))
-    joined = per_term.join(idx.term_stats, "term")
-    assert joined.filter(F.col("c") != F.col("df")).count() == 0
+    analyzed_df = (
+        idx.doc_vectors.select(F.explode("terms").alias("term"))
+        .groupBy("term").agg(F.count("*").alias("df"))
+    )
+    for counted in (per_term, idx.term_stats.select("term", F.col("df").alias("c"))):
+        joined = counted.join(analyzed_df, "term", "full_outer")
+        assert joined.filter(
+            F.col("c").isNull() | F.col("df").isNull() | (F.col("c") != F.col("df"))
+        ).count() == 0
 
 
 def test_blocks_disjoint_sorted_within_bucket(blocked):
@@ -117,7 +129,7 @@ def test_wand_k_larger_than_hits(blocked):
     assert len(got) == df_z
 
 
-def test_hot_term_skew_bounded_by_bucket_salt(spark):
+def test_hot_term_skew_bounded_by_bucket_salt(spark, tmp_path):
     """The skew guarantee (SURVEY §4.1): a term occurring in EVERY doc
     (the empty-stopword 'the' scenario at 10^12 scale) still never
     produces an encode group larger than the bucket width — the bucket IS
@@ -127,10 +139,11 @@ def test_hot_term_skew_bounded_by_bucket_salt(spark):
         [(i, f"hot filler{i} filler{i%7}") for i in range(n)],
         "doc_id long, text string",
     )
-    idx = build_index(
-        docs, text_col="text", key_cols=(), profile="simple", doc_id_col="doc_id"
+    idx = build_and_write_index(
+        docs, str(tmp_path / "hot"), text_col="text", key_cols=(),
+        profile="simple", doc_id_col="doc_id", bucket_bits=6,  # 64-doc buckets
     )
-    blocks = build_block_postings(idx, bucket_bits=6)  # 64-doc buckets
+    blocks = idx.postings_blocks
     hot = blocks.filter(F.col("term") == "hot")
     per_group = hot.groupBy("bucket_id").agg(F.sum("cnt").alias("n")).collect()
     assert len(per_group) == (n + 63) // 64          # spread over all buckets
@@ -141,35 +154,59 @@ def test_hot_term_skew_bounded_by_bucket_salt(spark):
     assert len(got) == 5
 
 
-def test_build_and_write_index_matches_memory_path(spark, tmp_path, blocked):
-    """The scale-path disk build (one shuffle, vectorized partition
-    encoder, term_stats from block metadata, blocks-only storage) must be
-    indistinguishable from the in-memory build."""
-    from solr_sematic_importer_spark.operators.build import build_and_write_index
-
-    mem, _ = blocked
-    df = synthetic_transcripts(spark, N_CONVS)
-    disk = build_and_write_index(
-        df, str(tmp_path / "idx"), profile="text_en", bucket_bits=8
+def test_build_and_write_index_matches_memory_path(spark, tmp_path):
+    """One build, one format: the in-memory build, the disk build and a
+    one-segment append run the same stages, so they produce byte-identical
+    block rows, identical term_stats and the same encoding metadata — and
+    every read path scores the same."""
+    from solr_sematic_importer_spark.operators.segments import (
+        append_segment,
+        read_segmented_index,
     )
-    assert (disk.n_docs, disk.sum_dl) == (mem.n_docs, mem.sum_dl)
-    ts_mem = {r["term"]: (r["df"], r["ttf"]) for r in mem.term_stats.collect()}
-    ts_disk = {r["term"]: (r["df"], r["ttf"]) for r in disk.term_stats.collect()}
-    assert ts_mem == ts_disk
+
+    df = synthetic_transcripts(spark, N_CONVS)
+    mem = build_index(df, profile="text_en")
+    disk = build_and_write_index(df, str(tmp_path / "idx"), profile="text_en")
+    append_segment(spark, str(tmp_path / "seg"), "only", df)
+    seg = read_segmented_index(spark, str(tmp_path / "seg"))
+
+    def block_rows(idx):
+        rows = idx.postings_blocks.select(*BLOCK_COLUMNS).collect()
+        return sorted(tuple(r) for r in rows)
+
+    def term_stats(idx):
+        return {r["term"]: (r["df"], r["ttf"]) for r in idx.term_stats.collect()}
+
+    def encoding(idx):
+        return (idx.n_docs, idx.sum_dl, idx.min_doc_id, idx.max_doc_id,
+                idx.impacts_avgdl, idx.impact_k1, idx.impact_b, idx.bucket_bits)
+
+    want_blocks, want_stats = block_rows(mem), term_stats(mem)
+    for other in (disk, seg):
+        assert block_rows(other) == want_blocks
+        assert term_stats(other) == want_stats
+        assert encoding(other) == encoding(mem)
+
+    def exhaustive(idx, q, quantize):
+        return [(r["doc_id"], r["score"])
+                for r in bm25_topk(idx, q, k=10, quantize=quantize)
+                .select("doc_id", "score").collect()]
+
     for q in QUERIES[:5]:
         a = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(mem, q, k=10).collect()]
-        b = [(r["doc_id"], r["score"]) for r in bm25_topk_wand(disk, q, k=10).collect()]
-        assert a == b, q
-        # flat view decoded from blocks (exact-dl join) agrees too
-        c = [
-            (r["doc_id"], r["score"])
-            for r in bm25_topk(disk, q, k=10, quantize=True)
-            .select("doc_id", "score")
-            .collect()
-        ]
-        assert [d for d, _ in c] == [d for d, _ in b], q
-        for (_, sb), (_, sc) in zip(b, c):
-            assert sc == pytest.approx(sb, abs=1e-12)
+        for other in (disk, seg):
+            assert [(r["doc_id"], r["score"])
+                    for r in bm25_topk_wand(other, q, k=10).collect()] == a, q
+        # exact dl reaches the decoded postings through the doc_stats join,
+        # so quantize=False scores agree between memory and disk too
+        for quantize in (True, False):
+            assert exhaustive(disk, q, quantize) == exhaustive(mem, q, quantize), q
+        c = exhaustive(disk, q, True)
+        assert [d for d, _ in c] == [d for d, _ in a], q
+        for (_, sa), (_, sc) in zip(a, c):
+            assert sc == pytest.approx(sa, abs=1e-12)
+    mem.release()
+    seg.release()
 
 
 def test_wand_refuses_deletes_without_bucket_bits(spark, blocked, tmp_path):
@@ -189,13 +226,10 @@ def test_wand_refuses_deletes_without_bucket_bits(spark, blocked, tmp_path):
 def test_flat_terms_filters_blocks_scan_before_decode(spark, tmp_path):
     """On a blocks-only index, flat_terms() must push the term filter
     into the BLOCKS parquet scan (before the Python decode stage) — a
-    filter on the decoded view cannot cross the mapInPandas barrier and
+    filter on the decoded view cannot cross the mapInArrow barrier and
     would decode the whole index per query."""
-    from solr_sematic_importer_spark.operators.build import build_and_write_index
-
     df = synthetic_transcripts(spark, 30)
     disk = build_and_write_index(df, str(tmp_path / "fidx"), profile="text_en")
-    assert disk.flat_from_blocks
     import contextlib
     import io
 
@@ -205,8 +239,8 @@ def test_flat_terms_filters_blocks_scan_before_decode(spark, tmp_path):
     plan = buf.getvalue()
     # the In(term) filter must be PUSHED into a parquet scan (the blocks
     # scan — the only table with a term column), i.e. applied before the
-    # Python decode stage (MapInPandas), which no filter can cross
-    assert "MapInPandas" in plan, plan
+    # Python decode stage (MapInArrow), which no filter can cross
+    assert "MapInArrow" in plan, plan
     pushed = [
         ln for ln in plan.splitlines()
         if "PushedFilters" in ln and "In(term" in ln
@@ -226,7 +260,7 @@ def test_flat_terms_filters_blocks_scan_before_decode(spark, tmp_path):
     assert fast == full and fast
 
 
-def test_wand_exact_ties_across_buckets(spark):
+def test_wand_exact_ties_across_buckets(spark, tmp_path):
     """Exact score ties spread across buckets: the WAND prune keeps
     buckets whose upper bound EQUALS theta (>=, not >) so a tied doc
     with a smaller doc_id can still win the (score desc, doc_id asc)
@@ -243,11 +277,10 @@ def test_wand_exact_ties_across_buckets(spark):
         for i, t in enumerate(texts)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    idx = build_index(
-        df, text_col="text", key_cols=(), profile="simple", doc_id_col="doc_id"
+    idx = build_and_write_index(
+        df, str(tmp_path / "ties"), text_col="text", key_cols=(),
+        profile="simple", doc_id_col="doc_id", bucket_bits=6,  # ids span 8+ buckets
     )
-    blocks = build_block_postings(idx, bucket_bits=6)  # ids span 8+ buckets
-    blocks.persist().count()
     for k in (1, 5, 11, 12, 13):
         want = [(r["doc_id"], r["score"])
                 for r in bm25_topk(idx, "tied", k=k).select("doc_id", "score")
@@ -256,4 +289,4 @@ def test_wand_exact_ties_across_buckets(spark):
                for r in bm25_topk_wand(idx, "tied", k=k, bucket_batch=1)
                .collect()]
         assert got == want, k
-    blocks.unpersist()
+    idx.release()

@@ -7,6 +7,8 @@ from hypothesis import given, settings, strategies as st
 from solr_sematic_importer_spark.functions.codec import (
     BLOCK_SIZE,
     decode_block,
+    decode_block_batch,
+    encode_block_batch,
     encode_blocks,
     encode_partition_blocks,
     varint_decode,
@@ -135,6 +137,41 @@ def test_partition_encoder_matches_per_group_encoder(seed, n_groups):
     assert set(got) == set(per_group)
     for k in per_group:
         assert got[k] == per_group[k], k
+
+
+@given(st.integers(min_value=0), st.integers(min_value=1, max_value=20))
+@settings(max_examples=50, deadline=None)
+def test_batch_decoder_matches_per_block_decoder(seed, n_groups):
+    """decode_block_batch over a whole batch of block rows == decode_block
+    row by row, concatenated in block order."""
+    import pyarrow as pa
+
+    rng = np.random.default_rng(seed)
+    vocab = pa.array([f"t{i:03d}" for i in range(n_groups)])
+    term_ids, docs = [], []
+    for t in range(n_groups):
+        d = np.unique(rng.integers(0, 1 << 20, size=int(rng.integers(1, 600))))
+        term_ids.append(np.full(d.size, t, dtype=np.int32))
+        docs.append(d.astype(np.int64))
+    term_ids, docs = np.concatenate(term_ids), np.concatenate(docs)
+    buckets = docs >> 14
+    tfs = rng.integers(1, 1000, size=docs.size).astype(np.int64)
+    norms = rng.integers(0, 256, size=docs.size).astype(np.uint8)
+    blocks = encode_block_batch(term_ids, vocab, buckets, docs, tfs, norms, 50.0, 1.2, 0.75)
+    got = decode_block_batch(blocks)
+    want_terms, want_docs, want_tfs, want_dlq = [], [], [], []
+    for r in blocks.to_pylist():
+        d, t, nb = decode_block(r["first_doc"], r["doc_bytes"], r["tf_bytes"], r["norm_bytes"])
+        want_terms += [r["term"]] * d.size
+        want_docs.append(d)
+        want_tfs.append(t)
+        want_dlq.append(LENGTH_TABLE[nb])
+    assert got.column("term").to_pylist() == want_terms
+    assert np.array_equal(got.column("doc_id").to_numpy(), np.concatenate(want_docs))
+    assert np.array_equal(got.column("tf").to_numpy(), np.concatenate(want_tfs))
+    assert np.array_equal(got.column("dl_quant").to_numpy(), np.concatenate(want_dlq))
+    # the decode inverts the encode: every posting comes back
+    assert np.array_equal(np.sort(got.column("doc_id").to_numpy()), np.sort(docs))
 
 
 def test_block_max_impact_is_upper_bound():

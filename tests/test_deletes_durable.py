@@ -6,11 +6,9 @@ drops deleted docs and rewrites df/N/avgdl)."""
 import pytest
 from pyspark.sql import functions as F
 
-from solr_sematic_importer_spark.operators.block_postings import (
-    bm25_topk_wand,
-    build_block_postings,
-)
+from solr_sematic_importer_spark.operators.block_postings import bm25_topk_wand
 from solr_sematic_importer_spark.operators.build import (
+    build_and_write_index,
     build_index,
     delete_by_query,
     read_index,
@@ -29,13 +27,13 @@ def _ids(rows):
     return [r["doc_id"] for r in rows]
 
 
-def test_wand_deletes_applied_before_bucket_truncation(spark):
+def test_wand_deletes_applied_before_bucket_truncation(spark, tmp_path):
     """With ONE bucket holding the whole corpus, a deleted doc inside the
     bucket's top-k must not evict the live doc ranked just below it (the
     round-1 bug: anti-join ran after the per-bucket cut)."""
     df = synthetic_transcripts(spark, 60)
-    idx = build_index(df, profile="text_en")
-    build_block_postings(idx, bucket_bits=30)  # single bucket
+    idx = build_and_write_index(df, str(tmp_path / "idx"), profile="text_en",
+                                bucket_bits=30)  # single bucket
     assert idx.postings_blocks.select("bucket_id").distinct().count() == 1
 
     q = "word"  # head term: enough matches that the bucket top-k truncates
@@ -72,7 +70,6 @@ def test_synonym_query_honors_deletes(spark):
 def test_deletes_survive_write_read_roundtrip(spark, tmp_path):
     df = synthetic_transcripts(spark, 40)
     idx = build_index(df, profile="text_en")
-    build_block_postings(idx, bucket_bits=8)
     top = bm25_topk(idx, Q, k=5).select("doc_id").collect()
     victim = top[0]["doc_id"]
     delete_by_query(idx, F.col("doc_id") == victim)
@@ -206,11 +203,16 @@ def test_mixed_bucket_bits_rejected(spark, tmp_path):
     full = synthetic_transcripts(spark, 20).persist()
     mid = "conv_00000010"
     append_segment(spark, path, "a", full.filter(F.col("conv_id") < mid), bucket_bits=8)
-    append_segment(spark, path, "b", full.filter(F.col("conv_id") >= mid), bucket_bits=10)
+    # the mismatched append itself raises, before it writes anything ...
     with pytest.raises(ValueError, match="bucket_bits"):
-        read_segmented_index(spark, path)
-    with pytest.raises(ValueError, match="bucket_bits"):
-        compact(spark, path)
+        append_segment(spark, path, "b", full.filter(F.col("conv_id") >= mid),
+                       bucket_bits=10)
+    # ... so the index stays readable and compactable
+    append_segment(spark, path, "b", full.filter(F.col("conv_id") >= mid))
+    idx = read_segmented_index(spark, path)
+    assert idx.bucket_bits == 8 and idx.n_docs == full.count()
+    compact(spark, path)
+    assert read_segmented_index(spark, path).n_docs == full.count()
 
 
 def test_corrupt_manifest_raises_not_empty(spark, tmp_path):

@@ -23,7 +23,7 @@ def disk_idx(spark, tmp_path_factory):
     path = str(tmp_path_factory.mktemp("planidx"))
     build_and_write_index(
         synthetic_transcripts(spark, 40), path, profile="text_en",
-        bucket_bits=8, write_flat=True, write_doc_vectors=True,
+        bucket_bits=8, write_doc_vectors=True,
     )
     return read_index(spark, path)
 
@@ -45,10 +45,10 @@ def test_scoring_stays_in_codegen(disk_idx):
 
 
 def test_projection_prunes_scan_columns(disk_idx):
-    df = disk_idx.postings_flat.select("term", "doc_id").filter(
+    df = disk_idx.postings_blocks.select("term", "doc_bytes").filter(
         F.col("term") == "zeppelin"
     )
-    assert_column_pruned(df, "dl_quant")
+    assert_column_pruned(df, "norm_bytes")
     assert pushed_filters(df)
 
 

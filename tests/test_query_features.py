@@ -3,22 +3,21 @@
 import pytest
 from pyspark.sql import functions as F
 
-from solr_sematic_importer_spark.operators.block_postings import (
-    bm25_topk_wand,
-    build_block_postings,
+from solr_sematic_importer_spark.operators.block_postings import bm25_topk_wand
+from solr_sematic_importer_spark.operators.build import (
+    build_and_write_index,
+    build_index,
+    delete_by_query,
 )
-from solr_sematic_importer_spark.operators.build import build_index, delete_by_query
 from solr_sematic_importer_spark.operators.score import bm25_topk
 from solr_sematic_importer_spark.sources.transcripts import synthetic_transcripts
 
 
 @pytest.fixture(scope="module")
-def idx(spark):
+def idx(spark, tmp_path_factory):
     df = synthetic_transcripts(spark, 80)
-    index = build_index(df, profile="text_en")
-    build_block_postings(index, bucket_bits=8)
-    index.postings_blocks.persist().count()
-    return index
+    path = str(tmp_path_factory.mktemp("query_features") / "idx")
+    return build_and_write_index(df, path, profile="text_en", bucket_bits=8)
 
 
 def _ids(rows):

@@ -19,10 +19,7 @@ via SolrAdminActions.java:268), Lucene stored term vectors for MLT.
 import pytest
 from pyspark.sql import functions as F
 
-from solr_sematic_importer_spark.operators.block_postings import (
-    bm25_topk_wand,
-    build_block_postings,
-)
+from solr_sematic_importer_spark.operators.block_postings import bm25_topk_wand
 from solr_sematic_importer_spark.operators.build import (
     build_and_write_index,
     build_index,
@@ -37,15 +34,15 @@ def _ids(rows):
     return [r["doc_id"] for r in rows]
 
 
-def test_wand_bucketed_deletes_beyond_driver_scale(spark):
+def test_wand_bucketed_deletes_beyond_driver_scale(spark, tmp_path):
     """One MILLION delete rows (a size you'd never collect()) through the
     bucketed delete path: WAND stays bit-identical to the exhaustive
     scorer and every deleted candidate is masked. The delete DataFrame is
     built distributed (spark.range) and only per-bucket slices ever reach
     a scorer."""
     df = synthetic_transcripts(spark, 120)
-    idx = build_index(df, profile="text_en")
-    build_block_postings(idx, bucket_bits=8)
+    idx = build_and_write_index(df, str(tmp_path / "idx"), profile="text_en",
+                                bucket_bits=8)
 
     q = "word can use"
     before = bm25_topk(idx, q, k=8).collect()
@@ -68,15 +65,15 @@ def test_wand_bucketed_deletes_beyond_driver_scale(spark):
 
 
 def test_mlt_term_vector_is_doc_major_point_lookup(spark):
-    """interesting_terms must read ONLY doc_vectors: with the postings
-    table swapped for an empty one the result is unchanged (a postings
-    scan would return zero terms)."""
+    """interesting_terms must read ONLY doc_vectors: with the block
+    postings swapped for an empty table the result is unchanged (a
+    postings scan would return zero terms)."""
     df = synthetic_transcripts(spark, 30)
     idx = build_index(df, profile="text_en")
     assert idx.doc_vectors is not None
     want = interesting_terms(idx, 3, min_term_freq=1, min_doc_freq=1)
     assert want  # non-degenerate fixture
-    idx.postings_flat = idx.postings_flat.limit(0)
+    idx.postings_blocks = idx.postings_blocks.limit(0)
     got = interesting_terms(idx, 3, min_term_freq=1, min_doc_freq=1)
     assert got == want
 
@@ -101,6 +98,42 @@ def test_doc_vectors_persisted_and_pruned(spark, tmp_path):
     mem = build_index(df, profile="text_en")
     assert interesting_terms(idx, 7, min_term_freq=1, min_doc_freq=1) == \
         interesting_terms(mem, 7, min_term_freq=1, min_doc_freq=1)
+
+
+def test_index_reads_raise_on_corrupt_or_missing_tables(spark, tmp_path):
+    """Only a MISSING optional table reads as absent. A corrupt doc_vectors
+    file raises instead of silently dropping the forward index, and an
+    index or segment directory without postings_blocks raises a
+    ValueError that names it."""
+    import os
+    import re
+    import shutil
+
+    from solr_sematic_importer_spark.operators.segments import (
+        append_segment,
+        read_segmented_index,
+    )
+
+    df = synthetic_transcripts(spark, 10)
+    path = str(tmp_path / "broken")
+    build_and_write_index(df, path, bucket_bits=8)
+    assert read_index(spark, path).doc_vectors is None  # absent is fine
+    os.makedirs(f"{path}/doc_vectors")
+    with open(f"{path}/doc_vectors/part-00000.parquet", "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        read_index(spark, path)
+    assert "doc_vectors" in str(err.value)
+    shutil.rmtree(f"{path}/doc_vectors")
+    shutil.rmtree(f"{path}/postings_blocks")
+    with pytest.raises(ValueError, match=re.escape(path)):
+        read_index(spark, path)
+
+    seg_root = str(tmp_path / "broken_segs")
+    append_segment(spark, seg_root, "s0", df, bucket_bits=8)
+    shutil.rmtree(f"{seg_root}/segments/s0/postings_blocks")
+    with pytest.raises(ValueError, match=re.escape(seg_root)):
+        read_segmented_index(spark, seg_root)
 
 
 def test_compact_avgdl_drift_keeps_wand_bounds_valid(spark, tmp_path):

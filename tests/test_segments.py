@@ -359,7 +359,7 @@ def test_impact_params_are_an_encoding_contract(spark, tmp_path):
     append_segment(spark, path, "lo", lo, bucket_bits=8, k1=2.0, b=0.5)
     # mixing parameters across segments is rejected
     with pytest.raises(ValueError, match="impacts with"):
-        append_segment(spark, path, "hi", hi, bucket_bits=8)  # default k1/b
+        append_segment(spark, path, "hi", hi, bucket_bits=8, k1=1.2, b=0.75)
     append_segment(spark, path, "hi", hi, bucket_bits=8, k1=2.0, b=0.5)
 
     idx = read_segmented_index(spark, path)
@@ -382,6 +382,49 @@ def test_impact_params_are_an_encoding_contract(spark, tmp_path):
     assert (idx2.impact_k1, idx2.impact_b) == (2.0, 0.5)
     idx.release()
     idx2.release()
+
+
+def test_segment_encoding_inherited_and_conflicts_rejected_before_write(
+    spark, tmp_path
+):
+    """profile, bucket_bits and k1/b are ONE encoding per index. None (the
+    default of append_segment and update_documents) inherits the
+    manifest's values; an explicit conflict raises before anything is
+    written, so the index stays readable and compactable."""
+    import os
+
+    from solr_sematic_importer_spark.operators.segments import update_documents
+
+    path = str(tmp_path / "encidx")
+    full = synthetic_transcripts(spark, 20).persist()
+    append_segment(spark, path, "base", full, profile="text_general",
+                   bucket_bits=8, k1=2.0, b=0.5)
+    for kw in ({"profile": "text_en"}, {"bucket_bits": 14}, {"k1": 1.2},
+               {"b": 0.75}):
+        with pytest.raises(ValueError, match="existing segments"):
+            append_segment(spark, path, "bad", full, **kw)
+    with pytest.raises(ValueError, match="existing segments"):
+        update_documents(spark, path, "bad", full, bucket_bits=14)
+    assert not os.path.exists(f"{path}/segments/bad")
+    assert list(read_manifest(spark, path)["segment_key"]) == ["base"]
+
+    victim = full.first()["conv_id"]
+    new_turns = full.filter(F.col("conv_id") == victim).withColumn(
+        "text", F.lit("Xylophone replacement")
+    )
+    update_documents(spark, path, "upd", new_turns)
+    man = read_manifest(spark, path)
+    assert set(man["profile"]) == {"text_general"}
+    assert set(man["bucket_bits"]) == {8}
+    assert set(zip(man["impact_k1"], man["impact_b"])) == {(2.0, 0.5)}
+    idx = read_segmented_index(spark, path)
+    hits = bm25_topk_wand(idx, "xylophone", k=50, k1=2.0, b=0.5).collect()
+    assert len(hits) == new_turns.count()
+    assert all(h["doc_id"] >= man["doc_id_offset"].max() for h in hits)
+    idx.release()
+    compact(spark, path, k1=2.0, b=0.5)
+    assert read_segmented_index(spark, path).n_docs == full.count()
+    full.unpersist()
 
 
 def test_get_by_key_empty_request_returns_nothing(spark, seg_path):

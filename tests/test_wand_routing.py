@@ -12,7 +12,6 @@ from solr_sematic_importer_spark.operators import select as select_mod
 from solr_sematic_importer_spark.operators.block_postings import (
     _bucket_span,
     bm25_topk_wand,
-    build_block_postings,
 )
 from solr_sematic_importer_spark.operators.build import (
     build_and_write_index,
@@ -69,12 +68,12 @@ def _jobs(spark, fn):
 
 
 @pytest.fixture(scope="module")
-def small(spark):
+def small(spark, tmp_path_factory):
     """3000 docs in 3 buckets of 1024: the span (3) fits bucket_batch."""
     df = spark.createDataFrame(_texts(N_DOCS), "doc_id long, text string")
-    idx = build_index(df, key_cols=(), profile="simple", doc_id_col="doc_id")
-    build_block_postings(idx, bucket_bits=10).persist().count()
-    return idx
+    path = str(tmp_path_factory.mktemp("small") / "idx")
+    return build_and_write_index(df, path, key_cols=(), profile="simple",
+                                 doc_id_col="doc_id", bucket_bits=10)
 
 
 @pytest.fixture(scope="module")
@@ -125,10 +124,10 @@ def test_one_job_path_identical_to_ub_loop(small):
         assert _rows(loop1) == _exhaustive(small, q, 5), q
 
 
-def test_one_job_path_identical_with_deletes(spark):
+def test_one_job_path_identical_with_deletes(spark, tmp_path):
     df = spark.createDataFrame(_texts(N_DOCS), "doc_id long, text string")
-    idx = build_index(df, key_cols=(), profile="simple", doc_id_col="doc_id")
-    build_block_postings(idx, bucket_bits=10)
+    idx = build_and_write_index(df, str(tmp_path / "idx"), key_cols=(),
+                                profile="simple", doc_id_col="doc_id", bucket_bits=10)
     # delete the top of every tie group so live docs ranked just below
     # deleted ones must surface
     delete_by_query(idx, (F.col("doc_id") % 21 == 0) | (F.col("doc_id") < 40))
@@ -153,12 +152,13 @@ def test_warm_wand_and_page_only_select_run_at_most_two_jobs(spark, small, writt
         assert wand == page == loop
 
 
-def test_ub_loop_collects_at_most_batch_times_k_rows_per_round(spark, monkeypatch):
+def test_ub_loop_collects_at_most_batch_times_k_rows_per_round(spark, monkeypatch, tmp_path):
     """Each bucket is cut to its top-k before collect(), so one loop round
     brings at most bucket_batch * k scored rows to the driver."""
     df = spark.createDataFrame(_texts(1000), "doc_id long, text string")
-    idx = build_index(df, key_cols=(), profile="simple", doc_id_col="doc_id")
-    build_block_postings(idx, bucket_bits=6)  # 16 buckets
+    idx = build_and_write_index(df, str(tmp_path / "idx"), key_cols=(),
+                                profile="simple", doc_id_col="doc_id",
+                                bucket_bits=6)  # 16 buckets
     batch, k = 3, 4
     cls = type(idx.doc_stats)
     real_collect = cls.collect
@@ -185,9 +185,12 @@ def test_ub_loop_collects_at_most_batch_times_k_rows_per_round(spark, monkeypatc
 # -- doc-id range metadata ---------------------------------------------------
 
 
-def test_doc_id_range_written_by_both_builds_and_read_back(spark, small, written, tmp_path):
-    assert (small.min_doc_id, small.max_doc_id) == (0, N_DOCS - 1)
-    write_index(small, str(tmp_path / "mem"))
+def test_doc_id_range_written_by_both_builds_and_read_back(spark, written, tmp_path):
+    df = spark.createDataFrame(_texts(N_DOCS), "doc_id long, text string")
+    mem = build_index(df, key_cols=(), profile="simple", doc_id_col="doc_id")
+    assert (mem.min_doc_id, mem.max_doc_id) == (0, N_DOCS - 1)
+    write_index(mem, str(tmp_path / "mem"))
+    mem.release()
     back = read_index(spark, str(tmp_path / "mem"))
     assert (back.min_doc_id, back.max_doc_id) == (0, N_DOCS - 1)
 
