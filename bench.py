@@ -54,6 +54,27 @@ def _default_parallelism() -> int:
     return min(16, os.cpu_count() or 16)
 
 
+def host_shape() -> dict:
+    """The host a run measured: the CPUs this process may run on (what
+    ``nproc`` prints), ``MemTotal`` from /proc/meminfo in kB (None where
+    there is no /proc), and ``SPARK_GRAFT_CPUS`` as set (None when unset).
+    Runs on different hosts are not comparable without it."""
+    mem_kb = None
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    mem_kb = int(line.split()[1])
+                    break
+    except OSError:
+        pass
+    return {
+        "nproc": len(os.sched_getaffinity(0)),
+        "mem_total_kb": mem_kb,
+        "SPARK_GRAFT_CPUS": os.environ.get("SPARK_GRAFT_CPUS"),
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or _default_parallelism()
@@ -106,7 +127,7 @@ def main() -> None:
     from solr_sematic_importer_spark.sources.transcripts import synthetic_transcripts
 
     times: dict[str, float] = {}
-    extra: dict[str, float] = {}
+    extra: dict[str, object] = host_shape()
 
     def timed(name: str, fn):
         t0 = time.perf_counter()

@@ -271,14 +271,14 @@ def decode_block(
     return docs, tfs, norms
 
 
-def decode_block_batch(batch):
-    """An Arrow batch of block rows (``term, first_doc, cnt, doc_bytes,
-    tf_bytes, norm_bytes``) -> one Arrow batch of postings
-    ``(term, doc_id, tf, dl_quant)``, in block order. One pass over the
-    whole batch, no loop over blocks: LEB128 is self-delimiting, so each
-    varint column decodes as ONE concatenated buffer, and the per-block
-    ``cnt`` splits the doc gaps back into blocks for a segmented prefix
-    sum (``decode_block`` per row, vectorized)."""
+def decode_block_batch(batch, keys=("term",)):
+    """An Arrow batch of block rows (``<keys>, first_doc, cnt, doc_bytes,
+    tf_bytes, norm_bytes``) -> one Arrow batch of postings ``(<keys>,
+    doc_id, tf, dl_quant)`` in block order, each repeating its block's
+    keys. One pass over the whole batch, no loop over blocks: LEB128 is
+    self-delimiting, so each varint column decodes as ONE concatenated
+    buffer, and the per-block ``cnt`` splits the doc gaps back into blocks
+    for a segmented prefix sum (``decode_block`` per row, vectorized)."""
     import pyarrow as pa
 
     from .similarity import LENGTH_TABLE
@@ -299,11 +299,7 @@ def decode_block_batch(batch):
     docs = np.repeat(first - before, cnt) + csum
     rows = pa.array(np.repeat(np.arange(len(cnt), dtype=np.int64), cnt))
     return pa.RecordBatch.from_arrays(
-        [
-            batch.column("term").take(rows),
-            pa.array(docs),
-            pa.array(tfs),
-            pa.array(LENGTH_TABLE[norms].astype(np.int64)),
-        ],
-        names=["term", "doc_id", "tf", "dl_quant"],
+        [batch.column(k).take(rows) for k in keys]
+        + [pa.array(docs), pa.array(tfs), pa.array(LENGTH_TABLE[norms].astype(np.int64))],
+        names=[*keys, "doc_id", "tf", "dl_quant"],
     )

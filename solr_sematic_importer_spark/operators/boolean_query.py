@@ -39,6 +39,7 @@ from .score import (
     fuzzy_scores,
     sorted_fold,
     term_postings,
+    top_page,
     wildcard_to_regex,
 )
 
@@ -95,18 +96,7 @@ class _Evaluator:
 
     def topk(self, clauses: list[Clause], k: int) -> DataFrame:
         scored = self.combine(clauses, top_level=True)
-        if scored is None or scored is DROPPED_CLAUSE:
-            return self.index.doc_stats.sparkSession.createDataFrame(
-                [], "doc_id long, score double"
-            )
-        deletes = getattr(self.index, "deletes", None)  # multi-field: none
-        if deletes is not None:
-            scored = scored.join(deletes.select("doc_id"), "doc_id", "left_anti")
-        return (
-            scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(k)
-            .select("doc_id", "score")
-        )
+        return top_page(self.index, None if scored is DROPPED_CLAUSE else scored, k)
 
     # ---- leaf scorers: DataFrame (doc_id, s) or None when unmatchable ----
 

@@ -8,7 +8,9 @@ DataFrame stages Catalyst can optimize end-to-end. ``build_index`` and
 each stage's output persisted in memory, the second writes it under a path:
 
     input table
-      -> stamp doc ids + analyze + per-doc tf  (ONE mapInPandas; docid.py ids)
+      -> stamp doc ids + analyze + per-doc tf  (ONE mapInPandas, ``_analyze``;
+                                                one docid.py stamp for
+                                                N text fields)
       -> doc_stats                  (doc_id, key cols, dl, dl_quant; N, sum dl)
       -> explode (term, doc_id, tf, dl)        (narrow, JVM-side)
       -> (term, bucket) shuffle + block encode (block_postings.py, codec.py)
@@ -22,6 +24,12 @@ or through block-max WAND. Each posting stores the Lucene-quantized dl as
 its SmallFloat norm byte (similarity.py) — what Solr's BM25 scores with;
 the exact dl comes from ``doc_stats`` (``InvertedIndex.with_exact_dl``),
 joined only for ``quantize=False`` scoring.
+
+A multi-field index (multifield.py) runs the same pipeline: ``_analyze``
+tokenizes its N text fields in the one Python stage, after one doc-id
+stamp, and every stage after analysis (``_index_analyzed``) runs once per
+field over the docs whose field holds >= 1 token — one ``InvertedIndex``
+per field, with Lucene's per-field docCount, avgdl and df.
 """
 
 from __future__ import annotations
@@ -29,11 +37,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Iterator, Sequence
 
-from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT
+from .docid import CACHE_LEVEL, ordered_with_offsets, stamp_batches
 
 
 def doc_stats_aggs() -> "list[Column]":
@@ -46,11 +54,6 @@ def doc_stats_aggs() -> "list[Column]":
         F.max("doc_id").alias("hi"),
     ]
 
-
-# Serialized cache: the tokenized corpus as deserialized Java objects (one
-# String per token) causes GC thrash that *inverts* scaling — local[32]
-# measured slower than local[8]. MEMORY_AND_DISK stores serialized blocks.
-CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 DEFAULT_PROFILE = "text_en"
 
@@ -78,109 +81,73 @@ def quantize_dl_col(dl: Column) -> Column:
     return F.when(dl < 24, dl).otherwise(F.lit(24) + (x - x % p)).cast("long")
 
 
-def _stamp_and_analyze(
+def _analyze(
     df: DataFrame,
-    text_col: str,
+    texts: "dict[str, str]",
     key_cols: Sequence[str],
     profile: str,
+    doc_id_col: "str | None",
     doc_id_offset: int = 0,
-) -> DataFrame:
-    """Fused docid assignment + analysis + per-doc tf (SURVEY §2.5 W1 +
-    §2.8 + A5 in ONE Python stage): range-partition + sort by key,
-    prefix-sum offsets from a cheap count job, then a single mapInPandas
-    stamps ``offset + local ordinal``, tokenizes, and folds term
-    frequencies per doc. Ids are a pure function of the key order —
-    independent of parallelism (rank-identity). Folding tf here removes
-    the (doc, term) hash-agg shuffle entirely: a doc's tokens never leave
-    the partition (that shuffle measured as the NON-scaling stage — a
-    string-heavy hash agg over every token occurrence)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.analyzer import tf_series
-
-    key_cols = list(key_cols)
-    spark = df.sparkSession
-    nparts = max(2 * spark.sparkContext.defaultParallelism, 2)
-    # prune to the columns this stage emits BEFORE the shuffle/cache: a
-    # source table carrying heavy extra columns (embeddings, raw payloads)
-    # would otherwise ride the range shuffle, the MEMORY_AND_DISK cache
-    # and every Arrow batch for nothing (out_schema below only carries
-    # key cols + analysis output)
-    needed = list(dict.fromkeys([*key_cols, text_col]))
-    ordered = (
-        df.select(*needed)
-        .repartitionByRange(nparts, *key_cols)
-        .sortWithinPartitions(*key_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    ordered.persist(CACHE_LEVEL)
-    counts = dict(
-        (r["_pid"], r["cnt"])
-        for r in ordered.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets, acc = {}, doc_id_offset
-    for pid in range(max(counts) + 1 if counts else 0):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-
-    key_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        ["doc_id long"]
-        + [f"{c} {key_fields[c]}" for c in key_cols]
-        + ["terms array<string>", "tfs array<int>", "dl long"]
-    )
-
-    def stamp_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = 0
-        for b in batches:
-            if not len(b):
-                continue
-            off = offsets[int(b["_pid"].iloc[0])]
-            ids = np.arange(off + local, off + local + len(b), dtype=np.int64)
-            local += len(b)
-            out = {"doc_id": ids}
-            for c in key_cols:
-                out[c] = b[c]
-            out["terms"], out["tfs"], out["dl"] = tf_series(b[text_col], profile)
-            yield pd.DataFrame(out)
-
-    result = ordered.mapInPandas(stamp_analyze, schema=out_schema)
-    # expose the persisted parent so builders can unpersist it once the
-    # analyzed output is materialized (its only consumer)
-    result._ordered_src = ordered
-    return result
-
-
-def _analyze_with_ids(
-    df: DataFrame, text_col: str, key_cols: Sequence[str], doc_id_col: str, profile: str
-) -> DataFrame:
-    """Same fused analyze+tf stage for inputs that already carry a dense
-    stable id (no ordering pass needed)."""
+) -> "tuple[DataFrame, DataFrame | None]":
+    """The build's ONE Python stage (SURVEY §2.5 W1 + §2.8 + A5): doc ids,
+    analysis and per-doc tf in a single mapInPandas. ``texts`` maps an
+    output suffix to a text column; each becomes ``terms<sfx>``,
+    ``tfs<sfx>`` and ``dl<sfx>`` (a single-field index uses the suffix
+    ""). Ids come from ``doc_id_col`` when given (already dense and
+    stable), else from the docid.py stamp: range-partition + sort by key,
+    prefix-sum offsets from a cheap count job, ``offset + local ordinal``
+    — a pure function of the key order, independent of parallelism
+    (rank-identity). Folding tf here removes the (doc, term) hash-agg
+    shuffle entirely: a doc's tokens never leave the partition (that
+    shuffle measured as the NON-scaling stage — a string-heavy hash agg
+    over every token occurrence). Returns the analyzed frame and the
+    persisted ordered frame the stamp reads (None with ``doc_id_col``),
+    which the caller unpersists once the analyzed output is materialized."""
     import pandas as pd
 
     from ..functions.analyzer import tf_series
 
     key_cols = [c for c in key_cols if c != doc_id_col]
+    # prune to the columns this stage reads BEFORE the shuffle/cache: a
+    # source table carrying heavy extra columns (embeddings, raw payloads)
+    # would otherwise ride the range shuffle, the MEMORY_AND_DISK cache
+    # and every Arrow batch for nothing
+    id_cols = [doc_id_col] if doc_id_col else []
+    src = df.select(*dict.fromkeys([*id_cols, *key_cols, *texts.values()]))
     key_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = ", ".join(
         ["doc_id long"]
         + [f"{c} {key_fields[c]}" for c in key_cols]
-        + ["terms array<string>", "tfs array<int>", "dl long"]
+        + [f"terms{s} array<string>, tfs{s} array<int>, dl{s} long" for s in texts]
     )
 
-    def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            if not len(b):
-                continue
-            out = {"doc_id": b[doc_id_col].astype("int64")}
-            for c in key_cols:
-                out[c] = b[c]
-            out["terms"], out["tfs"], out["dl"] = tf_series(b[text_col], profile)
-            yield pd.DataFrame(out)
+    def analyze(ids, b: pd.DataFrame) -> pd.DataFrame:
+        out = {"doc_id": ids}
+        for c in key_cols:
+            out[c] = b[c]
+        for s, col in texts.items():
+            out[f"terms{s}"], out[f"tfs{s}"], out[f"dl{s}"] = tf_series(b[col], profile)
+        return pd.DataFrame(out)
 
-    cols = list(dict.fromkeys([doc_id_col, *key_cols, text_col]))
-    return df.select(*cols).mapInPandas(analyze, schema=out_schema)
+    if doc_id_col is not None:
+
+        def with_ids(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            for b in batches:
+                if len(b):
+                    yield analyze(b[doc_id_col].astype("int64"), b)
+
+        return src.mapInPandas(with_ids, schema=out_schema), None
+
+    nparts = max(2 * df.sparkSession.sparkContext.defaultParallelism, 2)
+    ordered, offsets = ordered_with_offsets(
+        src, key_cols or list(texts.values()), nparts, doc_id_offset
+    )
+
+    def stamp_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for ids, b in stamp_batches(batches, offsets):
+            yield analyze(ids, b)
+
+    return ordered.mapInPandas(stamp_analyze, schema=out_schema), ordered
 
 
 @dataclass
@@ -238,28 +205,17 @@ class InvertedIndex:
             decode_blocks_to_flat(self.postings_blocks)
         ).select("term", "doc_id", "tf", "dl", "dl_quant")
 
-    def flat_terms(self, terms: "Sequence[str]") -> DataFrame:
+    def flat_terms(self, terms: "Sequence[str]", postings: "int | None" = None) -> DataFrame:
         """(term, doc_id, tf, dl_quant) postings of ``terms`` — the J2
         query-term semi-join every scorer starts from. The filter is
         applied to the BLOCKS scan before the Python decode (which Catalyst
         cannot push a predicate through), so a query decodes only its own
-        terms' postings, never the index."""
+        terms' postings, never the index. ``postings`` (the terms' df sum,
+        when the caller has it) sizes the decode without a shuffle."""
         from .block_postings import decode_blocks_to_flat
 
         return decode_blocks_to_flat(
-            self.postings_blocks.filter(F.col("term").isin(list(terms)))
-        )
-
-    def flat_terms_semi(self, matching: DataFrame) -> DataFrame:
-        """Like ``flat_terms`` but the term set is a (vocab-sliver)
-        DataFrame — multi-term expansions (prefix/wildcard) whose member
-        list lives in a broadcastable frame rather than a literal."""
-        from .block_postings import decode_blocks_to_flat
-
-        return decode_blocks_to_flat(
-            self.postings_blocks.join(
-                F.broadcast(matching.select("term")), "term", "left_semi"
-            )
+            self.postings_blocks.filter(F.col("term").isin(list(terms))), postings=postings
         )
 
     def release(self) -> None:
@@ -321,22 +277,24 @@ def _explode(analyzed: DataFrame) -> DataFrame:
     )
 
 
-def _build(
-    df: DataFrame,
+def _index_analyzed(
+    analyzed: DataFrame,
     path: "str | None",
-    text_col: str,
-    key_cols: Sequence[str],
     profile: str,
-    doc_id_col: "str | None",
-    doc_id_offset: int,
+    key_cols: Sequence[str],
     bucket_bits: "int | None",
     k1: float,
     b: float,
     write_doc_vectors: bool = False,
+    ordered: "DataFrame | None" = None,
 ) -> InvertedIndex:
-    """The one build pipeline. With ``path=None`` every stage's output is
-    persisted in memory; with a path it is written there as parquet and
-    read back, and ``index_meta`` is written last as the commit record."""
+    """Every stage after analysis, over (doc_id, <key cols>, terms, tfs,
+    dl) docs: ``doc_stats``, explode, the (term, bucket) block encode and
+    ``term_stats`` from block metadata. With ``path=None`` each stage's
+    output is persisted in memory (and listed in the index's caches);
+    with a path it is written there as parquet and read back. ``ordered``
+    (the doc-id stamp's input) is unpersisted once the first job has
+    materialized ``analyzed``."""
     from .block_postings import (
         DEFAULT_BUCKET_BITS,
         encode_flat_to_blocks,
@@ -345,8 +303,7 @@ def _build(
 
     if bucket_bits is None:
         bucket_bits = DEFAULT_BUCKET_BITS
-    spark = df.sparkSession
-    key_cols = list(key_cols)
+    spark = analyzed.sparkSession
     caches: list = []
 
     def keep(name: str, frame: DataFrame) -> DataFrame:
@@ -357,22 +314,13 @@ def _build(
         frame.write.mode("overwrite").parquet(f"{path}/{name}")
         return spark.read.parquet(f"{path}/{name}")
 
-    # The analyzer is the expensive Python stage: run it exactly ONCE and
-    # persist its output (serialized) for the fan-out below. When ids must
-    # be assigned, the docid stamp (two-pass zip-with-index, docid.py) is
-    # FUSED into the same mapInPandas — one Python round-trip, not two.
-    if doc_id_col is None:
-        analyzed = _stamp_and_analyze(df, text_col, key_cols, profile, doc_id_offset)
-    else:
-        analyzed = _analyze_with_ids(df, text_col, key_cols, doc_id_col, profile)
-    ordered_src = getattr(analyzed, "_ordered_src", None)
-    analyzed = analyzed.withColumn("dl_quant", quantize_dl_col(F.col("dl")))
-    analyzed.persist(CACHE_LEVEL)
-
-    doc_stats = keep("doc_stats", analyzed.drop("terms", "tfs"))
+    doc_stats = keep(
+        "doc_stats",
+        analyzed.drop("terms", "tfs").withColumn("dl_quant", quantize_dl_col(F.col("dl"))),
+    )
     stats = doc_stats.agg(*doc_stats_aggs()).first()
-    if ordered_src is not None:  # analyzed is materialized by the stats job
-        ordered_src.unpersist()
+    if ordered is not None:  # analyzed is materialized by the stats job
+        ordered.unpersist()
     n_docs, sum_dl = int(stats["n"]), int(stats["s"])
     avgdl = sum_dl / n_docs if n_docs else 0.0
 
@@ -399,7 +347,7 @@ def _build(
             "doc_id"
         ).write.mode("overwrite").parquet(f"{path}/doc_vectors")
 
-    index = InvertedIndex(
+    return InvertedIndex(
         doc_stats=doc_stats,
         postings_blocks=blocks,
         term_stats=term_stats,
@@ -414,13 +362,42 @@ def _build(
         impact_b=float(b),
         min_doc_id=stats["lo"],
         max_doc_id=stats["hi"],
-        _caches=[analyzed, *caches],
+        _caches=caches,
+    )
+
+
+def _build(
+    df: DataFrame,
+    path: "str | None",
+    text_col: str,
+    key_cols: Sequence[str],
+    profile: str,
+    doc_id_col: "str | None",
+    doc_id_offset: int,
+    bucket_bits: "int | None",
+    k1: float,
+    b: float,
+    write_doc_vectors: bool = False,
+) -> InvertedIndex:
+    """The one build pipeline. With ``path=None`` every stage's output is
+    persisted in memory; with a path it is written there as parquet and
+    read back, and ``index_meta`` is written last as the commit record."""
+    # The analyzer is the expensive Python stage: run it exactly ONCE and
+    # persist its output (serialized) for the fan-out below.
+    analyzed, ordered = _analyze(
+        df, {"": text_col}, key_cols, profile, doc_id_col, doc_id_offset
+    )
+    analyzed.persist(CACHE_LEVEL)
+    index = _index_analyzed(
+        analyzed, path, profile, key_cols, bucket_bits, k1, b,
+        write_doc_vectors, ordered,
     )
     if path is None:
+        index._caches.insert(0, analyzed)
         return index
-    write_meta_file(spark, path, index_meta(index))
+    write_meta_file(df.sparkSession, path, index_meta(index))
     analyzed.unpersist()
-    return read_index(spark, path)
+    return read_index(df.sparkSession, path)
 
 
 def build_index(

@@ -10,101 +10,78 @@ has >=1 term), avgdl_f, df_f(term) — and a multi-field query combines the
 per-field BM25 scores, either as a weighted SUM (Boolean OR across fields)
 or as DisMax (max + tie * sum-of-others, edismax ``tie=``).
 
-Spark-first shape (mirrors build.py's single-field plan):
+Spark-first shape — the single-field build pipeline, run per field:
 
-* ONE fused Python stage analyzes ALL fields per input row (docid stamp +
-  per-field tokenize + per-field tf fold) — token occurrences never
-  shuffle, and adding a field adds zero extra Python round-trips;
-* per-field postings are a UNION of narrow explodes over the cached
-  analyzed output, with ``field`` a literal column — the scan predicate
-  ``field IN (...) AND term IN (...)`` pushes to parquet when persisted;
-* query-time: the per-(field,term) weight table (boost_f * idf_f) is tiny
-  and broadcast; per-posting partials are whole-stage-codegen expressions
-  (avgdl_f folded into a broadcast per-field constant); the per-doc
-  combine folds a SORTED (field,term) array so float order is fixed and
-  results are bit-identical across parallelism levels;
-* top-k is orderBy(score desc, doc_id asc).limit(k) ->
-  TakeOrderedAndProject (per-partition heaps + driver k-way merge).
-
-At 100 TB this is the same plan as the single-field engine — one shuffle
-at build (if blocks are packed), broadcast-join scoring at query — with
-the posting key widened by a low-cardinality ``field`` column that
-partition-prunes when the postings are written partitioned by field.
+* ONE fused Python stage (``build._analyze``) stamps doc ids and analyzes
+  ALL fields per input row (per-field tokenize + tf fold) — token
+  occurrences never shuffle, and adding a field adds zero extra Python
+  round-trips;
+* every stage after analysis (``build._index_analyzed``: doc_stats,
+  explode, the (term, bucket) block encode, term_stats from block
+  metadata) runs once per field over the docs whose field analyzed to
+  >= 1 token, so each field is a plain ``InvertedIndex`` with its own
+  docCount_f, avgdl_f and df_f — the same blocks and the same readers as
+  every other index;
+* query-time: each field's blocks are filtered to its own query terms
+  and tagged with a literal ``field``; the union decodes in ONE Python
+  stage; the per-(field,term) weights boost_f * idf_f and avgdl_f are
+  literal maps; the per-doc combine folds a SORTED (field,term) array
+  so float order is fixed and results are bit-identical across
+  parallelism levels;
+* top-k is ``score.top_page`` -> TakeOrderedAndProject (per-partition
+  heaps + driver k-way merge).
 """
 
 from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass, field as dc_field
-from typing import Iterator, Mapping, Sequence
+from functools import reduce
+from typing import Mapping, Sequence
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions.queryparser import QueryParseError, parse_query
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
+from .block_postings import decode_blocks_to_flat
 from .boolean_query import DROPPED_CLAUSE, _Evaluator
-from .build import CACHE_LEVEL, quantize_dl_col
-from .score import analyze_query, bm25_partial, sorted_fold, wildcard_to_regex
+from .build import (
+    CACHE_LEVEL,
+    InvertedIndex,
+    _analyze,
+    _index_analyzed,
+    term_dfs,
+)
+from .score import (
+    analyze_query,
+    bm25_partial,
+    constant_scores,
+    sorted_fold,
+    top_page,
+    wildcard_to_regex,
+)
 
 
 @dataclass
 class MultiFieldIndex:
     """Per-field inverted indexes over one document set, one handle."""
 
-    doc_stats: DataFrame     # doc_id, <key cols...>, dl_<f>, dl_quant_<f> per field
-    postings: DataFrame      # field, term, doc_id, tf, dl, dl_quant
-    term_stats: DataFrame    # field, term, df, ttf
-    field_stats: dict        # field -> {"n_docs": int, "sum_dl": int}
-    fields: tuple
+    doc_stats: DataFrame     # doc_id, <key cols...> of every document
+    fields: "dict[str, InvertedIndex]"  # per field: the docs with >= 1 token in it
     n_docs: int              # total documents (any field)
     profile: str
     key_cols: Sequence[str] = dc_field(default_factory=tuple)
     _caches: list = dc_field(default_factory=list, repr=False, compare=False)
 
-    def avgdl(self, field: str) -> float:
-        s = self.field_stats[field]
-        return s["sum_dl"] / s["n_docs"] if s["n_docs"] else 0.0
-
     def release(self) -> None:
+        for index in self.fields.values():
+            index.release()
         for df in self._caches:
             try:
                 df.unpersist()
             except Exception:
                 pass
         self._caches.clear()
-
-
-def field_term_dfs(
-    index: MultiFieldIndex, fields: Sequence[str], terms: Sequence[str]
-) -> dict:
-    """Memoized per-(field, term) docfreq — the multi-field analog of
-    ``build.term_dfs``. One term_stats job per handle fetches only unseen
-    (field, term) pairs; a DisMax request whose clauses repeat tokens
-    across fields (the common qf shape) pays the lookup once. Returns
-    only pairs with df > 0 (matching the previous filter-collect shape)."""
-    cache = getattr(index, "_df_cache", None)
-    if cache is None:
-        cache = index._df_cache = {}
-    missing = [
-        (f, t) for f in fields for t in terms if (f, t) not in cache
-    ]
-    if missing:
-        found = {
-            (r["field"], r["term"]): int(r["df"])
-            for r in index.term_stats.filter(
-                F.col("field").isin(sorted({f for f, _ in missing}))
-                & F.col("term").isin(sorted({t for _, t in missing}))
-            )
-            .select("field", "term", "df")
-            .collect()
-        }
-        for pair in missing:
-            cache[pair] = found.get(pair, 0)
-    return {
-        (f, t): cache[(f, t)]
-        for f in fields for t in terms
-        if cache[(f, t)] > 0
-    }
 
 
 def build_multifield_index(
@@ -114,149 +91,41 @@ def build_multifield_index(
     profile: str = "simple",
     doc_id_col: str | None = None,
 ) -> MultiFieldIndex:
-    """Analyze every field in one fused Python stage and derive per-field
-    postings/stats from the single cached output."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.analyzer import tf_series
-
+    """Analyze every field in one fused Python stage, then build each
+    field's index from the single cached output. Without ``doc_id_col``,
+    ids are stamped by ``key_cols`` order (by the field texts when there
+    are no key cols)."""
     fields = tuple(fields)
-    key_cols = [c for c in key_cols if c != doc_id_col]
-    key_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    out_schema = ", ".join(
-        ["doc_id long"]
-        + [f"{c} {key_fields[c]}" for c in key_cols]
-        + [
-            f"terms_{f} array<string>, tfs_{f} array<int>, dl_{f} long"
-            for f in fields
-        ]
+    analyzed, ordered = _analyze(
+        df, {f"_{f}": f for f in fields}, key_cols, profile, doc_id_col
     )
-
-    if doc_id_col is None:
-        # dense stable ids by key order, fused like _stamp_and_analyze
-        spark = df.sparkSession
-        order_cols = key_cols if key_cols else list(fields)
-        nparts = max(2 * spark.sparkContext.defaultParallelism, 2)
-        ordered = (
-            df.repartitionByRange(nparts, *order_cols)
-            .sortWithinPartitions(*order_cols)
-            .withColumn("_pid", F.spark_partition_id())
-        )
-        ordered.persist(CACHE_LEVEL)
-        counts = dict(
-            (r["_pid"], r["cnt"])
-            for r in ordered.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-        )
-        offsets, acc = {}, 0
-        for pid in range(max(counts) + 1 if counts else 0):
-            offsets[pid] = acc
-            acc += counts.get(pid, 0)
-
-        def stamp_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            local = 0
-            for b in batches:
-                if not len(b):
-                    continue
-                off = offsets[int(b["_pid"].iloc[0])]
-                out = {
-                    "doc_id": np.arange(
-                        off + local, off + local + len(b), dtype=np.int64
-                    )
-                }
-                local += len(b)
-                for c in key_cols:
-                    out[c] = b[c]
-                for f in fields:
-                    out[f"terms_{f}"], out[f"tfs_{f}"], out[f"dl_{f}"] = tf_series(
-                        b[f], profile
-                    )
-                yield pd.DataFrame(out)
-
-        analyzed = ordered.mapInPandas(stamp_analyze, schema=out_schema)
-        src = ordered
-    else:
-
-        def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for b in batches:
-                if not len(b):
-                    continue
-                out = {"doc_id": b[doc_id_col].astype("int64")}
-                for c in key_cols:
-                    out[c] = b[c]
-                for f in fields:
-                    out[f"terms_{f}"], out[f"tfs_{f}"], out[f"dl_{f}"] = tf_series(
-                        b[f], profile
-                    )
-                yield pd.DataFrame(out)
-
-        analyzed = df.select(
-            *dict.fromkeys([doc_id_col, *key_cols, *fields])
-        ).mapInPandas(analyze, schema=out_schema)
-        src = None
-
-    for f in fields:
-        analyzed = analyzed.withColumn(
-            f"dl_quant_{f}", quantize_dl_col(F.col(f"dl_{f}"))
-        )
     analyzed.persist(CACHE_LEVEL)
-
-    doc_stats = analyzed.drop(*[c for f in fields for c in (f"terms_{f}", f"tfs_{f}")])
-
-    # per-field postings: a union of NARROW explodes over the cache (tf was
-    # folded per doc per field inside the Python stage — no shuffle here)
-    per_field = []
-    for f in fields:
-        per_field.append(
-            analyzed.select(
-                "doc_id",
-                F.col(f"dl_{f}").alias("dl"),
-                F.col(f"dl_quant_{f}").alias("dl_quant"),
-                F.explode(F.arrays_zip(f"terms_{f}", f"tfs_{f}")).alias("p"),
-            ).select(
-                F.lit(f).alias("field"),
-                F.col(f"p.terms_{f}").alias("term"),
-                "doc_id",
-                F.col(f"p.tfs_{f}").cast("long").alias("tf"),
-                "dl",
-                "dl_quant",
-            )
-        )
-    postings = per_field[0]
-    for other in per_field[1:]:
-        postings = postings.unionByName(other)
-    postings.persist(CACHE_LEVEL)
-
-    term_stats = postings.groupBy("field", "term").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("ttf")
-    )
-    term_stats.persist()
-
+    n_docs = analyzed.count()
+    if ordered is not None:  # analyzed is materialized by the count
+        ordered.unpersist()
     # Lucene per-field stats: docCount_f counts docs with >=1 term IN THAT
-    # FIELD; avgdl_f = sumTotalTermFreq_f / docCount_f
-    agg_exprs = []
-    for f in fields:
-        agg_exprs.append(
-            F.sum((F.col(f"dl_{f}") > 0).cast("long")).alias(f"n_{f}")
+    # FIELD, so each field's index holds only those docs
+    per_field = {
+        f: _index_analyzed(
+            analyzed.filter(F.col(f"dl_{f}") > 0).select(
+                "doc_id",
+                F.col(f"terms_{f}").alias("terms"),
+                F.col(f"tfs_{f}").alias("tfs"),
+                F.col(f"dl_{f}").alias("dl"),
+            ),
+            path=None, profile=profile, key_cols=(), bucket_bits=None,
+            k1=K1_DEFAULT, b=B_DEFAULT,
         )
-        agg_exprs.append(F.coalesce(F.sum(f"dl_{f}"), F.lit(0)).alias(f"s_{f}"))
-    stats = analyzed.agg(F.count("*").alias("n_total"), *agg_exprs).first()
-    if src is not None:
-        src.unpersist()
-
+        for f in fields
+    }
+    key_cols = tuple(c for c in key_cols if c != doc_id_col)
     return MultiFieldIndex(
-        doc_stats=doc_stats,
-        postings=postings,
-        term_stats=term_stats,
-        field_stats={
-            f: {"n_docs": int(stats[f"n_{f}"]), "sum_dl": int(stats[f"s_{f}"])}
-            for f in fields
-        },
-        fields=fields,
-        n_docs=int(stats["n_total"]),
+        doc_stats=analyzed.select("doc_id", *key_cols),
+        fields=per_field,
+        n_docs=n_docs,
         profile=profile,
-        key_cols=tuple(key_cols),
-        _caches=[analyzed, postings, term_stats],
+        key_cols=key_cols,
+        _caches=[analyzed],
     )
 
 
@@ -270,41 +139,44 @@ def _field_partials(
     quantize: bool,
 ) -> "DataFrame | None":
     """(doc_id, field, term, s) BM25 partials of the analyzed ``terms``
-    over the weighted fields, with ``w = boost * boost_f * mult * idf_f``
-    and the field's avgdl riding the broadcast weight table so the norm
-    stays a JVM expression. None when no (field, term) pair is indexed."""
+    over the weighted fields, ``w = boost * boost_f * mult * idf_f``.
+    Each field's term-filtered blocks, tagged with a literal ``field``,
+    decode in ONE Python stage sized by the terms' df; w and avgdl_f are
+    literal maps, not a broadcast table (a broadcast is one Spark job per
+    leaf). None when no (field, term) pair is indexed."""
     counts = Counter(terms)
-    dfs = field_term_dfs(index, list(field_weights), list(counts))
-    weights = [
-        (
-            f,
-            t,
-            boost
-            * field_weights[f]
-            * float(mult)
-            * idf(dfs[(f, t)], index.field_stats[f]["n_docs"]),
-            index.avgdl(f),
-        )
-        for t, mult in counts.items()
-        for f in field_weights
-        if (f, t) in dfs
-    ]
+    weights, avgdls, blocks, dls = {}, {}, [], []
+    n_postings = 0
+    for f, boost_f in field_weights.items():
+        fi = index.fields[f]
+        dfs = term_dfs(fi, list(counts))
+        hit = [t for t in counts if dfs[t] > 0]
+        if not hit:
+            continue
+        for t in hit:
+            weights[f"{f}\x00{t}"] = boost * boost_f * float(counts[t]) * idf(dfs[t], fi.n_docs)
+        n_postings += sum(dfs[t] for t in hit)
+        avgdls[f] = fi.avgdl
+        tag = F.lit(f).alias("field")
+        blocks.append(fi.postings_blocks.filter(F.col("term").isin(hit)).select(tag, "*"))
+        dls.append(fi.doc_stats.select("doc_id", tag, "dl"))
     if not weights:
         return None
-    wdf = index.postings.sparkSession.createDataFrame(
-        weights, "field string, term string, w double, avgdl double"
+    cand = decode_blocks_to_flat(
+        reduce(DataFrame.unionByName, blocks), ("field", "term"), n_postings
     )
     dl_col = "dl_quant" if quantize else "dl"
-    cand = index.postings.filter(
-        F.col("field").isin(list(field_weights))
-        & F.col("term").isin([t for _, t, _, _ in weights])
+    if not quantize:
+        cand = cand.join(reduce(DataFrame.unionByName, dls), ["doc_id", "field"])
+    w = _literal_map(weights)[F.concat_ws("\x00", "field", "term")]
+    avgdl = _literal_map(avgdls)[F.col("field")]
+    return cand.select(
+        "doc_id", "field", "term", bm25_partial(w, F.col("tf"), dl_col, avgdl, k1, b).alias("s")
     )
-    return cand.join(F.broadcast(wdf), ["field", "term"]).select(
-        "doc_id",
-        "field",
-        "term",
-        bm25_partial(F.col("w"), F.col("tf"), dl_col, F.col("avgdl"), k1, b).alias("s"),
-    )
+
+
+def _literal_map(m: Mapping[str, float]) -> Column:
+    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
 
 
 def _field_term_leaf(index, field_weights, text, boost, k1, b, quantize):
@@ -346,22 +218,20 @@ def bm25_multifield_topk(
     """
     if combine not in ("sum", "dismax"):
         raise ValueError(f"combine must be 'sum' or 'dismax', got {combine!r}")
-    spark = index.postings.sparkSession
-    empty = spark.createDataFrame([], "doc_id long, score double")
     boosts = {f: float(w) for f, w in qf.items() if f in index.fields}
     if not boosts or index.n_docs == 0:
-        return empty
+        return top_page(index, None, k)
     if combine == "sum":
         per_doc = _field_term_leaf(index, boosts, query, 1.0, k1, b, quantize)
         if per_doc is None or per_doc is DROPPED_CLAUSE:
-            return empty
+            return top_page(index, None, k)
         per_doc = per_doc.withColumnRenamed("s", "score")
     else:
         scored = _field_partials(
             index, boosts, analyze_query(query, index.profile), 1.0, k1, b, quantize
         )
         if scored is None:
-            return empty
+            return top_page(index, None, k)
         # per (doc, term): max over fields + tie * rest; fold order fixed
         # by the field-sorted array
         per_term = scored.groupBy("doc_id", "term").agg(
@@ -372,34 +242,18 @@ def bm25_multifield_topk(
             (F.col("max_s") + F.lit(float(tie)) * (F.col("sum_s") - F.col("max_s"))).alias("s"),
         )
         per_doc = per_term.groupBy("doc_id").agg(sorted_fold("term").alias("score"))
-
-    return (
-        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
-    )
+    return top_page(index, per_doc, k)
 
 
 class _FieldEvaluator(_Evaluator):
     """The boolean combine's leaves on a multi-field index: a term becomes
     a per-field BM25 leaf (its own field, or ``qf`` when unqualified); a
-    prefix or wildcard becomes a constant-score leaf over the field's
-    term dictionary."""
+    prefix or wildcard becomes a constant-score leaf over the field
+    index's term dictionary."""
 
     def __init__(self, index, boosts, k1, b, quantize):
         super().__init__(index, k1, b, quantize)
         self.boosts = boosts
-
-    def _field_vocab_scores(self, field: str, term_pred, boost: float) -> DataFrame:
-        vocab = self.index.term_stats.filter(
-            (F.col("field") == field) & term_pred
-        ).select("field", "term")
-        docs = (
-            self.index.postings.join(F.broadcast(vocab), ["field", "term"], "left_semi")
-            .select("doc_id")
-            .distinct()
-        )
-        return docs.withColumn("s", F.lit(float(boost)))
 
     def leaf_scores(self, c):
         if c.kind == "term":
@@ -414,10 +268,14 @@ class _FieldEvaluator(_Evaluator):
                 "single-field boolean engine for default-field queries"
             )
         if c.kind == "prefix":
-            return self._field_vocab_scores(c.field, F.col("term").startswith(c.text), c.boost)
+            return constant_scores(
+                self.index.fields[c.field], F.col("term").startswith(c.text), c.boost
+            )
         if c.kind == "wildcard":
-            return self._field_vocab_scores(
-                c.field, F.col("term").rlike(wildcard_to_regex(c.text)), c.boost
+            return constant_scores(
+                self.index.fields[c.field],
+                F.col("term").rlike(wildcard_to_regex(c.text)),
+                c.boost,
             )
         raise QueryParseError(
             f"fielded {c.kind!r} clauses are not supported on the "
@@ -454,8 +312,8 @@ def fielded_query_topk(
     * phrase / fuzzy / range clauses are rejected with a clear error (the
       single-field engine covers them on the default field).
 
-    Scale shape: every leaf pushes ``field IN (...) AND term IN (...)``
-    into the postings scan; the combine is one union + hash agg on doc_id
+    Scale shape: every leaf pushes ``term IN (...)`` into its field's
+    blocks scan; the combine is one union + hash agg on doc_id
     plus one anti-join per prohibited clause.
     """
     boosts = (

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.analyzer import analyze_with_positions
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
 from .build import InvertedIndex, term_dfs
-from .score import bm25_partial
+from .score import bm25_partial, top_page
 
 
 def build_positions(
@@ -173,16 +173,12 @@ def bm25_phrase_topk(
     ``phrase_match_counts``), Lucene PhraseQuery scoring: the phrase is
     one pseudo-term with idf = sum of constituent idfs and tf = phrase
     frequency. Returns (doc_id, score), (score desc, doc_id asc)."""
-    spark = index.doc_stats.sparkSession
     terms, poss = analyze_with_positions(phrase, index.profile)
     scored = (
         phrase_scores(index, positions, terms, poss, 1.0, slop, k1, b, quantize)
         if terms and index.n_docs
         else None
     )
-    if scored is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    per_doc = scored.withColumnRenamed("s", "score")
-    if index.deletes is not None:
-        per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return top_page(
+        index, None if scored is None else scored.withColumnRenamed("s", "score"), k
+    )

@@ -35,8 +35,28 @@ from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
 from .build import InvertedIndex, term_dfs
 
 
+PAGE_SCHEMA = "doc_id long, score double"
+
+
 def analyze_query(query: str, profile: str) -> list[str]:
     return PROFILES[profile](query)
+
+
+def top_page(index, per_doc: "DataFrame | None", k: int) -> DataFrame:
+    """The tail every top-k scorer ends with: ``per_doc`` (doc_id, score)
+    with the index's deleted docs masked, cut to the k best by (score
+    desc, doc_id asc) — TakeOrderedAndProject. None gives the empty
+    page."""
+    if per_doc is None:
+        return index.doc_stats.sparkSession.createDataFrame([], PAGE_SCHEMA)
+    deletes = getattr(index, "deletes", None)
+    if deletes is not None:
+        per_doc = per_doc.join(deletes.select("doc_id"), "doc_id", "left_anti")
+    return (
+        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        .limit(k)
+        .select("doc_id", "score")
+    )
 
 
 def term_postings(index: InvertedIndex, terms: "Sequence[str]", dl_col: str) -> DataFrame:
@@ -277,7 +297,6 @@ def bm25_topk_synonyms(
     if synonyms is None:
         synonyms = default_synonyms()
     spark = index.doc_stats.sparkSession
-    out_schema = "doc_id long, score double"
     # Solr applies synonymGraph BEFORE stemming and the outputs continue
     # through the rest of the chain. Matching rules against STEMMED
     # tokens would never fire under text_en ('television' analyzes to
@@ -287,7 +306,7 @@ def bm25_topk_synonyms(
     # through the index profile.
     raw_terms = analyze_text_general(query)
     if not raw_terms or index.n_docs == 0:
-        return spark.createDataFrame([], out_schema)
+        return top_page(index, None, k)
 
     groups = []
     for g in expand_terms(raw_terms, synonyms):
@@ -299,7 +318,7 @@ def bm25_topk_synonyms(
         if flat:  # a group can analyze away entirely (lone stopword)
             groups.append(flat)
     if not groups:
-        return spark.createDataFrame([], out_schema)
+        return top_page(index, None, k)
     members = sorted({m for g in groups for m in g})
     dfs = term_dfs(index, members)
     # one weight per original token position; duplicate positions keep
@@ -316,7 +335,7 @@ def bm25_topk_synonyms(
             group_rows.append((m, gid))
         gid += 1
     if not weights:
-        return spark.createDataFrame([], out_schema)
+        return top_page(index, None, k)
 
     gdf = spark.createDataFrame(group_rows, "term string, gid int")
     wdf = spark.createDataFrame(weights, "gid int, w double")
@@ -337,13 +356,8 @@ def bm25_topk_synonyms(
             ).alias("s"),
         )
     )
-    per_doc = per_group.groupBy("doc_id").agg(sorted_fold("gid").alias("score"))
-    if index.deletes is not None:  # same deletion-vector mask as bm25_topk
-        per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return (
-        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
+    return top_page(
+        index, per_group.groupBy("doc_id").agg(sorted_fold("gid").alias("score")), k
     )
 
 
@@ -397,6 +411,9 @@ def fuzzy_expand_terms(
     documented divergence. Classic Levenshtein, not Damerau (Lucene
     defaults transpositions=true) — documented divergence shared with
     the SQL oracle. Returns [(term, df, boost)]."""
+    if not word:
+        # the boost divides by the target's length
+        raise ValueError(f"fuzzy query needs a non-empty term, got {word!r}")
     target = word.lower()
     n = len(target)
     cand = index.term_stats.filter(
@@ -474,17 +491,9 @@ def bm25_fuzzy_topk(
     boosted by its edit-distance similarity —
     ``score(doc) = Σ_members boost_m * idf(df_max) * sat(tf_m)``.
     Returns (doc_id, score)."""
-    spark = index.doc_stats.sparkSession
     scored = fuzzy_scores(index, word, distance, 1.0, k1, b, quantize, max_expansions)
-    if scored is None:
-        return spark.createDataFrame([], "doc_id long, score double")
-    per_doc = scored.withColumnRenamed("s", "score")
-    if index.deletes is not None:
-        per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return (
-        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id", "score")
+    return top_page(
+        index, None if scored is None else scored.withColumnRenamed("s", "score"), k
     )
 
 
@@ -507,21 +516,24 @@ def wildcard_to_regex(pattern: str) -> str:
 def constant_scores(index: InvertedIndex, term_pred, boost: float = 1.0) -> DataFrame:
     """The MultiTermQuery CONSTANT_SCORE rewrite shared by prefix, wildcard
     and range clauses: every doc holding any vocab term that matches
-    ``term_pred`` scores ``boost``. The expansion is a semi-join of
-    postings against the matching slice of the vocab-sized term_stats
-    table. Returns (doc_id, s)."""
-    matching = index.term_stats.filter(term_pred).select("term")
-    docs = index.flat_terms_semi(matching).select("doc_id").distinct()
+    ``term_pred`` scores ``boost``. The expansion — the matching slice of
+    the vocab-sized term_stats table — is collected with its df, so the
+    decode reads only those terms and is sized by their posting count.
+    Returns (doc_id, s)."""
+    dfs = {
+        r["term"]: int(r["df"])
+        for r in index.term_stats.filter(term_pred).select("term", "df").collect()
+    }
+    docs = index.flat_terms(list(dfs), sum(dfs.values())).select("doc_id").distinct()
     return docs.withColumn("s", F.lit(float(boost)))
 
 
 def _constant_topk(index: InvertedIndex, term_pred, k: int) -> DataFrame:
-    """Top-k of a constant-score clause: docID-asc tie-break, deletes
-    masked. Returns (doc_id, score)."""
-    docs = constant_scores(index, term_pred).withColumnRenamed("s", "score")
-    if index.deletes is not None:
-        docs = docs.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return docs.orderBy(F.col("doc_id").asc()).limit(k)
+    """Top-k of a constant-score clause: every score ties, so the page is
+    the docID-asc tie-break. Returns (doc_id, score)."""
+    return top_page(
+        index, constant_scores(index, term_pred).withColumnRenamed("s", "score"), k
+    )
 
 
 def wildcard_query_topk(
@@ -534,9 +546,7 @@ def wildcard_query_topk(
     (``rlike`` over the vocab-sized term_stats table). Every matching doc
     scores 1.0; docID-asc tie-break. Returns (doc_id, score)."""
     if not pattern:
-        return index.doc_stats.sparkSession.createDataFrame(
-            [], "doc_id long, score double"
-        )
+        return top_page(index, None, k)
     return _constant_topk(
         index, F.col("term").rlike(wildcard_to_regex(pattern.lower())), k
     )
@@ -572,9 +582,7 @@ def prefix_query_topk(
     with the prefix scores 1.0; ordering is the docID-asc tie-break.
     Returns (doc_id, score). StartsWith pushes to both scans."""
     if not prefix:
-        return index.doc_stats.sparkSession.createDataFrame(
-            [], "doc_id long, score double"
-        )
+        return top_page(index, None, k)
     return _constant_topk(index, F.col("term").startswith(prefix), k)
 
 
@@ -655,13 +663,7 @@ def explain_topk(
     per_doc = partials.groupBy("doc_id").agg(
         sorted_fold("term", value="partial").alias("score")
     )
-    if index.deletes is not None:  # the same mask bm25_topk applies
-        per_doc = per_doc.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    top = (
-        per_doc.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select("doc_id")
-    )
+    top = top_page(index, per_doc, k).select("doc_id")
     return partials.join(F.broadcast(top), "doc_id", "left_semi")
 
 
@@ -678,10 +680,10 @@ def bm25_conjunction_topk(
     spark = index.doc_stats.sparkSession
     terms = sorted(set(analyze_query(query, index.profile)))
     if not terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return top_page(index, None, k)
     dfs = term_dfs(index, terms)
     if any(dfs[t] == 0 for t in terms):  # a term with df=0 -> conjunction is empty
-        return spark.createDataFrame([], "doc_id long, score double")
+        return top_page(index, None, k)
     wdf = spark.createDataFrame(
         [(t, idf(dfs[t], index.n_docs)) for t in terms], "term string, w double"
     )
@@ -698,7 +700,4 @@ def bm25_conjunction_topk(
     per_doc = scored.groupBy("doc_id").agg(
         F.count("*").alias("nt"), sorted_fold("term").alias("score")
     )
-    hits = per_doc.filter(F.col("nt") == len(terms)).select("doc_id", "score")
-    if index.deletes is not None:
-        hits = hits.join(index.deletes.select("doc_id"), "doc_id", "left_anti")
-    return hits.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+    return top_page(index, per_doc.filter(F.col("nt") == len(terms)), k)

@@ -174,6 +174,32 @@ def test_batch_decoder_matches_per_block_decoder(seed, n_groups):
     assert np.array_equal(np.sort(got.column("doc_id").to_numpy()), np.sort(docs))
 
 
+def test_batch_decoder_repeats_every_key_column():
+    """A multi-field decode passes (field, term) keys: each posting
+    repeats both of its block's keys; the postings are unchanged."""
+    import pyarrow as pa
+
+    docs = np.arange(0, 300, 3, dtype=np.int64)
+    term_ids = (docs >= 150).astype(np.int32)
+    ones = np.ones(docs.size, dtype=np.int64)
+    blocks = encode_block_batch(
+        term_ids, pa.array(["a", "b"]), docs >> 14, docs, ones,
+        np.zeros(docs.size, dtype=np.uint8), 10.0, 1.2, 0.75,
+    )
+    fields = pa.array(["title" if t == "a" else "body" for t in blocks.column("term").to_pylist()])
+    tagged = pa.RecordBatch.from_arrays(
+        [fields, *blocks.columns], names=["field", *blocks.schema.names]
+    )
+    got = decode_block_batch(tagged, keys=("field", "term"))
+    plain = decode_block_batch(blocks)
+    assert got.schema.names == ["field", "term", "doc_id", "tf", "dl_quant"]
+    assert got.column("field").to_pylist() == [
+        "title" if t == "a" else "body" for t in plain.column("term").to_pylist()
+    ]
+    for c in ("term", "doc_id", "tf", "dl_quant"):
+        assert got.column(c).to_pylist() == plain.column(c).to_pylist()
+
+
 def test_block_max_impact_is_upper_bound():
     rng = np.random.default_rng(7)
     n = 1000

@@ -47,15 +47,16 @@ def _ids(rows):
 
 def test_per_field_doc_count_excludes_empty_fields(mf):
     # doc 2 has an empty body: body's docCount must be 3, title's 4
-    assert mf.field_stats["title"]["n_docs"] == 4
-    assert mf.field_stats["body"]["n_docs"] == 3
+    assert mf.fields["title"].n_docs == 4
+    assert mf.fields["body"].n_docs == 3
     assert mf.n_docs == 4
 
 
 def test_per_field_df_and_postings_key(mf):
     rows = {
-        (r["field"], r["term"]): r["df"]
-        for r in mf.term_stats.filter(F.col("term") == "spark").collect()
+        (f, r["term"]): r["df"]
+        for f, fi in mf.fields.items()
+        for r in fi.term_stats.filter(F.col("term") == "spark").collect()
     }
     assert rows[("title", "spark")] == 2   # docs 0, 2
     assert rows[("body", "spark")] == 2    # docs 0, 1
@@ -76,14 +77,65 @@ def test_sum_score_matches_hand_bm25(mf):
     def sat(tf, dl, avgdl):
         return tf / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
 
-    t_avg = mf.avgdl("title")
-    b_avg = mf.avgdl("body")
+    t_avg = mf.fields["title"].avgdl
+    b_avg = mf.fields["body"].avgdl
     # doc 0: title tf=1 dl=3; body tf=2 dl=10
     want0 = 3.0 * idf(2, 4) * sat(1, 3, t_avg) + 1.0 * idf(2, 3) * sat(2, 10, b_avg)
     assert got[0] == pytest.approx(want0, rel=1e-12)
     # doc 2: title only, tf=3 dl=4
     want2 = 3.0 * idf(2, 4) * sat(3, 4, t_avg)
     assert got[2] == pytest.approx(want2, rel=1e-12)
+
+
+def test_stopword_only_field_left_out_of_field_stats(spark):
+    """A title that analyzes to nothing under text_en (stopwords only) is
+    not in the title's docCount or avgdl, and the doc's body still
+    scores."""
+    rows = [
+        (0, "spark shuffle", "spark partitions"),
+        (1, "the of and", "spark streaming windows"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, title string, body string")
+    mfe = build_multifield_index(
+        df, fields=("title", "body"), profile="text_en", doc_id_col="doc_id"
+    )
+    try:
+        title, body = mfe.fields["title"], mfe.fields["body"]
+        assert (title.n_docs, title.sum_dl) == (1, 2)
+        assert title.avgdl == 2.0
+        assert (body.n_docs, body.sum_dl) == (2, 5)
+        assert mfe.n_docs == 2
+        got = {
+            r["doc_id"]: r["score"]
+            for r in bm25_multifield_topk(
+                mfe, "streaming", {"title": 3.0, "body": 1.0}, k=4, quantize=False
+            ).collect()
+        }
+        assert set(got) == {1} and got[1] > 0
+    finally:
+        mfe.release()
+
+
+def test_release_unpersists_every_table(spark):
+    """release() gives back everything the build pinned: the shared
+    analyze output and each field's doc_stats, blocks and term_stats."""
+    jsc = spark.sparkContext._jsc
+
+    def pinned():
+        return jsc.getPersistentRDDs().size()
+
+    before = pinned()
+    df = spark.createDataFrame(ROWS, "doc_id long, title string, body string")
+    mfr = build_multifield_index(
+        df, fields=("title", "body"), profile="simple", doc_id_col="doc_id"
+    )
+    # materialize every per-field table
+    assert bm25_multifield_topk(mfr, "spark", {"title": 1.0, "body": 1.0}, k=4).count()
+    for fi in mfr.fields.values():
+        fi.term_stats.count()
+    assert pinned() > before
+    mfr.release()
+    assert pinned() == before
 
 
 # ---------------------------------------------------------------- combine

@@ -151,6 +151,24 @@ def test_fuzzy_distance_boost_ranks_closer_terms_higher(spark):
     assert scores[1] / scores[0] == pytest.approx(0.8, abs=1e-12)
 
 
+def test_fuzzy_empty_term_raises_value_error(spark):
+    """An empty fuzzy term is rejected by name. It used to divide by zero
+    whenever the vocabulary held a term of <= ``distance`` characters
+    (the similarity boost divides by min(len(member), len(target)))."""
+    from solr_sematic_importer_spark.operators.score import bm25_fuzzy_topk
+
+    docs = spark.createDataFrame(
+        [(0, "a ab merge"), (1, "ab filler")], "doc_id long, text string"
+    )
+    idx = build_index(docs, text_col="text", key_cols=("doc_id",),
+                      profile="simple", doc_id_col="doc_id")
+    with pytest.raises(ValueError, match="non-empty term, got ''"):
+        bm25_fuzzy_topk(idx, "", distance=2)
+    # a one-character term still expands
+    assert bm25_fuzzy_topk(idx, "a", distance=1).first()["doc_id"] == 0
+    idx.release()
+
+
 # ------------------------------------------------- conditional mm (r4)
 
 def test_mm_conditional_specs_solr_grammar():
