@@ -4,8 +4,8 @@ Blocks are the engine's only postings format: ``build_index`` and
 ``build_and_write_index`` both encode them through ``encode_flat_to_blocks``
 (in memory or on disk), segments and compaction store nothing else, and
 every scorer reads them — the exhaustive ones through
-``InvertedIndex.flat_terms`` (a decode of the query's terms only), top-k
-through ``bm25_topk_wand``. The reference gets posting storage and WAND
+``score.term_leaf`` (a decode of the query's terms only), top-k through
+``bm25_topk_wand``. The reference gets posting storage and WAND
 pruning for free from Lucene (delegated; ``semantic_base_config.zip ->
 solrconfig.xml:38,650-655``: one postings format per segment, BM25 top-k).
 We re-build both Spark-first:
@@ -53,7 +53,7 @@ from ..functions.similarity import (
     idf,
 )
 from .build import InvertedIndex, term_dfs
-from .score import PAGE_SCHEMA, analyze_query
+from .score import PAGE_SCHEMA, _literal_map, analyze_query
 
 DEFAULT_BUCKET_BITS = 14  # 16384-doc buckets: skew bound + pruning unit
 
@@ -152,13 +152,11 @@ def decode_blocks_to_flat(
     stored in blocks (only the SmallFloat norm byte) — callers needing
     exact dl join doc_stats on doc_id.
 
-    A caller that knows the posting count (its terms' df sum) passes
-    ``postings``: the decode coalesces to one task per 2^20 postings and
-    runs no shuffle job (a 3-term decode on a 5,000-doc in-memory index,
-    4 cores: 0.67 -> 0.46 s). Otherwise a rebalance lets AQE size the
-    Python tasks to the filtered block bytes, instead of one Python round
-    trip per stored partition (~0.7 s of a ~2 s in-memory query at 8
-    partitions)."""
+    Query-time decodes pass ``postings`` (their terms' df sum): one task
+    per 2^20 postings, no shuffle job. Whole-index readers (``postings_flat``)
+    pass None: a rebalance sizes their tasks to the block bytes, faster than
+    one task per stored partition (sf0.1 in memory, 8 partitions, 4 cores:
+    warm ``tf_per_doc_term`` 0.87-1.12 s vs 1.29-1.71 s without it)."""
 
     def dec(batches):
         from ..functions.codec import decode_block_batch
@@ -381,7 +379,6 @@ def bm25_topk_wand(
         return _driver_page(spark, [(d, s) for s, d in rows])
 
     cand = cand.persist()
-    wdf = spark.createDataFrame(list(weights.items()), "term string, w double")
     # JVM-side bucket upper bounds from block metadata only (no decode).
     # Kept DISTRIBUTED: at the 10^12-doc design point this table is ~6e7
     # rows per query — collecting it whole would be a driver scale-killer.
@@ -400,10 +397,10 @@ def bm25_topk_wand(
     # top-k buckets).
     enc_avgdl = index.impacts_avgdl if index.impacts_avgdl else avgdl
     ub_scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl else 1.0
+    w = _literal_map(weights)[F.col("term")]
     ub_df = (
-        cand.join(F.broadcast(wdf), "term")
-        .groupBy("bucket_id", "term")
-        .agg(F.max(F.col("w") * F.col("max_impact")).alias("tub"))
+        cand.groupBy("bucket_id", "term")
+        .agg(F.max(w * F.col("max_impact")).alias("tub"))
         .groupBy("bucket_id")
         .agg((F.sum("tub") * F.lit(ub_scale)).alias("ub"))
         .persist()

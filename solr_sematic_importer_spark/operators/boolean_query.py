@@ -17,10 +17,11 @@ index:
   recurse with their boost multiplying the combined score.
 
 Scale shape: every leaf is the corresponding single-clause plan (pushed
-term predicates, broadcast weight tables); the boolean combine is ONE
-union + hash aggregate on doc_id plus one anti-join per prohibited
-clause. The multi-field executor (``multifield.fielded_query_topk``)
-runs this same combine over per-field leaves.
+term predicates; a term leaf is ``score.term_leaf``: one df-sized decode
+and literal-map weights); the boolean combine is ONE union + hash
+aggregate on doc_id plus one anti-join per prohibited clause. The
+multi-field executor (``multifield.fielded_query_topk``) runs this same
+combine over per-field leaves.
 """
 
 from __future__ import annotations
@@ -34,11 +35,10 @@ from .build import InvertedIndex, term_dfs
 from .phrase import phrase_scores
 from .score import (
     analyze_query,
-    bm25_partial,
     constant_scores,
     fuzzy_scores,
     sorted_fold,
-    term_postings,
+    term_leaf,
     top_page,
     wildcard_to_regex,
 )
@@ -87,7 +87,6 @@ class _Evaluator:
         self.index = index
         self.positions = positions
         self.k1, self.b, self.quantize = k1, b, quantize
-        self.dl_col = "dl_quant" if quantize else "dl"
         self._next_cid = 0
 
     def _cid(self) -> int:
@@ -111,16 +110,8 @@ class _Evaluator:
         # a single input word analyzing to several tokens behaves as a
         # SHOULD group of them (documented divergence from the classic
         # parser's generated phrase)
-        weights = [(t, boost * idf(d, self.index.n_docs)) for t, d in sorted(dfs.items())]
-        spark = self.index.doc_stats.sparkSession
-        wdf = spark.createDataFrame(weights, "term string, w double")
-        cand = term_postings(self.index, [t for t, _ in weights], self.dl_col)
-        scored = cand.join(F.broadcast(wdf), "term").select(
-            "doc_id", "term",
-            bm25_partial(
-                F.col("w"), F.col("tf"), self.dl_col, self.index.avgdl, self.k1, self.b
-            ).alias("s"),
-        )
+        weights = {t: boost * idf(d, self.index.n_docs) for t, d in sorted(dfs.items())}
+        scored = term_leaf({None: (self.index, weights)}, self.k1, self.b, self.quantize)
         return scored.groupBy("doc_id").agg(sorted_fold("term").alias("s"))
 
     def _phrase(self, text: str, boost: float, slop: int):
@@ -177,12 +168,16 @@ class _Evaluator:
         prohibited: list[DataFrame] = []
         must_ids: list[int] = []
         unmatchable_must = False
-        has_positive = False  # a positive clause SURVIVED analysis
+        # a positive / a prohibited clause SURVIVED analysis (it may still
+        # match nothing: df=0)
+        has_positive = has_prohibited = False
         for c in clauses:
             df = self.clause_scores(c)
             if c.occur == MUST_NOT:
-                if df is not None and df is not DROPPED_CLAUSE:
-                    prohibited.append(df.select("doc_id"))
+                if df is not DROPPED_CLAUSE:
+                    has_prohibited = True
+                    if df is not None:
+                        prohibited.append(df.select("doc_id"))
                 continue
             if df is DROPPED_CLAUSE:
                 continue  # the classic parser drops analyzed-empty clauses
@@ -203,15 +198,16 @@ class _Evaluator:
             # negative (no positive clause survived analysis); a positive
             # clause that merely matched nothing (df=0 SHOULD) keeps
             # BooleanQuery semantics: zero results, never the corpus
-            if top_level and prohibited and not has_positive:
+            if top_level and has_prohibited and not has_positive:
                 # Solr's pure-negative rewrite: *:* minus the exclusions
+                # (every doc when they all match nothing)
                 base = self.index.doc_stats.select(
                     "doc_id", F.lit(1.0).alias("score")
                 )
                 for p in prohibited:
                     base = base.join(p, "doc_id", "left_anti")
                 return base
-            if not has_positive and not prohibited:
+            if not has_positive and not has_prohibited:
                 return DROPPED_CLAUSE  # every clause analyzed away
             return None
 

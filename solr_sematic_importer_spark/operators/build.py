@@ -18,12 +18,13 @@ each stage's output persisted in memory, the second writes it under a path:
       -> index_meta                            (written indexes only)
 
 Blocks are the only postings, as a Lucene segment keeps one postings
-format. Scorers read them through ``InvertedIndex.flat_terms``, which
-decodes only the query's terms to (term, doc_id, tf, dl_quant) rows,
-or through block-max WAND. Each posting stores the Lucene-quantized dl as
-its SmallFloat norm byte (similarity.py) — what Solr's BM25 scores with;
-the exact dl comes from ``doc_stats`` (``InvertedIndex.with_exact_dl``),
-joined only for ``quantize=False`` scoring.
+format. Scorers read them through ``score.term_leaf`` (every BM25 term
+leaf) and ``InvertedIndex.flat_terms`` (match-only decodes), which decode
+only the query's terms to (term, doc_id, tf, dl_quant) rows, or through
+block-max WAND. Each posting stores the Lucene-quantized dl as its
+SmallFloat norm byte (similarity.py) — what Solr's BM25 scores with; the
+exact dl comes from ``doc_stats``, joined only for ``quantize=False``
+scoring.
 
 A multi-field index (multifield.py) runs the same pipeline: ``_analyze``
 tokenizes its N text fields in the one Python stage, after one doc-id
@@ -187,12 +188,6 @@ class InvertedIndex:
         # Lucene: sumTotalTermFreq / docCount as double division of exact longs
         return self.sum_dl / self.n_docs if self.n_docs else 0.0
 
-    def with_exact_dl(self, postings: DataFrame) -> DataFrame:
-        """Attach each posting's EXACT dl from ``doc_stats`` (a block
-        stores only the SmallFloat norm byte, i.e. ``dl_quant``). Only
-        ``quantize=False`` scoring needs it."""
-        return postings.join(self.doc_stats.select("doc_id", "dl"), "doc_id")
-
     @property
     def postings_flat(self) -> DataFrame:
         """Every posting as (term, doc_id, tf, dl, dl_quant): a decode of
@@ -201,19 +196,21 @@ class InvertedIndex:
         inspection; scorers go through ``flat_terms``."""
         from .block_postings import decode_blocks_to_flat
 
-        return self.with_exact_dl(
-            decode_blocks_to_flat(self.postings_blocks)
+        return decode_blocks_to_flat(self.postings_blocks).join(
+            self.doc_stats.select("doc_id", "dl"), "doc_id"
         ).select("term", "doc_id", "tf", "dl", "dl_quant")
 
     def flat_terms(self, terms: "Sequence[str]", postings: "int | None" = None) -> DataFrame:
         """(term, doc_id, tf, dl_quant) postings of ``terms`` — the J2
-        query-term semi-join every scorer starts from. The filter is
-        applied to the BLOCKS scan before the Python decode (which Catalyst
-        cannot push a predicate through), so a query decodes only its own
-        terms' postings, never the index. ``postings`` (the terms' df sum,
-        when the caller has it) sizes the decode without a shuffle."""
+        query-term semi-join. The filter is applied to the BLOCKS scan
+        before the Python decode (which Catalyst cannot push a predicate
+        through), so a query decodes only its own terms' postings, never
+        the index. The decode is sized by ``postings``, the terms' df sum
+        (from the ``term_dfs`` memo when not given), so it runs no shuffle."""
         from .block_postings import decode_blocks_to_flat
 
+        if postings is None:
+            postings = sum(term_dfs(self, list(terms)).values())
         return decode_blocks_to_flat(
             self.postings_blocks.filter(F.col("term").isin(list(terms))), postings=postings
         )

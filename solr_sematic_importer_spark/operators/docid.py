@@ -17,6 +17,9 @@ zip-with-index:
 3. ``mapInPandas`` stamps ``offset[pid] + local_ordinal`` — narrow, no
    extra shuffle.
 
+The build persists the step-1 frame and releases it once its stats job
+has run; ``assign_doc_ids`` returns a lazy frame and persists nothing.
+
 The resulting ids are a pure function of the key order, independent of the
 sampled partition boundaries and of parallelism, so reruns and different
 cluster sizes produce identical ids (rank-identity requirement).  At real
@@ -27,6 +30,7 @@ lineage manifest so resumed builds reuse identical offsets.
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -70,16 +74,17 @@ def ordered_with_offsets(
 def stamp_batches(
     batches: Iterator[pd.DataFrame], offsets: "dict[int, int]"
 ) -> Iterator["tuple[np.ndarray, pd.DataFrame]"]:
-    """Step 3, inside one partition of an ``ordered_with_offsets`` frame:
-    (ids, batch) for each non-empty batch, ids = partition offset + local
-    ordinal."""
-    local = 0
+    """Step 3, inside one partition of key-sorted rows whose ``_pid``
+    ranges are contiguous: (ids, batch) for each non-empty batch, ids =
+    the first range's offset + local ordinal."""
+    first = None
     for b in batches:
         if not len(b):
             continue
-        off = offsets[int(b["_pid"].iloc[0])]
-        yield np.arange(off + local, off + local + len(b), dtype=np.int64), b
-        local += len(b)
+        if first is None:
+            first = offsets[int(b["_pid"].iloc[0])]
+        yield np.arange(first, first + len(b), dtype=np.int64), b
+        first += len(b)
 
 
 def assign_doc_ids(
@@ -88,9 +93,35 @@ def assign_doc_ids(
     num_partitions: int | None = None,
     doc_id_col: str = DOC_ID_COL,
 ) -> DataFrame:
+    """``df`` with ``doc_id_col`` = the row's rank in ``key_cols`` order.
+    Nothing is persisted: one job collects each key range's first key and
+    row count, and a row's range (the number of range starts <= its key)
+    is then a pure function of its keys, re-derived by the stamping pass.
+    ``df`` is read twice, so it must be deterministic."""
+    keys = list(key_cols)
     if num_partitions is None:
         num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    ordered, offsets = ordered_with_offsets(df, list(key_cols), num_partitions)
+    key = F.struct(*keys)
+    ranges = (
+        df.select(*keys)
+        .repartitionByRange(num_partitions, *keys)
+        .withColumn("_pid", F.spark_partition_id())
+        .groupBy("_pid")
+        .agg(F.min(key).alias("lo"), F.count("*").alias("n"))
+        .orderBy("_pid")
+        .collect()
+    )
+    offsets = dict(enumerate(accumulate((r["n"] for r in ranges), initial=0)))
+    types = {f.name: f.dataType for f in df.schema.fields}
+    starts = [
+        F.struct(*[F.lit(r["lo"][k]).cast(types[k]).alias(k) for k in keys])
+        for r in ranges[1:]
+    ]
+    ordered = (
+        df.withColumn("_pid", sum(((key >= lo).cast("int") for lo in starts), F.lit(0)))
+        .repartitionByRange(num_partitions, "_pid")
+        .sortWithinPartitions("_pid", *keys)
+    )
 
     out_schema = ", ".join(
         [f"{doc_id_col} long"] + [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]

@@ -22,11 +22,10 @@ Spark-first shape — the single-field build pipeline, run per field:
   >= 1 token, so each field is a plain ``InvertedIndex`` with its own
   docCount_f, avgdl_f and df_f — the same blocks and the same readers as
   every other index;
-* query-time: each field's blocks are filtered to its own query terms
-  and tagged with a literal ``field``; the union decodes in ONE Python
-  stage; the per-(field,term) weights boost_f * idf_f and avgdl_f are
-  literal maps; the per-doc combine folds a SORTED (field,term) array
-  so float order is fixed and results are bit-identical across
+* query-time: a term leaf is ``score.term_leaf`` over the weighted
+  fields (ONE decode stage for all of them; boost_f * idf_f and avgdl_f
+  are literal maps); the per-doc combine folds a SORTED (field,term)
+  array so float order is fixed and results are bit-identical across
   parallelism levels;
 * top-k is ``score.top_page`` -> TakeOrderedAndProject (per-partition
   heaps + driver k-way merge).
@@ -36,14 +35,12 @@ from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass, field as dc_field
-from functools import reduce
 from typing import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..functions.queryparser import QueryParseError, parse_query
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT, idf
-from .block_postings import decode_blocks_to_flat
 from .boolean_query import DROPPED_CLAUSE, _Evaluator
 from .build import (
     CACHE_LEVEL,
@@ -54,9 +51,9 @@ from .build import (
 )
 from .score import (
     analyze_query,
-    bm25_partial,
     constant_scores,
     sorted_fold,
+    term_leaf,
     top_page,
     wildcard_to_regex,
 )
@@ -139,44 +136,20 @@ def _field_partials(
     quantize: bool,
 ) -> "DataFrame | None":
     """(doc_id, field, term, s) BM25 partials of the analyzed ``terms``
-    over the weighted fields, ``w = boost * boost_f * mult * idf_f``.
-    Each field's term-filtered blocks, tagged with a literal ``field``,
-    decode in ONE Python stage sized by the terms' df; w and avgdl_f are
-    literal maps, not a broadcast table (a broadcast is one Spark job per
-    leaf). None when no (field, term) pair is indexed."""
+    over the weighted fields, ``w = boost * boost_f * mult * idf_f``: the
+    multi-field call of ``score.term_leaf``. None when no (field, term)
+    pair is indexed."""
     counts = Counter(terms)
-    weights, avgdls, blocks, dls = {}, {}, [], []
-    n_postings = 0
+    leaves = {}
     for f, boost_f in field_weights.items():
         fi = index.fields[f]
         dfs = term_dfs(fi, list(counts))
-        hit = [t for t in counts if dfs[t] > 0]
-        if not hit:
-            continue
-        for t in hit:
-            weights[f"{f}\x00{t}"] = boost * boost_f * float(counts[t]) * idf(dfs[t], fi.n_docs)
-        n_postings += sum(dfs[t] for t in hit)
-        avgdls[f] = fi.avgdl
-        tag = F.lit(f).alias("field")
-        blocks.append(fi.postings_blocks.filter(F.col("term").isin(hit)).select(tag, "*"))
-        dls.append(fi.doc_stats.select("doc_id", tag, "dl"))
-    if not weights:
-        return None
-    cand = decode_blocks_to_flat(
-        reduce(DataFrame.unionByName, blocks), ("field", "term"), n_postings
-    )
-    dl_col = "dl_quant" if quantize else "dl"
-    if not quantize:
-        cand = cand.join(reduce(DataFrame.unionByName, dls), ["doc_id", "field"])
-    w = _literal_map(weights)[F.concat_ws("\x00", "field", "term")]
-    avgdl = _literal_map(avgdls)[F.col("field")]
-    return cand.select(
-        "doc_id", "field", "term", bm25_partial(w, F.col("tf"), dl_col, avgdl, k1, b).alias("s")
-    )
-
-
-def _literal_map(m: Mapping[str, float]) -> Column:
-    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
+        leaves[f] = (fi, {
+            t: boost * boost_f * float(mult) * idf(dfs[t], fi.n_docs)
+            for t, mult in counts.items() if dfs[t] > 0
+        })
+    scored = term_leaf(leaves, k1, b, quantize)
+    return None if scored is None else scored.select("doc_id", "field", "term", "s")
 
 
 def _field_term_leaf(index, field_weights, text, boost, k1, b, quantize):

@@ -9,11 +9,14 @@ The reference delegates this entirely to Solr's ``/select`` handler
 * per-term idf from exact docfreq; duplicate query terms keep their
   multiplicity (Lucene builds one SHOULD TermQuery per token, so a repeated
   token contributes twice);
-* candidate fetch is a semi-join of the postings table against the tiny
-  query-term set — expressed as ``isin`` so Catalyst pushes the predicate
-  into the parquet/Iceberg scan (SURVEY §2.3 J2);
+* every BM25 term leaf is ``term_leaf`` (Lucene's one TermWeight/
+  TermScorer): the blocks are filtered to the query's terms with ``isin``,
+  so Catalyst pushes the predicate into the parquet/Iceberg scan (SURVEY
+  §2.3 J2), and decode in ONE Python stage sized by the terms' df sum
+  (no shuffle); the exact dl is joined only for ``quantize=False``;
 * per-posting score is computed with built-in JVM expressions (whole-stage
-  codegen, no Python in the hot path);
+  codegen), each term's weight read from a literal map — a broadcast
+  weight table would cost one Spark job per leaf;
 * per-doc summation folds a SORTED array of (term, partial) pairs so the
   float accumulation order is fixed — scores are bit-identical across
   parallelism levels (SURVEY §7.3 risk 7);
@@ -26,7 +29,8 @@ The reference delegates this entirely to Solr's ``/select`` handler
 from __future__ import annotations
 
 from collections import Counter
-from typing import Sequence
+from functools import reduce
+from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -59,13 +63,59 @@ def top_page(index, per_doc: "DataFrame | None", k: int) -> DataFrame:
     )
 
 
-def term_postings(index: InvertedIndex, terms: "Sequence[str]", dl_col: str) -> DataFrame:
-    """``index.flat_terms(terms)`` carrying ``dl_col``, the dl a BM25
-    clause scores with: ``dl_quant`` comes with the block decode, and the
-    exact ``dl`` is joined from ``doc_stats`` only when asked for
-    (``quantize=False``)."""
-    cand = index.flat_terms(terms)
-    return cand if dl_col == "dl_quant" else index.with_exact_dl(cand)
+def _literal_map(m: Mapping) -> Column:
+    """``m`` as a map literal, so a per-term value is an expression
+    lookup; a broadcast table would cost one Spark job per request."""
+    return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
+
+
+def term_leaf(
+    fields: "Mapping[str | None, tuple[InvertedIndex, Mapping[str, float]]]",
+    k1: float,
+    b: float,
+    quantize: bool,
+) -> "DataFrame | None":
+    """The BM25 term leaf every exhaustive scorer runs (Lucene's
+    TermWeight/TermScorer): (doc_id, [field,] term, tf, dl, s) per posting
+    of the query's terms, ``s = bm25_partial(w, tf, dl, avgdl)``; dl is
+    ``dl_quant``, or the exact ``dl`` from doc_stats for ``quantize=False``.
+    ``fields`` maps each field to its index and its terms' weights ``w``
+    (df > 0 only); a single-field index is the one key ``None`` (no
+    ``field`` column). All fields decode in ONE Python stage sized by the
+    terms' df sum, with no shuffle; ``w`` and the per-field avgdl are
+    literal maps. None when no term is given."""
+    from .block_postings import decode_blocks_to_flat
+
+    keys = ("term",) if None in fields else ("field", "term")
+    blocks, dls, weights, avgdls, n = [], [], {}, {}, 0
+    for f, (index, tw) in fields.items():
+        if not tw:
+            continue
+        n += sum(term_dfs(index, list(tw)).values())
+        scan = index.postings_blocks.filter(F.col("term").isin(list(tw)))
+        dl = index.doc_stats.select("doc_id", "dl")
+        if f is not None:
+            tag = F.lit(f).alias("field")
+            scan, dl = scan.select(tag, "*"), dl.select("doc_id", tag, "dl")
+        blocks.append(scan)
+        dls.append(dl)
+        weights.update(tw if f is None else {f"{f}\x00{t}": w for t, w in tw.items()})
+        avgdls[f] = index.avgdl
+    if not blocks:
+        return None
+    cand = decode_blocks_to_flat(reduce(DataFrame.unionByName, blocks), keys, n)
+    dl_col = "dl_quant" if quantize else "dl"
+    if not quantize:
+        cand = cand.join(reduce(DataFrame.unionByName, dls), ["doc_id", *keys[:-1]])
+    if None in fields:
+        w, avgdl = _literal_map(weights)[F.col("term")], avgdls[None]
+    else:
+        w = _literal_map(weights)[F.concat_ws("\x00", "field", "term")]
+        avgdl = _literal_map(avgdls)[F.col("field")]
+    return cand.select(
+        "doc_id", *keys, "tf", dl_col,
+        bm25_partial(w, F.col("tf"), dl_col, avgdl, k1, b).alias("s"),
+    )
 
 
 def bm25_partial(
@@ -219,19 +269,14 @@ def score_or_docs(
     over one SHOULD TermQuery per token). The clause count rides the
     same per-doc fold (sum of matched-term multiplicities), so mm adds
     zero extra shuffles."""
-    spark = index.doc_stats.sparkSession
     terms = list(raw_terms) if raw_terms is not None else analyze_query(query, index.profile)
     if not terms or index.n_docs == 0:
         return None
 
     counts = Counter(terms)
     dfs = term_dfs(index, list(counts))
-    weights = [
-        (t, float(mult) * idf(dfs[t], index.n_docs), int(mult))
-        for t, mult in counts.items()
-        if dfs[t] > 0
-    ]
-    if not weights:
+    mult = {t: m for t, m in counts.items() if dfs[t] > 0}
+    if not mult:
         return None
     required = (
         calculate_min_should_match(min_match, len(terms))
@@ -239,19 +284,13 @@ def score_or_docs(
         else 0
     )
 
-    wdf = spark.createDataFrame(weights, "term string, w double, mult int")
-    dl_col = "dl_quant" if quantize else "dl"
-
-    cand = term_postings(index, [w[0] for w in weights], dl_col)
-    scored = cand.join(F.broadcast(wdf), "term").select(
-        "doc_id",
-        "term",
-        "mult",
-        bm25_partial(F.col("w"), F.col("tf"), dl_col, index.avgdl, k1, b).alias("s"),
+    scored = term_leaf(
+        {None: (index, {t: float(m) * idf(dfs[t], index.n_docs) for t, m in mult.items()})},
+        k1, b, quantize,
     )
     per_doc = scored.groupBy("doc_id").agg(
         sorted_fold("term").alias("score"),
-        F.sum("mult").alias("_nclauses"),
+        F.sum(_literal_map(mult)[F.col("term")]).alias("_nclauses"),
     )
     if required > 0:
         per_doc = per_doc.filter(F.col("_nclauses") >= required)
@@ -296,7 +335,6 @@ def bm25_topk_synonyms(
 
     if synonyms is None:
         synonyms = default_synonyms()
-    spark = index.doc_stats.sparkSession
     # Solr applies synonymGraph BEFORE stemming and the outputs continue
     # through the rest of the chain. Matching rules against STEMMED
     # tokens would never fire under text_en ('television' analyzes to
@@ -319,40 +357,39 @@ def bm25_topk_synonyms(
             groups.append(flat)
     if not groups:
         return top_page(index, None, k)
-    members = sorted({m for g in groups for m in g})
-    dfs = term_dfs(index, members)
+    dfs = term_dfs(index, sorted({m for g in groups for m in g}))
     # one weight per original token position; duplicate positions keep
-    # multiplicity (Lucene builds one SHOULD clause per position)
-    group_rows = []  # (term, group_id)
-    weights = []     # (group_id, w)
-    gid = 0
+    # multiplicity (Lucene builds one SHOULD clause per position), so a
+    # member maps to every group it is in
+    gids: dict[str, list[int]] = {}
+    weights: list[float] = []
     for g in groups:
         present = [m for m in g if dfs[m] > 0]
         if not present:
             continue
-        weights.append((gid, idf(max(dfs[m] for m in present), index.n_docs)))
         for m in present:
-            group_rows.append((m, gid))
-        gid += 1
+            gids.setdefault(m, []).append(len(weights))
+        weights.append(idf(max(dfs[m] for m in present), index.n_docs))
     if not weights:
         return top_page(index, None, k)
 
-    gdf = spark.createDataFrame(group_rows, "term string, gid int")
-    wdf = spark.createDataFrame(weights, "gid int, w double")
     dl_col = "dl_quant" if quantize else "dl"
-
-    cand = term_postings(index, sorted({m for m, _ in group_rows}), dl_col)
+    cand = term_leaf(
+        {None: (index, {m: weights[g[0]] for m, g in gids.items()})}, k1, b, quantize
+    )
     # per (doc, group): tf summed across members, THEN the BM25 saturation
+    # (the leaf's per-member s is unused)
+    gid = F.explode(_literal_map(gids)[F.col("term")]).alias("gid")
     per_group = (
-        cand.join(F.broadcast(gdf), "term")
+        cand.select("doc_id", gid, "tf", dl_col)
         .groupBy("doc_id", "gid", dl_col)
         .agg(F.sum("tf").alias("tf_sum"))
-        .join(F.broadcast(wdf), "gid")
         .select(
             "doc_id",
             "gid",
             bm25_partial(
-                F.col("w"), F.col("tf_sum"), dl_col, index.avgdl, k1, b
+                _literal_map(dict(enumerate(weights)))[F.col("gid")],
+                F.col("tf_sum"), dl_col, index.avgdl, k1, b,
             ).alias("s"),
         )
     )
@@ -457,21 +494,7 @@ def fuzzy_scores(
     if not members or index.n_docs == 0:
         return None
     w = boost * idf(max(df for _, df, _ in members), index.n_docs)
-    bdf = index.doc_stats.sparkSession.createDataFrame(
-        [(t, bst) for t, _, bst in members], "term string, mboost double"
-    )
-    dl_col = "dl_quant" if quantize else "dl"
-    scored = (
-        term_postings(index, [t for t, _, _ in members], dl_col)
-        .join(F.broadcast(bdf), "term")
-        .select(
-            "doc_id",
-            "term",
-            bm25_partial(
-                F.col("mboost") * F.lit(w), F.col("tf"), dl_col, index.avgdl, k1, b
-            ).alias("s"),
-        )
-    )
+    scored = term_leaf({None: (index, {t: bst * w for t, _, bst in members})}, k1, b, quantize)
     return scored.groupBy("doc_id").agg(sorted_fold("term").alias("s"))
 
 
@@ -598,37 +621,24 @@ def score_partials(
     ``sum(partial) over doc = score``. The shared leaf table behind
     ``explain_topk`` and ``select(debug=True)``: callers semi-join their
     own (request-sized) doc set. None when no query term is indexed."""
-    spark = index.doc_stats.sparkSession
     terms = analyze_query(query, index.profile)
     if not terms or index.n_docs == 0:
         return None
     counts = Counter(terms)
-    dfs = term_dfs(index, list(counts))
-    weights = [
-        (t, float(dfs[t]), idf(dfs[t], index.n_docs),
-         float(mult) * idf(dfs[t], index.n_docs))
-        for t, mult in counts.items()
-        if dfs[t] > 0
-    ]
-    if not weights:
+    dfs = {t: d for t, d in term_dfs(index, list(counts)).items() if d > 0}
+    if not dfs:
         return None
-    wdf = spark.createDataFrame(
-        weights, "term string, df double, idf double, w double"
+    idfs = {t: idf(d, index.n_docs) for t, d in dfs.items()}
+    scored = term_leaf(
+        {None: (index, {t: float(counts[t]) * idfs[t] for t in dfs})}, k1, b, quantize
     )
-    dl_col = "dl_quant" if quantize else "dl"
-    return (
-        term_postings(index, [w[0] for w in weights], dl_col)
-        .join(F.broadcast(wdf), "term")
-        .select(
-            "doc_id",
-            "term",
-            F.col("tf").cast("long").alias("tf"),
-            F.col("df").cast("long").alias("df"),
-            "idf",
-            bm25_partial(
-                F.col("w"), F.col("tf"), dl_col, index.avgdl, k1, b
-            ).alias("partial"),
-        )
+    return scored.select(
+        "doc_id",
+        "term",
+        F.col("tf").cast("long").alias("tf"),
+        _literal_map(dfs)[F.col("term")].cast("long").alias("df"),
+        _literal_map(idfs)[F.col("term")].alias("idf"),
+        F.col("s").alias("partial"),
     )
 
 
@@ -677,25 +687,14 @@ def bm25_conjunction_topk(
 ) -> DataFrame:
     """AND semantics (SURVEY §2.7): docs matching ALL distinct query terms,
     scored the same way — union of postings + HAVING count = n_terms."""
-    spark = index.doc_stats.sparkSession
     terms = sorted(set(analyze_query(query, index.profile)))
     if not terms:
         return top_page(index, None, k)
     dfs = term_dfs(index, terms)
     if any(dfs[t] == 0 for t in terms):  # a term with df=0 -> conjunction is empty
         return top_page(index, None, k)
-    wdf = spark.createDataFrame(
-        [(t, idf(dfs[t], index.n_docs)) for t in terms], "term string, w double"
-    )
-    dl_col = "dl_quant" if quantize else "dl"
-    scored = (
-        term_postings(index, terms, dl_col)
-        .join(F.broadcast(wdf), "term")
-        .select(
-            "doc_id",
-            "term",
-            bm25_partial(F.col("w"), F.col("tf"), dl_col, index.avgdl, k1, b).alias("s"),
-        )
+    scored = term_leaf(
+        {None: (index, {t: idf(dfs[t], index.n_docs) for t in terms})}, k1, b, quantize
     )
     per_doc = scored.groupBy("doc_id").agg(
         F.count("*").alias("nt"), sorted_fold("term").alias("score")

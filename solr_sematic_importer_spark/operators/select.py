@@ -48,10 +48,11 @@ A query that matches nothing runs the same stages over an empty match
 set, so every section keeps the matching path's schema and elevation
 still pins its documents.
 
-Spark shape (100 TB): the scoring agg's pushed ``In(term)`` scan filter and
-broadcast weight join, boost/collapse joins on the already-reduced match
-set, a broadcastable rerank head, and TakeOrderedAndProject for every
-top-k cut. Composing adds no extra pass over postings.
+Spark shape (100 TB): the scoring agg's pushed ``In(term)`` scan filter,
+one df-sized decode and literal-map weights (``score.term_leaf``),
+boost/collapse joins on the already-reduced match set, a broadcastable
+rerank head, and TakeOrderedAndProject for every top-k cut. Composing
+adds no extra pass over postings.
 """
 
 from __future__ import annotations

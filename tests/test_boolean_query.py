@@ -144,9 +144,15 @@ def test_prohibited(idx):
 
 def test_pure_negative_top_level(idx):
     index, _ = idx
-    got = boolean_query_topk(index, "-merge", k=10, quantize=False).collect()
-    assert {r["doc_id"] for r in got} == {3, 4, 6}
-    assert all(r["score"] == 1.0 for r in got)
+    for q, want in (
+        ("-merge", {3, 4, 6}),
+        # a prohibited clause that matches nothing (df=0) excludes nothing:
+        # Solr's *:* -x rewrite returns every doc
+        ("-zzzznope", {0, 1, 2, 3, 4, 5, 6}),
+    ):
+        got = boolean_query_topk(index, q, k=10, quantize=False).collect()
+        assert {r["doc_id"] for r in got} == want, q
+        assert all(r["score"] == 1.0 for r in got)
 
 
 def test_group_and(idx):

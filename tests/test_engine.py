@@ -77,6 +77,24 @@ def test_doc_ids_dense_and_order_stable(spark, corpus_pdf):
         assert list(ids["turn_idx"]) == list(corpus_pdf["turn_idx"])
 
 
+def test_doc_ids_pin_no_rdd(spark, corpus_pdf):
+    """assign_doc_ids persists nothing: once its output is consumed the
+    session holds as many persisted RDDs as before, and the ids are still
+    the rank in (conv_id, turn_idx) order."""
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    ids = (
+        assign_doc_ids(spark.createDataFrame(corpus_pdf), num_partitions=3)
+        .select("doc_id", "conv_id", "turn_idx")
+        .toPandas()
+        .sort_values("doc_id")
+    )
+    assert jsc.getPersistentRDDs().size() == before
+    assert list(ids["doc_id"]) == list(range(len(corpus_pdf)))
+    assert list(ids["conv_id"]) == list(corpus_pdf["conv_id"])
+    assert list(ids["turn_idx"]) == list(corpus_pdf["turn_idx"])
+
+
 def test_corpus_stats_match_oracle(built):
     idx, oracle = built
     assert idx.n_docs == oracle.n

@@ -278,9 +278,13 @@ def test_fielded_pure_negative_rewrite(mf):
     """A top-level pure-negative fielded query applies Solr's rewrite
     (*:* minus exclusions at 1.0), matching the single-field engine —
     previously it silently returned 0 results."""
-    rows = fielded_query_topk(mf, "-title:draft", k=10).collect()
-    assert {r["doc_id"] for r in rows} == {0, 1, 3}
-    assert all(r["score"] == 1.0 for r in rows)
+    for q, want in (
+        ("-title:draft", {0, 1, 3}),
+        ("-title:zzzznope", {0, 1, 2, 3}),  # excludes nothing: every doc
+    ):
+        rows = fielded_query_topk(mf, q, k=10).collect()
+        assert {r["doc_id"] for r in rows} == want, q
+        assert all(r["score"] == 1.0 for r in rows)
     # but a df=0 positive clause still blocks the rewrite
     assert fielded_query_topk(mf, "title:zzzznope -title:draft", k=10).count() == 0
 

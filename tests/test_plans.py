@@ -13,6 +13,7 @@ from solr_sematic_importer_spark.plans.explain import (
     assert_scan_pushdown,
     codegen_stage_count,
     has_node,
+    plan_string,
     pushed_filters,
 )
 from solr_sematic_importer_spark.sources.transcripts import synthetic_transcripts
@@ -37,6 +38,16 @@ def test_topk_plans_as_take_ordered(disk_idx):
     q = bm25_topk(disk_idx, "zeppelin", k=5)
     assert has_node(q, "TakeOrderedAndProject")
     assert has_node(q, "BroadcastHashJoin") or has_node(q, "BroadcastNestedLoopJoin")
+
+
+def test_term_weights_are_literals_not_a_broadcast_table(disk_idx):
+    """A weight table built on the driver plans as a Scan ExistingRDD (or
+    LocalTableScan) under a BroadcastExchange, one Spark job per leaf;
+    term weights are map literals instead. The one broadcast left is the
+    page's key-column lookup."""
+    q = bm25_topk(disk_idx, "zeppelin quartz zeppelin", k=5)
+    assert not has_node(q, "Scan ExistingRDD") and not has_node(q, "LocalTableScan")
+    assert plan_string(q).count("BroadcastExchange (") == 1
 
 
 def test_scoring_stays_in_codegen(disk_idx):

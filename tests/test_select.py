@@ -81,6 +81,7 @@ def test_select_combined_request(idx, fields):
     fc = {x["grp"]: x["cnt"] for x in r.facets["grp"].collect()}
     assert fc == {g: 1 for g in heads}
     assert r.num_found == len(heads)
+    r.release()
 
 
 def test_select_elevation_composes_with_rerank(idx):
@@ -190,6 +191,7 @@ def test_select_no_match_is_empty_but_shaped(idx, fields):
                facet_fields=("grp",), with_num_found=True)
     assert r.docs.count() == 0 and r.num_found == 0
     assert r.facets["grp"].count() == 0
+    r.release()
 
 
 def test_select_elevation_with_start_is_exact_offset(idx):
@@ -320,6 +322,7 @@ def test_select_range_pivot_json_facets(idx, fields):
     # facet.field still agrees with the same match set
     got_f = {x["grp"]: x["cnt"] for x in r.facets["grp"].collect()}
     assert got_f == {g: len(v) for g, v in per_grp.items()}
+    r.release()
 
 
 def test_select_multi_section_batches_scoring_and_releases(idx, fields):

@@ -22,6 +22,7 @@ from solr_sematic_importer_spark.operators.build import (
     write_index,
     write_meta_file,
 )
+from solr_sematic_importer_spark.operators.boolean_query import boolean_query_topk
 from solr_sematic_importer_spark.operators.score import bm25_topk
 from solr_sematic_importer_spark.operators.segments import (
     append_segment,
@@ -150,6 +151,40 @@ def test_warm_wand_and_page_only_select_run_at_most_two_jobs(spark, small, writt
         assert n_wand <= 2 and n_sel <= 2, (n_wand, n_sel)
         assert n_loop > 2  # the UB loop this request used to take
         assert wand == page == loop
+
+
+LEAF_Q = "state of the art window"
+
+
+def _select_combined(idx):
+    r = select(
+        idx, LEAF_Q, fq=F.col("doc_id") % 2 == 0,
+        fields=idx.doc_stats.select("doc_id", "conv_id", "dl"),
+        boost=F.col("dl"), collapse_field="conv_id", facet_fields=("conv_id",),
+        rows=5,
+    )
+    out = _rows(r.docs), {name: f.collect() for name, f in r.facets.items()}
+    r.release()
+    return out
+
+
+@pytest.mark.parametrize("run, most", [
+    pytest.param(lambda idx: _rows(bm25_topk(idx, LEAF_Q, k=10)), 4, id="bm25_topk"),
+    pytest.param(lambda idx: _rows(bm25_topk(idx, LEAF_Q, k=10, quantize=False)), 5,
+                 id="bm25_topk_exact_dl"),
+    pytest.param(lambda idx: _rows(boolean_query_topk(
+        idx, "+the to -and zeppelin^2", k=10, quantize=False)), 6, id="boolean_terms"),
+    pytest.param(_select_combined, 7, id="select_fq_boost_collapse_facet"),
+])
+def test_warm_term_leaf_job_floor(spark, written, run, most):
+    """Each exhaustive BM25 term leaf decodes its terms in one stage sized
+    by their df and reads its weights from literal maps, so a warm request
+    runs a fixed, small number of jobs. With a broadcast weight table and
+    a rebalanced decode per leaf these requests ran 7, 8, 16 and 11."""
+    idx = written[0]
+    run(idx)  # memoizes df
+    counts = [_jobs(spark, lambda: run(idx))[0] for _ in range(2)]
+    assert counts[0] == counts[1] <= most, counts
 
 
 def test_ub_loop_collects_at_most_batch_times_k_rows_per_round(spark, monkeypatch, tmp_path):
