@@ -53,7 +53,7 @@ from ..functions.similarity import (
     idf,
 )
 from .build import InvertedIndex, term_dfs
-from .score import PAGE_SCHEMA, _literal_map, analyze_query
+from .score import PAGE_SCHEMA, _literal_map, analyze_query, persist_private
 
 DEFAULT_BUCKET_BITS = 14  # 16384-doc buckets: skew bound + pruning unit
 
@@ -378,7 +378,7 @@ def bm25_topk_wand(
         )[:k]
         return _driver_page(spark, [(d, s) for s, d in rows])
 
-    cand = cand.persist()
+    cand = persist_private(cand)
     # JVM-side bucket upper bounds from block metadata only (no decode).
     # Kept DISTRIBUTED: at the 10^12-doc design point this table is ~6e7
     # rows per query — collecting it whole would be a driver scale-killer.
@@ -398,12 +398,11 @@ def bm25_topk_wand(
     enc_avgdl = index.impacts_avgdl if index.impacts_avgdl else avgdl
     ub_scale = max(1.0, avgdl / enc_avgdl) if enc_avgdl else 1.0
     w = _literal_map(weights)[F.col("term")]
-    ub_df = (
+    ub_df = persist_private(
         cand.groupBy("bucket_id", "term")
         .agg(F.max(w * F.col("max_impact")).alias("tub"))
         .groupBy("bucket_id")
         .agg((F.sum("tub") * F.lit(ub_scale)).alias("ub"))
-        .persist()
     )
 
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k

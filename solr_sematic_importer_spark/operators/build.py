@@ -42,7 +42,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..functions.similarity import B_DEFAULT, K1_DEFAULT
-from .docid import CACHE_LEVEL, ordered_with_offsets, stamp_batches
+from .docid import CACHE_LEVEL, stamp_doc_ids
 
 
 def doc_stats_aggs() -> "list[Column]":
@@ -89,21 +89,19 @@ def _analyze(
     profile: str,
     doc_id_col: "str | None",
     doc_id_offset: int = 0,
-) -> "tuple[DataFrame, DataFrame | None]":
+) -> DataFrame:
     """The build's ONE Python stage (SURVEY §2.5 W1 + §2.8 + A5): doc ids,
     analysis and per-doc tf in a single mapInPandas. ``texts`` maps an
     output suffix to a text column; each becomes ``terms<sfx>``,
     ``tfs<sfx>`` and ``dl<sfx>`` (a single-field index uses the suffix
     ""). Ids come from ``doc_id_col`` when given (already dense and
-    stable), else from the docid.py stamp: range-partition + sort by key,
-    prefix-sum offsets from a cheap count job, ``offset + local ordinal``
+    stable), else from the docid.py stamp: prefix-sum offsets from a cheap
+    key-range job, range-partition + sort by key, ``offset + ordinal``
     — a pure function of the key order, independent of parallelism
     (rank-identity). Folding tf here removes the (doc, term) hash-agg
     shuffle entirely: a doc's tokens never leave the partition (that
     shuffle measured as the NON-scaling stage — a string-heavy hash agg
-    over every token occurrence). Returns the analyzed frame and the
-    persisted ordered frame the stamp reads (None with ``doc_id_col``),
-    which the caller unpersists once the analyzed output is materialized."""
+    over every token occurrence)."""
     import pandas as pd
 
     from ..functions.analyzer import tf_series
@@ -137,18 +135,11 @@ def _analyze(
                 if len(b):
                     yield analyze(b[doc_id_col].astype("int64"), b)
 
-        return src.mapInPandas(with_ids, schema=out_schema), None
+        return src.mapInPandas(with_ids, schema=out_schema)
 
     nparts = max(2 * df.sparkSession.sparkContext.defaultParallelism, 2)
-    ordered, offsets = ordered_with_offsets(
-        src, key_cols or list(texts.values()), nparts, doc_id_offset
-    )
-
-    def stamp_analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for ids, b in stamp_batches(batches, offsets):
-            yield analyze(ids, b)
-
-    return ordered.mapInPandas(stamp_analyze, schema=out_schema), ordered
+    keys = key_cols or list(texts.values())
+    return stamp_doc_ids(src, keys, nparts, doc_id_offset, analyze, out_schema)
 
 
 @dataclass
@@ -283,15 +274,12 @@ def _index_analyzed(
     k1: float,
     b: float,
     write_doc_vectors: bool = False,
-    ordered: "DataFrame | None" = None,
 ) -> InvertedIndex:
     """Every stage after analysis, over (doc_id, <key cols>, terms, tfs,
     dl) docs: ``doc_stats``, explode, the (term, bucket) block encode and
     ``term_stats`` from block metadata. With ``path=None`` each stage's
     output is persisted in memory (and listed in the index's caches);
-    with a path it is written there as parquet and read back. ``ordered``
-    (the doc-id stamp's input) is unpersisted once the first job has
-    materialized ``analyzed``."""
+    with a path it is written there as parquet and read back."""
     from .block_postings import (
         DEFAULT_BUCKET_BITS,
         encode_flat_to_blocks,
@@ -316,8 +304,6 @@ def _index_analyzed(
         analyzed.drop("terms", "tfs").withColumn("dl_quant", quantize_dl_col(F.col("dl"))),
     )
     stats = doc_stats.agg(*doc_stats_aggs()).first()
-    if ordered is not None:  # analyzed is materialized by the stats job
-        ordered.unpersist()
     n_docs, sum_dl = int(stats["n"]), int(stats["s"])
     avgdl = sum_dl / n_docs if n_docs else 0.0
 
@@ -381,13 +367,11 @@ def _build(
     read back, and ``index_meta`` is written last as the commit record."""
     # The analyzer is the expensive Python stage: run it exactly ONCE and
     # persist its output (serialized) for the fan-out below.
-    analyzed, ordered = _analyze(
-        df, {"": text_col}, key_cols, profile, doc_id_col, doc_id_offset
-    )
+    analyzed = _analyze(df, {"": text_col}, key_cols, profile, doc_id_col, doc_id_offset)
     analyzed.persist(CACHE_LEVEL)
     index = _index_analyzed(
         analyzed, path, profile, key_cols, bucket_bits, k1, b,
-        write_doc_vectors, ordered,
+        write_doc_vectors,
     )
     if path is None:
         index._caches.insert(0, analyzed)

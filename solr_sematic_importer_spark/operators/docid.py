@@ -7,36 +7,35 @@ ordering (BASELINE.json input_hint); internally postings reference a dense
 
 A single ``row_number() OVER (ORDER BY ...)`` is a one-partition sort — a
 scalability cliff at 10^12 rows — so this is the classic two-light-pass
-zip-with-index:
+zip-with-index, persisting nothing:
 
-1. ``repartitionByRange(key_cols)`` + ``sortWithinPartitions`` puts the
-   data in globally ordered, per-partition-sorted form (sampled range
-   boundaries; fully parallel sort).
-2. A cheap count-per-partition job -> prefix sums on the driver (one tiny
-   array, #partitions entries).
-3. ``mapInPandas`` stamps ``offset[pid] + local_ordinal`` — narrow, no
-   extra shuffle.
+1. One job range-partitions the KEY columns (sampled boundaries, fully
+   parallel) and collects each range's first key and row count; prefix
+   sums of the counts on the driver give each range's first doc id (one
+   tiny array, #ranges entries).
+2. The lazy stamping pass re-derives each row's range from its keys
+   alone — a binary search over the collected range starts, log2(#ranges)
+   comparisons per row — puts each range in a partition of its own, sorts
+   by key, and ``mapInPandas`` stamps ``offset[range] + ordinal``.
 
-The build persists the step-1 frame and releases it once its stats job
-has run; ``assign_doc_ids`` returns a lazy frame and persists nothing.
-
-The resulting ids are a pure function of the key order, independent of the
-sampled partition boundaries and of parallelism, so reruns and different
-cluster sizes produce identical ids (rank-identity requirement).  At real
-scale the ordered+numbered result is persisted once (the index build's
-``doc_stats`` table) and the per-partition (rows, offset) pairs land in the
-lineage manifest so resumed builds reuse identical offsets.
+Step 2 never trusts a second sampling of boundaries (Spark seeds its range
+sampler per RDD, so two jobs may cut differently): a row's range is a pure
+function of its keys and of step 1's output. The resulting ids are a pure
+function of the key order, independent of the sampled partition boundaries
+and of parallelism, so reruns and different cluster sizes produce identical
+ids (rank-identity requirement). The input is read twice, so it must be
+deterministic.
 """
 
 from __future__ import annotations
 
-from itertools import accumulate
-from typing import Iterator, Sequence
+from itertools import accumulate, count
+from typing import Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 DOC_ID_COL = "doc_id"
 
@@ -46,61 +45,46 @@ DOC_ID_COL = "doc_id"
 CACHE_LEVEL = StorageLevel.MEMORY_AND_DISK
 
 
-def ordered_with_offsets(
-    df: DataFrame, key_cols: Sequence[str], num_partitions: int, first_id: int = 0
-) -> "tuple[DataFrame, dict[int, int]]":
-    """Steps 1-2: ``df`` range-partitioned and sorted by ``key_cols`` with
-    its partition id in ``_pid``, persisted (the caller unpersists it once
-    its consumer is materialized), and the first doc id of each
-    partition — ``first_id`` plus the row counts of the partitions
-    before it."""
-    ordered = (
-        df.repartitionByRange(num_partitions, *key_cols)
-        .sortWithinPartitions(*key_cols)
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    ordered.persist(CACHE_LEVEL)
-    counts = dict(
-        (r["_pid"], r["cnt"])
-        for r in ordered.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    )
-    offsets, acc = {}, first_id
-    for pid in range(max(counts) + 1 if counts else 0):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    return ordered, offsets
+def range_label(key: Column, starts: "Sequence[Column]", labels: "Sequence[int]") -> Column:
+    """``labels[i]``, i = how many of the ascending ``starts`` are <=
+    ``key``: a binary search written as nested CASE WHENs,
+    log2(len(starts)) comparisons per row."""
+
+    def search(lo: int, hi: int) -> Column:  # i lies in [lo, hi]
+        if lo == hi:
+            return F.lit(labels[lo])
+        mid = (lo + hi + 1) // 2
+        return F.when(key >= starts[mid - 1], search(mid, hi)).otherwise(search(lo, mid - 1))
+
+    return search(0, len(starts))
 
 
-def stamp_batches(
-    batches: Iterator[pd.DataFrame], offsets: "dict[int, int]"
-) -> Iterator["tuple[np.ndarray, pd.DataFrame]"]:
-    """Step 3, inside one partition of key-sorted rows whose ``_pid``
-    ranges are contiguous: (ids, batch) for each non-empty batch, ids =
-    the first range's offset + local ordinal."""
-    first = None
-    for b in batches:
-        if not len(b):
-            continue
-        if first is None:
-            first = offsets[int(b["_pid"].iloc[0])]
-        yield np.arange(first, first + len(b), dtype=np.int64), b
-        first += len(b)
+def hash_partition(value: int, n: int) -> int:
+    """The partition ``repartition(n, col)`` sends the int ``value`` to:
+    pmod(Murmur3_x86_32(value, seed 42), n), Spark's HashPartitioning."""
+    m = 0xFFFFFFFF
+    k = (value & m) * 0xCC9E2D51 & m
+    k = ((k << 15) | (k >> 17)) * 0x1B873593 & m
+    h = 42 ^ k
+    h = ((((h << 13) | (h >> 19)) & m) * 5 + 0xE6546B64 & m) ^ 4
+    h = (h ^ (h >> 16)) * 0x85EBCA6B & m
+    h = (h ^ (h >> 13)) * 0xC2B2AE35 & m
+    h ^= h >> 16
+    return (h - (1 << 32) if h >> 31 else h) % n
 
 
-def assign_doc_ids(
+def stamp_doc_ids(
     df: DataFrame,
-    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
-    num_partitions: int | None = None,
-    doc_id_col: str = DOC_ID_COL,
+    key_cols: Sequence[str],
+    num_partitions: int,
+    first_id: int,
+    fn: "Callable[[np.ndarray, pd.DataFrame], pd.DataFrame]",
+    schema: str,
 ) -> DataFrame:
-    """``df`` with ``doc_id_col`` = the row's rank in ``key_cols`` order.
-    Nothing is persisted: one job collects each key range's first key and
-    row count, and a row's range (the number of range starts <= its key)
-    is then a pure function of its keys, re-derived by the stamping pass.
-    ``df`` is read twice, so it must be deterministic."""
+    """``fn(ids, batch)`` over every batch of ``df`` (output ``schema``),
+    ids = ``first_id`` + each row's rank in ``key_cols`` order. Runs step
+    1 (one job) and returns step 2 as a lazy frame; persists nothing."""
     keys = list(key_cols)
-    if num_partitions is None:
-        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 2)
     key = F.struct(*keys)
     ranges = (
         df.select(*keys)
@@ -111,27 +95,60 @@ def assign_doc_ids(
         .orderBy("_pid")
         .collect()
     )
-    offsets = dict(enumerate(accumulate((r["n"] for r in ranges), initial=0)))
+    # Range i is labelled with the smallest int that hash partitioning
+    # sends to partition i, so every range gets a task of its own with no
+    # second sampling job (a range repartition on the range index samples
+    # again and merges a range shorter than the mean into its neighbour's
+    # task, doubling that task).
+    n, first = max(len(ranges), 1), {}
+    for v in count():
+        first.setdefault(hash_partition(v, n), v)
+        if len(first) == n:
+            break
+    labels = [first[p] for p in range(n)]
+    offsets = dict(zip(labels, accumulate((r["n"] for r in ranges), initial=first_id)))
     types = {f.name: f.dataType for f in df.schema.fields}
     starts = [
         F.struct(*[F.lit(r["lo"][k]).cast(types[k]).alias(k) for k in keys])
         for r in ranges[1:]
     ]
-    ordered = (
-        df.withColumn("_pid", sum(((key >= lo).cast("int") for lo in starts), F.lit(0)))
-        .repartitionByRange(num_partitions, "_pid")
-        .sortWithinPartitions("_pid", *keys)
-    )
-
-    out_schema = ", ".join(
-        [f"{doc_id_col} long"] + [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
-    )
-    src_cols = [f.name for f in df.schema.fields]
 
     def stamp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for ids, b in stamp_batches(batches, offsets):
-            out = b[src_cols].copy()
-            out.insert(0, doc_id_col, ids)
-            yield out
+        label = None
+        for b in batches:
+            if not len(b):
+                continue
+            lo, hi = int(b["_pid"].iloc[0]), int(b["_pid"].iloc[-1])
+            if label is None:
+                label, nxt = lo, offsets[lo]
+            if lo != label or hi != label:  # the ids would not be dense
+                raise RuntimeError("doc-id stamp: a partition holds two key ranges")
+            yield fn(np.arange(nxt, nxt + len(b), dtype=np.int64), b)
+            nxt += len(b)
 
-    return ordered.mapInPandas(stamp, schema=out_schema)
+    return (
+        df.withColumn("_pid", range_label(key, starts, labels))
+        .repartition(n, "_pid")
+        .sortWithinPartitions(*keys)
+        .mapInPandas(stamp, schema=schema)
+    )
+
+
+def assign_doc_ids(
+    df: DataFrame,
+    key_cols: Sequence[str] = ("conv_id", "turn_idx"),
+    num_partitions: int | None = None,
+    doc_id_col: str = DOC_ID_COL,
+) -> DataFrame:
+    """``df`` with ``doc_id_col`` = the row's rank in ``key_cols`` order,
+    as a lazy frame: nothing is persisted."""
+    if num_partitions is None:
+        num_partitions = max(df.sparkSession.sparkContext.defaultParallelism, 2)
+    cols = df.columns
+    schema = ", ".join(
+        [f"{doc_id_col} long"] + [f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields]
+    )
+    return stamp_doc_ids(
+        df, list(key_cols), num_partitions, 0,
+        lambda ids, b: pd.DataFrame({doc_id_col: ids, **{c: b[c] for c in cols}}), schema,
+    )

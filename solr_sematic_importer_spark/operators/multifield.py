@@ -93,13 +93,9 @@ def build_multifield_index(
     ids are stamped by ``key_cols`` order (by the field texts when there
     are no key cols)."""
     fields = tuple(fields)
-    analyzed, ordered = _analyze(
-        df, {f"_{f}": f for f in fields}, key_cols, profile, doc_id_col
-    )
+    analyzed = _analyze(df, {f"_{f}": f for f in fields}, key_cols, profile, doc_id_col)
     analyzed.persist(CACHE_LEVEL)
     n_docs = analyzed.count()
-    if ordered is not None:  # analyzed is materialized by the count
-        ordered.unpersist()
     # Lucene per-field stats: docCount_f counts docs with >=1 term IN THAT
     # FIELD, so each field's index holds only those docs
     per_field = {

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 from collections import Counter
 from functools import reduce
+from itertools import count
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -67,6 +68,18 @@ def _literal_map(m: Mapping) -> Column:
     """``m`` as a map literal, so a per-term value is an expression
     lookup; a broadcast table would cost one Spark job per request."""
     return F.create_map(*[F.lit(x) for kv in m.items() for x in kv])
+
+
+_PERSISTS = count()
+
+
+def persist_private(df: DataFrame) -> DataFrame:
+    """``df`` persisted under a plan no other request shares. Literal
+    weights make identical requests plan identically, and Spark's cache
+    manager keeps one entry per plan result, so one request's
+    ``unpersist`` would drop the entry another still reads; a
+    request-unique literal in the plan keeps the entries apart."""
+    return df.filter(F.lit(next(_PERSISTS)) >= 0).persist()
 
 
 def term_leaf(

@@ -66,7 +66,7 @@ from ..functions.similarity import B_DEFAULT, K1_DEFAULT
 from .block_postings import bm25_topk_wand
 from .build import InvertedIndex
 from .highlight import highlight as _highlight
-from .score import analyze_query, score_or_docs, score_partials
+from .score import analyze_query, persist_private, score_or_docs, score_partials
 
 
 @dataclass
@@ -328,8 +328,7 @@ def select(
         + (1 if debug else 0)
     )
     if n_sections >= 2:
-        per_doc = per_doc.persist()
-        cached[0] = per_doc
+        per_doc = cached[0] = persist_private(per_doc)
 
     # 5. facets over the final (post-fq, post-collapse) match set — every
     #    flavor shares ONE semi-joined stored-field frame

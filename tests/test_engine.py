@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from solr_sematic_importer_spark.operators.build import build_index
-from solr_sematic_importer_spark.operators.docid import assign_doc_ids
+from solr_sematic_importer_spark.operators.docid import assign_doc_ids, hash_partition, range_label
 from solr_sematic_importer_spark.operators.score import bm25_conjunction_topk, bm25_topk
 from solr_sematic_importer_spark.sources.transcripts import (
     generate_conversations_pdf,
@@ -93,6 +93,42 @@ def test_doc_ids_pin_no_rdd(spark, corpus_pdf):
     assert list(ids["doc_id"]) == list(range(len(corpus_pdf)))
     assert list(ids["conv_id"]) == list(corpus_pdf["conv_id"])
     assert list(ids["turn_idx"]) == list(corpus_pdf["turn_idx"])
+
+
+def test_doc_id_range_search_is_logarithmic(spark):
+    """A row's key range is a binary search over the range starts: with
+    4,096 ranges the expression is 12 CASE levels deep, not a 4,096-term
+    sum, and every row gets the label of the range ``bisect_right``
+    gives."""
+    import bisect
+    import re
+
+    starts = list(range(0, 3 * 4096, 3))[1:]  # 4,095 starts -> 4,096 ranges
+    labels = [7 * i + 1 for i in range(4096)]
+    expr = range_label(F.col("k"), [F.lit(s) for s in starts], labels)
+    depth = level = 0
+    for word in re.findall(r"\b(?:CASE|END)\b", str(expr)):
+        level += 1 if word == "CASE" else -1
+        depth = max(depth, level)
+    assert depth == 12
+    keys = [-1, 0, 2, 3, 4, 3000, 6143, 12284, 12285, 99999]
+    got = spark.createDataFrame([(k,) for k in keys], "k long").select("k", expr.alias("r"))
+    assert {r["k"]: r["r"] for r in got.collect()} == {
+        k: labels[bisect.bisect_right(starts, k)] for k in keys
+    }
+
+
+def test_hash_partition_matches_spark(spark):
+    """The doc-id stamp gives each key range a partition of its own by
+    predicting where ``repartition(n, col)`` sends an int."""
+    for n in (1, 3, 8, 37):
+        got = (
+            spark.range(200).select(F.col("id").cast("int").alias("v"))
+            .repartition(n, "v")
+            .select("v", F.spark_partition_id().alias("p"))
+            .collect()
+        )
+        assert {r["v"]: r["p"] for r in got} == {v: hash_partition(v, n) for v in range(200)}
 
 
 def test_corpus_stats_match_oracle(built):

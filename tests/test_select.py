@@ -350,6 +350,24 @@ def test_select_multi_section_batches_scoring_and_releases(idx, fields):
     assert n_persistent(spark) == before  # single-section never persisted
 
 
+def test_select_release_keeps_other_live_response_cached(idx, fields):
+    """Two identical multi-section requests plan alike; releasing one
+    must not drop the match set the other still serves its sections
+    from."""
+    from pyspark import StorageLevel
+
+    r1, r2 = (
+        select(idx, Q, fields=fields, facet_fields=("grp",), with_num_found=True, rows=5)
+        for _ in range(2)
+    )
+    page = r2.docs.collect()
+    r1.release()
+    assert r2._cached.storageLevel != StorageLevel.NONE
+    assert r2.docs.collect() == page
+    r2.release()
+    assert r2.docs.storageLevel == StorageLevel.NONE
+
+
 def test_select_boost_collapse_shared_join_edges(idx, fields):
     """The shared stored-field join must preserve the sequential
     semantics at its edges: a doc ABSENT from fields is kept (identity
