@@ -18,5 +18,6 @@ bench-scaling:   ## two-parallelism scaling probe (local[8] vs local[32])
 REF ?= HEAD~1
 WORKLOAD ?= query_mix
 SEEDS ?= 1-6
-ab:              ## interleaved perfbench A/B vs $$REF with a verdict per metric
-	python3 scripts/ab_perfbench.py --ref $(REF) --workload $(WORKLOAD) --seeds $(SEEDS)
+CLAIM ?=
+ab:              ## interleaved perfbench A/B vs $$REF; CLAIM=metric judges a claimed gain
+	python3 scripts/ab_perfbench.py --ref $(REF) --workload $(WORKLOAD) --seeds $(SEEDS) $(if $(CLAIM),--claim $(CLAIM))

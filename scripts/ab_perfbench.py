@@ -25,9 +25,19 @@ for it:
   bound and the two sets of runs overlap, so the pairs cannot tell;
 * ``regressed`` -- otherwise.
 
+``--claim METRIC`` also judges a claimed gain on one metric (an end-to-end
+metric, in its declared direction, or a request kind's p50, lower is
+better):
+
+* ``improved`` -- every run of this tree reads better than every run of
+  the ref, or the median pair ratio is better than 1 by more than the
+  ref's relative interquartile spread;
+* ``not shown`` -- otherwise.
+
 Usage:
     python3 scripts/ab_perfbench.py --ref HEAD~1 --workload query_mix --seeds 1-5
-    make ab REF=HEAD~1 WORKLOAD=query_mix SEEDS=1-6
+    python3 scripts/ab_perfbench.py --ref HEAD~1 --seeds 1-10 --claim op_p50_s
+    make ab REF=HEAD~1 WORKLOAD=query_mix SEEDS=1-6 CLAIM=op_p50_s
 """
 
 from __future__ import annotations
@@ -74,6 +84,13 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
     return {"values": values, "correct": last["correct"], "failed": last["failed"]}
 
 
+def spread(ref: list[float]) -> float:
+    """The ref runs' interquartile range over their median."""
+    q1, _, q3 = statistics.quantiles(ref, n=4) if len(ref) > 1 else (ref[0],) * 3
+    ref_med = statistics.median(ref)
+    return (q3 - q1) / abs(ref_med) if ref_med else 0.0
+
+
 def verdict(ref: list[float], head: list[float], better: str, bound: float) -> str:
     """Judge one end-to-end metric from its paired runs (module docstring)."""
     sign = 1.0 if better == "lower" else -1.0  # sign * value: lower is better
@@ -81,14 +98,21 @@ def verdict(ref: list[float], head: list[float], better: str, bound: float) -> s
     if max(h) < min(r):
         return "no regression"
     ref_med = statistics.median(ref)
-    q1, _, q3 = statistics.quantiles(ref, n=4) if len(ref) > 1 else (ref[0],) * 3
-    spread = (q3 - q1) / abs(ref_med) if ref_med else 0.0
     overlap = max(min(r), min(h)) <= min(max(r), max(h))
-    if spread > bound and overlap:
+    if spread(ref) > bound and overlap:
         return "unresolved"
     worse = ((statistics.median(h) - statistics.median(r)) / abs(ref_med)
              if ref_med else 0.0)
     return "no regression" if worse <= bound else "regressed"
+
+
+def claim(ref: list[float], head: list[float], ratio: float, better: str) -> str:
+    """Judge a claimed gain from its paired runs and their median pair
+    ratio head/ref (module docstring)."""
+    sign = 1.0 if better == "lower" else -1.0
+    if max(sign * v for v in head) < min(sign * v for v in ref):
+        return "improved"
+    return "improved" if sign * (ratio - 1.0) < -spread(ref) else "not shown"
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -105,6 +129,8 @@ def main() -> int:
     ap.add_argument("--seeds", default="1-5", help="'1-5' or '1,3,7'")
     ap.add_argument("--seconds", type=float, default=15)
     ap.add_argument("--out", default=None, help="also write the pairs as JSON here")
+    ap.add_argument("--claim", default=None, metavar="METRIC",
+                    help="judge a claimed gain on this metric (module docstring)")
     args = ap.parse_args()
 
     ref_tree = tempfile.mkdtemp(prefix="ab_perfbench_")
@@ -144,12 +170,28 @@ def main() -> int:
         verdicts[m["name"]] = verdict(ref_v, head_v, m["better"], m["bound"])
         print(f"verdict {args.workload} {m['name']} ({m['better']} is better, "
               f"bound {m['bound']}, {len(pairs)} pairs): {verdicts[m['name']]}")
+    claimed = None
+    if args.claim:
+        if args.claim not in names:
+            raise SystemExit(f"--claim {args.claim}: no such metric in {names}")
+        better = {m["name"]: m["better"] for m in end_to_end}.get(args.claim, "lower")
+        ref_v = [p["ref"]["values"][args.claim] for p in pairs]
+        head_v = [p["head"]["values"][args.claim] for p in pairs]
+        sign = 1.0 if better == "lower" else -1.0
+        wins = sum(sign * h < sign * r for r, h in zip(ref_v, head_v))
+        claimed = {"metric": args.claim, "better": better,
+                   "result": claim(ref_v, head_v, ratios[args.claim], better),
+                   "pairs_head_better": wins, "ref_spread": spread(ref_v)}
+        print(f"claim {args.workload} {args.claim} ({better} is better, median "
+              f"ratio {ratios[args.claim]:.3f}, head better in {wins}/{len(pairs)} "
+              f"pairs, ref spread {claimed['ref_spread']:.3f}): {claimed['result']}")
     summary = {
         "ref": args.ref,
         "workload": args.workload,
         "seconds": args.seconds,
         "median_ratio_head_over_ref": ratios,
         "verdicts": verdicts,
+        "claim": claimed,
         "all_correct": all(p[s]["correct"] for p in pairs for s in ("ref", "head")),
         "pairs": pairs,
     }

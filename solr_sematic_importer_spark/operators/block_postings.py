@@ -26,13 +26,18 @@ Query — block-max WAND at bucket granularity:
     Every block row carries ``max_impact`` (idf-independent BM25 bound).
     A bucket's score upper bound is ``sum_t idf_t * max_t(block
     max_impact)`` — computed entirely JVM-side from block metadata, no
-    decode. Buckets are scored exactly (NumPy dense accumulation over
-    decoded blocks) in descending upper-bound order, and the driver stops
-    as soon as the next bucket's bound is below the current top-k
-    threshold — the WAND skip, applied at the shuffle-friendly
-    granularity. Scores accumulate per term in sorted-term order, the same
-    float order as the exhaustive scorer, so results are bit-identical
-    across parallelism levels AND across the two execution paths.
+    decode. Buckets are scored exactly in descending upper-bound order,
+    and the driver stops as soon as the next bucket's bound is below the
+    current top-k threshold — the WAND skip, applied at the
+    shuffle-friendly granularity. When the loop could not skip a bucket or
+    would not pay for itself, every candidate bucket is scored at once:
+    on the driver, after one Arrow collect of the candidate block rows,
+    when they hold at most ``TASK_POSTINGS`` postings and no deletes are
+    pending; in one Spark scoring job otherwise. Every path scores with
+    ``score_blocks``, which accumulates per term in sorted-term order,
+    the same float order as the exhaustive scorer, so results are
+    bit-identical across parallelism levels AND across the execution
+    paths.
 """
 
 from __future__ import annotations
@@ -42,13 +47,13 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.codec import decode_block
+from ..functions.codec import decode_block_batch
 from ..functions.similarity import (
     B_DEFAULT,
     K1_DEFAULT,
-    LENGTH_TABLE,
     encode_norms,
     idf,
 )
@@ -56,6 +61,11 @@ from .build import InvertedIndex, term_dfs
 from .score import PAGE_SCHEMA, _literal_map, analyze_query, persist_private
 
 DEFAULT_BUCKET_BITS = 14  # 16384-doc buckets: skew bound + pruning unit
+
+# Postings one query-time decode task takes: ``decode_blocks_to_flat``
+# coalesces to one task per this many, and WAND scores a candidate set of
+# at most this many on the driver instead of in a Spark job.
+TASK_POSTINGS = 1 << 20
 
 BLOCKS_SCHEMA = (
     "term string, bucket_id long, block_id int, first_doc long, last_doc long, "
@@ -153,10 +163,11 @@ def decode_blocks_to_flat(
     exact dl join doc_stats on doc_id.
 
     Query-time decodes pass ``postings`` (their terms' df sum): one task
-    per 2^20 postings, no shuffle job. Whole-index readers (``postings_flat``)
-    pass None: a rebalance sizes their tasks to the block bytes, faster than
-    one task per stored partition (sf0.1 in memory, 8 partitions, 4 cores:
-    warm ``tf_per_doc_term`` 0.87-1.12 s vs 1.29-1.71 s without it)."""
+    per ``TASK_POSTINGS`` postings, no shuffle job. Whole-index readers
+    (``postings_flat``) pass None: a rebalance sizes their tasks to the
+    block bytes, faster than one task per stored partition (sf0.1 in
+    memory, 8 partitions, 4 cores: warm ``tf_per_doc_term`` 0.87-1.12 s vs
+    1.29-1.71 s without it)."""
 
     def dec(batches):
         from ..functions.codec import decode_block_batch
@@ -166,7 +177,7 @@ def decode_blocks_to_flat(
                 yield decode_block_batch(b, keys)
 
     cols = blocks.select(*keys, "first_doc", "cnt", "doc_bytes", "tf_bytes", "norm_bytes")
-    cols = cols.hint("rebalance") if postings is None else cols.coalesce(1 + postings // (1 << 20))
+    cols = cols.hint("rebalance") if postings is None else cols.coalesce(1 + postings // TASK_POSTINGS)
     schema = ", ".join(f"{k} string" for k in keys) + ", doc_id long, tf long, dl_quant long"
     return cols.mapInArrow(dec, schema)
 
@@ -195,16 +206,63 @@ def write_blocks(blocks: DataFrame, path: str) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _driver_page(spark, rows) -> DataFrame:
-    """(doc_id, score) pairs -> the page DataFrame. Built from an Arrow
-    table it is a LocalRelation, which collects without a Spark job; a
-    frame built from a Python list is an RDD scan, one job per collect."""
-    import pyarrow as pa
+SCORE_COLUMNS = ("term", "first_doc", "cnt", "doc_bytes", "tf_bytes", "norm_bytes")
 
+
+def score_blocks(
+    rows: "pa.RecordBatch | pa.Table",
+    weights: "dict[str, float]",
+    avgdl: float,
+    k1: float,
+    b: float,
+    k: int,
+    dels: "np.ndarray | None" = None,
+) -> "tuple[np.ndarray, np.ndarray]":
+    """Block rows (``SCORE_COLUMNS``) of the query's terms -> the k best
+    (doc_ids, scores) by (score desc, doc_id asc), deleted docs (``dels``)
+    left out. The one BM25 kernel of every WAND path, driver or task.
+
+    One ``decode_block_batch`` pass over all rows; memory is bounded by
+    the postings, not by the doc-id range: docs are indexed through their
+    unique ids. Partials are added per term in sorted-term order with
+    ``bm25_partial``'s float expression, the exhaustive scorer's fold
+    order, so scores are bit-identical to ``bm25_topk(quantize=True)``."""
+    post = decode_block_batch(rows, keys=())
+    order = sorted(weights)
+    rank = {t: i for i, t in enumerate(order)}
+    term = np.repeat(
+        np.array([rank[t] for t in rows.column("term").to_pylist()], dtype=np.int64),
+        rows.column("cnt").to_numpy().astype(np.int64),
+    )
+    tf = post.column("tf").to_numpy().astype(np.float64)
+    dlq = post.column("dl_quant").to_numpy().astype(np.float64)
+    w = np.array([weights[t] for t in order], dtype=np.float64)[term]
+    part = w * tf / (tf + k1 * (1.0 - b + b * dlq / avgdl))
+    docs, slot = np.unique(post.column("doc_id").to_numpy(), return_inverse=True)
+    scores = np.zeros(docs.size)
+    for i in range(len(order)):
+        on = term == i  # a term posts each doc once
+        scores[slot[on]] += part[on]
+    if dels is not None and len(dels):
+        live = ~np.isin(docs, dels)
+        docs, scores = docs[live], scores[live]
+    top = np.arange(docs.size)
+    if 0 < k < docs.size:
+        # every doc tied with the k-th score, then a stable sort on -score:
+        # docs ascend, so exact ties keep the doc_id-asc tie-break
+        top = np.flatnonzero(scores >= np.partition(scores, docs.size - k)[docs.size - k])
+    top = top[np.argsort(-scores[top], kind="stable")[:k]]
+    return docs[top], scores[top]
+
+
+def _driver_page(spark, docs=(), scores=()) -> DataFrame:
+    """The page DataFrame of (doc_id, score). Built from an Arrow table it
+    is a LocalRelation, which collects without a Spark job; a frame built
+    from a Python list is an RDD scan, one job per collect."""
     return spark.createDataFrame(
         pa.table({
-            "doc_id": pa.array([int(d) for d, _ in rows], pa.int64()),
-            "score": pa.array([float(s) for _, s in rows], pa.float64()),
+            "doc_id": pa.array(docs, pa.int64()),
+            "score": pa.array(scores, pa.float64()),
         }),
         PAGE_SCHEMA,
     )
@@ -249,7 +307,7 @@ def bm25_topk_wand(
         )
     terms = analyze_query(query, index.profile)
     if k == 0 or not terms or index.n_docs == 0:
-        return _driver_page(spark, [])
+        return _driver_page(spark)
 
     counts = Counter(terms)
     # index-level df memo (the analog of Lucene's cached term dictionary):
@@ -262,12 +320,10 @@ def bm25_topk_wand(
         if t in dfs
     }
     if not weights:
-        return _driver_page(spark, [])
+        return _driver_page(spark)
     avgdl = index.avgdl
 
     cand = blocks.filter(F.col("term").isin(list(weights)))
-
-    sorted_terms = sorted(weights)
 
     # Deletion vector kept BUCKETED, never collected to the driver: group
     # deletes by bucket_id (same doc_id >> bucket_bits cut as the blocks)
@@ -307,76 +363,47 @@ def bm25_topk_wand(
     def score_bucket(grp: pd.DataFrame) -> pd.DataFrame:
         # applyInPandas: ONE complete bucket per call (a mapInPandas batch
         # could split a bucket and emit wrong partial sums).
-        lo, hi = None, None
-        per_term = {}
-        for term, tg in grp.groupby("term"):
-            tg = tg.sort_values("block_id")
-            docs_l, tfs_l, norms_l = [], [], []
-            for r in tg.itertuples():  # loop over BLOCKS, not postings
-                d, t, nb = decode_block(
-                    r.first_doc, r.doc_bytes, r.tf_bytes, r.norm_bytes
-                )
-                docs_l.append(d)
-                tfs_l.append(t)
-                norms_l.append(nb)
-            docs = np.concatenate(docs_l)
-            tfs = np.concatenate(tfs_l).astype(np.float64)
-            dlq = LENGTH_TABLE[np.concatenate(norms_l)].astype(np.float64)
-            per_term[term] = (docs, tfs, dlq)
-            lo = docs.min() if lo is None else min(lo, docs.min())
-            hi = docs.max() if hi is None else max(hi, docs.max())
-        scores = np.zeros(int(hi - lo + 1))
-        # dense accumulation in sorted-term order == the exhaustive
-        # scorer's fold order -> bit-identical floats.
-        for t in sorted_terms:
-            if t not in per_term:
-                continue
-            docs, tfs, dlq = per_term[t]
-            scores[docs - lo] += weights[t] * tfs / (
-                tfs + k1 * (1.0 - b + b * dlq / avgdl)
-            )
-        if has_deletes:
-            dels = grp["_dels"].iloc[0]
-            # null array (bucket with no deletes) arrives as None or NaN
-            if isinstance(dels, (list, tuple, np.ndarray)) and len(dels):
-                da = np.asarray(dels, dtype=np.int64)
-                hit = da[np.searchsorted(da, lo): np.searchsorted(da, hi, side="right")]
-                if hit.size:
-                    scores[hit - lo] = 0.0
-        nz = np.flatnonzero(scores)
-        if nz.size > k:
-            # deterministic per-bucket cut: (score desc, doc_id asc).
-            # argpartition alone is arbitrary among EXACT score ties
-            # (identical docs tie bit-for-bit), and the survivor set then
-            # diverges from the exhaustive scorer's doc_id tie-break.
-            # nz is ascending, so a stable sort on -score preserves the
-            # doc_id order within each tied score group.
-            nz = nz[np.argsort(-scores[nz], kind="stable")[:k]]
-        return pd.DataFrame({"doc_id": nz + lo, "score": scores[nz]})
+        dels = grp["_dels"].iloc[0] if has_deletes else None
+        # null array (bucket with no deletes) arrives as None or NaN
+        if not isinstance(dels, (list, tuple, np.ndarray)):
+            dels = None
+        docs, scores = score_blocks(
+            pa.RecordBatch.from_pandas(grp[list(SCORE_COLUMNS)], preserve_index=False),
+            weights, avgdl, k1, b, k, dels,
+        )
+        return pd.DataFrame({"doc_id": docs, "score": scores})
 
-    # One scoring job for every candidate bucket whenever the UB loop
-    # below could not skip one, or would not pay for itself:
+    # Every candidate bucket is scored at once whenever the UB loop below
+    # could not skip one, or would not pay for itself:
     # - the index's doc-id range spans at most bucket_batch buckets: the
     #   loop's first round (theta = -inf) would take every candidate bucket
     #   and its second would find none, so both paths score the same
     #   buckets with the same kernel and return the same page;
     # - the candidate posting count (known exactly from df) is small, so
     #   ordering buckets by bound costs more than scoring them all.
-    # A warm, df-memoized request here runs 2 Spark jobs (the bucket
-    # shuffle's map stage and the scoring stage); the page is driver-local.
+    # Up to one decode task's worth of postings and no pending deletes, a
+    # warm, df-memoized request runs ONE Spark job, a JVM-only Arrow
+    # collect of the candidate block rows, and scores them on the driver:
+    # a Python scoring stage costs more than the work it would do. Larger
+    # or delete-bearing sets run 2 jobs, the bucket shuffle's map stage and
+    # the scoring stage. Either way the page is driver-local.
+    postings = sum(dfs[t] for t in weights)
     span = _bucket_span(index)
     if fast_path and (
         (span is not None and span <= bucket_batch)
-        or sum(dfs[t] for t in weights) <= 64 * k * max(1, len(weights)) * 32
+        or postings <= 64 * k * max(1, len(weights)) * 32
     ):
+        if not has_deletes and postings <= TASK_POSTINGS:
+            rows = cand.select(*SCORE_COLUMNS).toArrow()
+            return _driver_page(spark, *score_blocks(rows, weights, avgdl, k1, b, k))
         scored_df = cand.groupBy("bucket_id").applyInPandas(
             lambda _key, g: score_bucket(g), PAGE_SCHEMA
         )
-        rows = sorted(
+        top = sorted(
             ((float(r["score"]), int(r["doc_id"])) for r in scored_df.collect()),
             key=lambda x: (-x[0], x[1]),
         )[:k]
-        return _driver_page(spark, [(d, s) for s, d in rows])
+        return _driver_page(spark, [d for _, d in top], [s for s, _ in top])
 
     cand = persist_private(cand)
     # JVM-side bucket upper bounds from block metadata only (no decode).
@@ -450,5 +477,5 @@ def bm25_topk_wand(
     ub_df.unpersist()
     cand.unpersist()
 
-    result = sorted(((s, -nd) for s, nd in heap), key=lambda x: (-x[0], x[1]))
-    return _driver_page(spark, [(d, s) for s, d in result])
+    top = sorted(((s, -nd) for s, nd in heap), key=lambda x: (-x[0], x[1]))
+    return _driver_page(spark, [d for _, d in top], [s for s, _ in top])

@@ -1,6 +1,7 @@
 """WAND as the page-only ``/select`` scorer: the one-job cost rule, the
-doc-id range metadata it reads, the request routing, and the warm job
-floor (a warm top-k request runs at most 2 Spark jobs)."""
+doc-id range metadata it reads, the request routing, its three execution
+paths (driver, task, UB loop) and the warm job floor (a warm top-k request
+on a delete-free index runs 1 Spark job, with no Python stage)."""
 
 import copy
 import itertools
@@ -8,7 +9,7 @@ import itertools
 import pytest
 from pyspark.sql import functions as F
 
-from solr_sematic_importer_spark.operators import select as select_mod
+from solr_sematic_importer_spark.operators import block_postings, select as select_mod
 from solr_sematic_importer_spark.operators.block_postings import (
     _bucket_span,
     bm25_topk_wand,
@@ -36,6 +37,8 @@ N_DOCS = 3000
 # (64*1*32 = 2048): only the doc-id span rule sends it down the one-job path
 HEAD_Q = "hot"
 QUERIES = [HEAD_Q, "hot tied", "tied tied filler3", "filler1 filler5 hot", "nosuchterm"]
+# for the synthetic-transcript indexes: a rare pair, stopwords, a duplicate
+TRANSCRIPT_QUERIES = ["zeppelin quartz", "the you one word", "the the you"]
 _groups = itertools.count()
 
 
@@ -66,6 +69,22 @@ def _jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.fixture
+def arrow_collects(spark, monkeypatch):
+    """The plans of every ``DataFrame.toArrow`` collect: WAND's driver path
+    runs exactly one per request, the task path and the UB loop none."""
+    cls = type(spark.range(1))
+    real = cls.toArrow
+    plans = []
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self)
+
+    monkeypatch.setattr(cls, "toArrow", spy)
+    return plans
 
 
 @pytest.fixture(scope="module")
@@ -111,21 +130,57 @@ def test_wand_k_zero_is_empty_and_negative_k_raises(small, fast_path):
 # -- the one-job rule --------------------------------------------------------
 
 
-def test_one_job_path_identical_to_ub_loop(small):
-    """Span <= bucket_batch: the default (one-job) path equals the UB loop
-    and the exhaustive scorer bit for bit — exact ties at the k-th score
-    and duplicate query terms included."""
-    assert _bucket_span(small) == 3
-    for q in QUERIES:
+def _paths_equal_exhaustive(idx, queries, monkeypatch, arrow_collects):
+    for q in queries:
         for k in (1, 5, 13):
-            want = _exhaustive(small, q, k)
-            assert _rows(bm25_topk_wand(small, q, k=k)) == want, (q, k)
-            assert _rows(bm25_topk_wand(small, q, k=k, fast_path=False)) == want, (q, k)
+            want = _exhaustive(idx, q, k)
+            n = len(arrow_collects)
+            assert _rows(bm25_topk_wand(idx, q, k=k)) == want, (q, k)
+            assert len(arrow_collects) == n + (1 if want else 0), (q, k)
+            with monkeypatch.context() as m:  # no budget: the task path
+                m.setattr(block_postings, "TASK_POSTINGS", 0)
+                assert _rows(bm25_topk_wand(idx, q, k=k)) == want, (q, k)
+            assert _rows(bm25_topk_wand(idx, q, k=k, fast_path=False)) == want, (q, k)
+            assert len(arrow_collects) == n + (1 if want else 0), (q, k)
+
+
+def test_one_job_path_identical_to_ub_loop(small, monkeypatch, arrow_collects):
+    """Span <= bucket_batch: the default one-job path, on the driver and
+    (budget forced to 0) as a Spark task, equals the UB loop and the
+    exhaustive scorer bit for bit — exact ties at the k-th score and
+    duplicate query terms included."""
+    assert _bucket_span(small) == 3
+    _paths_equal_exhaustive(small, QUERIES, monkeypatch, arrow_collects)
+    for q in QUERIES:
         loop1 = bm25_topk_wand(small, q, k=5, fast_path=False, bucket_batch=1)
         assert _rows(loop1) == _exhaustive(small, q, 5), q
 
 
-def test_one_job_path_identical_with_deletes(spark, tmp_path):
+@pytest.mark.parametrize("which", ["written", "segmented"])
+def test_every_path_identical_on_transcripts(request, which, monkeypatch, arrow_collects):
+    idx = request.getfixturevalue(which)
+    idx = idx[0] if isinstance(idx, tuple) else idx
+    _paths_equal_exhaustive(idx, TRANSCRIPT_QUERIES, monkeypatch, arrow_collects)
+
+
+def test_driver_path_memory_is_bounded_by_postings(spark, tmp_path, arrow_collects):
+    """Two docs 2**40 ids apart: a dense doc-id range array would need
+    8 TB, but the driver path indexes through the candidate docs."""
+    far = 1 << 40
+    df = spark.createDataFrame([(0, "alpha beta"), (far, "alpha alpha")],
+                               "doc_id long, text string")
+    idx = build_and_write_index(df, str(tmp_path / "idx"), key_cols=(),
+                                profile="simple", doc_id_col="doc_id", bucket_bits=10)
+    assert (idx.min_doc_id, idx.max_doc_id) == (0, far)
+    for q in ("alpha beta", "alpha", "beta beta"):
+        got = _rows(bm25_topk_wand(idx, q, k=2))
+        assert got == _exhaustive(idx, q, 2), q
+    assert [d for d, _ in _rows(bm25_topk_wand(idx, "alpha", k=2))] == [far, 0]
+    assert len(arrow_collects) == 4
+    idx.release()
+
+
+def test_one_job_path_identical_with_deletes(spark, tmp_path, arrow_collects):
     df = spark.createDataFrame(_texts(N_DOCS), "doc_id long, text string")
     idx = build_and_write_index(df, str(tmp_path / "idx"), key_cols=(),
                                 profile="simple", doc_id_col="doc_id", bucket_bits=10)
@@ -138,19 +193,24 @@ def test_one_job_path_identical_with_deletes(spark, tmp_path):
             assert _rows(bm25_topk_wand(idx, q, k=k)) == want, (q, k)
             assert _rows(bm25_topk_wand(idx, q, k=k, fast_path=False)) == want, (q, k)
     assert all(d % 21 and d >= 40 for d, _ in _rows(bm25_topk_wand(idx, HEAD_Q, k=50)))
+    assert arrow_collects == []  # pending deletes: the task path, never the driver
     idx.release()
 
 
-def test_warm_wand_and_page_only_select_run_at_most_two_jobs(spark, small, written):
+def test_warm_wand_and_page_only_select_run_one_job(spark, small, written, arrow_collects):
     for idx, q in ((small, HEAD_Q), (written[0], "the to and")):
         # small: df over budget, so only the span rule gives one job
         bm25_topk_wand(idx, q, k=1).collect()  # memoizes df
         n_wand, wand = _jobs(spark, lambda: _rows(bm25_topk_wand(idx, q, k=1)))
         n_sel, page = _jobs(spark, lambda: _rows(select(idx, q, rows=1).docs))
         n_loop, loop = _jobs(spark, lambda: _rows(bm25_topk_wand(idx, q, k=1, fast_path=False)))
-        assert n_wand <= 2 and n_sel <= 2, (n_wand, n_sel)
+        assert n_wand == n_sel == 1, (n_wand, n_sel)
         assert n_loop > 2  # the UB loop this request used to take
         assert wand == page == loop
+    # that one job is the candidate blocks' Arrow collect: no Python stage
+    assert len(arrow_collects) == 6
+    for plan in arrow_collects:
+        assert not any(op in plan for op in ("Python", "Pandas", "MapInArrow")), plan
 
 
 LEAF_Q = "state of the art window"
